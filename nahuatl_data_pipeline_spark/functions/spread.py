@@ -18,13 +18,28 @@ stage below it before the RDD's partition count exists, i.e. the probe
 silently runs the upstream job.  :func:`spread_narrow` therefore never
 probes such a frame: exchange-bearing inputs pass through untouched
 (they are already cluster-wide, or deliberately laid out), and the
-probe runs only where it is job-free
+probe runs only behind shuffle-free plans, where it is job-free unless
+the plan holds a broadcast (below)
 (tests/test_plans.py::test_spread_narrow_contract asserts both).
+
+A broadcast is not a shuffle: a scan joined to a broadcast side keeps
+the scan's few splits, so it is probed and spread like a bare scan.
+Its probe is not job-free: building the RDD builds the broadcast, one
+job over the small side. That side is shuffle-free, since a shuffle
+under it would make the frame shuffle-bearing and unprobed. When the
+frame is spread, the ``repartition`` plan is a new query that builds
+the broadcast again, so such an input pays for its small side twice.
 """
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
+
+# a shuffle node prints as "Exchange <partitioning>"; BroadcastExchange
+# and ReusedExchange are other nodes and must not match
+_SHUFFLE_EXCHANGE = re.compile(r"(?<![A-Za-z])Exchange\b")
 
 
 def _plan_has_exchange(df: DataFrame) -> bool:
@@ -35,21 +50,23 @@ def _plan_has_exchange(df: DataFrame) -> bool:
     initial plan's Exchange nodes before any stage is materialized.
     """
     plan = df._jdf.queryExecution().executedPlan().toString()
-    return "Exchange" in plan
+    return _SHUFFLE_EXCHANGE.search(plan) is not None
 
 
 def spread_narrow(df: DataFrame) -> DataFrame:
     """Round-robin ``df`` to defaultParallelism partitions when it is an
     exchange-free narrow frame with fewer; no-op otherwise.
 
-    Exchange-bearing inputs (a join/aggregate output, an explicit
+    Shuffle-bearing inputs (a join/aggregate output, an explicit
     ``repartition``) are returned UNCHANGED without probing: their
     partition count is only known after AQE materializes the shuffle
     stages below, so the probe itself would silently run the upstream
     job — the q66 post-join trap from r13 — and a post-shuffle frame is
     already spread across the cluster (or deliberately laid out by the
     caller), so the heuristic has nothing to buy there anyway. The
-    probe therefore runs ONLY behind plans where it is pure metadata.
+    probe therefore runs ONLY behind shuffle-free plans: pure metadata
+    behind a scan/projection/filter, one broadcast-build job behind a
+    broadcast join (see the module docstring).
     """
     if _plan_has_exchange(df):
         return df

@@ -22,14 +22,98 @@ formulation (Kiveris et al., "Connected Components in MapReduce and
 Beyond", SOCC'14), which converges in O(log n) rounds at the cost of a
 more complex per-round plan.
 
+Small graphs skip the rounds: :func:`connected_components` probes the
+symmetrized edge list with one bounded ``limit(DRIVER_MAX_EDGES + 1)``
+collect, and a graph at or under :data:`DRIVER_MAX_EDGES` is labeled on
+the driver by a union-find that keeps the same min-id labels, returned
+as a local DataFrame. The dedup graphs of a curation run are small
+(hundreds of verified pairs per few thousand docs), so this replaces
+~20 one-to-five-task round and checkpoint jobs with the edge-list
+checkpoint and one probe job. Above the bound the distributed
+propagation / star path runs unchanged; the probe is its only extra
+work.
+
+The bound was measured on a 4-vCPU host (local[4], warm JVM): graphs
+of disjoint 2-4-vertex cliques behind a shuffle, the whole call plus
+one count of the labels, middle two of four runs per cell:
+
+    symmetrized edges   driver path    distributed path (2 rounds)
+                  526   0.46-0.52 s    0.95-1.02 s
+               10,000   0.49-0.51 s    0.92-0.93 s
+               50,000   0.58-0.62 s    0.89-0.91 s
+              100,000   1.03-1.05 s    1.23-1.30 s
+              200,000   1.54-1.60 s    1.45-1.48 s
+
+The driver path grows with the edge count (collect, union-find, Arrow
+table) while the rounds are mostly fixed cost, and graphs with longer
+paths only add rounds. ``DRIVER_MAX_EDGES`` = 50,000 sits at about a
+third of the crossover, where the collected rows are a few MB of
+driver memory.
+
+Not measured end to end: no benchmark workload has a pair graph above
+the bound (the near-dup curation graph is a few hundred edges per few
+thousand docs), so the distributed side and its extra probe cost
+(collecting DRIVER_MAX_EDGES + 1 rows that are then dropped) are
+covered only by the unit tests that force that path.
+
 Fully deterministic: labels are vertex-id minima, independent of
 partitioning and iteration interleave.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# symmetrized edge rows labeled on the driver (measured: module docstring)
+DRIVER_MAX_EDGES = 50_000
+
+
+def _label_on_driver(spark: SparkSession, sym: list) -> DataFrame:
+    """Union-find over collected ``(s, d)`` rows of a symmetrized edge
+    list: the same ``(id, comp)`` rows the propagation rounds produce.
+
+    Roots are always the smaller id of a merge, so every root is its
+    component's minimum id. A NULL endpoint links nothing but is still
+    one row, labeled as the rounds label it: their join on the source
+    id pushes labels INTO a NULL vertex and never out of it, so its
+    label is the smallest label among its non-NULL neighbours (NULL
+    when it has none)."""
+    parent: dict[int, int] = {}
+
+    def find(v: int) -> int:
+        root = v
+        while parent[root] != root:
+            root = parent[root]
+        while parent[v] != root:  # path compression
+            parent[v], v = root, parent[v]
+        return root
+
+    has_null = False
+    null_nbrs = []
+    for s, d in sym:
+        if s is None:
+            has_null = True
+            continue
+        parent.setdefault(s, s)
+        if d is None:
+            null_nbrs.append(s)
+            continue
+        parent.setdefault(d, d)
+        rs, rd = find(s), find(d)
+        if rs != rd:
+            parent[max(rs, rd)] = min(rs, rd)
+    ids = list(parent)
+    comps = [find(v) for v in ids]
+    if has_null:
+        ids.append(None)
+        comps.append(min((find(v) for v in null_nbrs), default=None))
+    # an Arrow table becomes a LocalRelation: statistics known at plan
+    # time (a downstream join can broadcast it) and no parallelize job
+    return spark.createDataFrame(
+        pa.table({"id": pa.array(ids, pa.int64()), "comp": pa.array(comps, pa.int64())})
+    )
 
 
 def connected_components(
@@ -57,6 +141,14 @@ def connected_components(
     no failed job. With ``star_fallback=False`` it raises
     ``ValueError`` instead — a truncated labeling would silently split
     clusters, which for dedup means shipping duplicates.
+
+    A symmetrized edge list of at most :data:`DRIVER_MAX_EDGES` rows is
+    labeled on the driver instead (see the module docstring): same rows,
+    same ``(id, comp)`` schema, no propagation rounds. Both paths
+    compute, for every vertex, the minimum id of its connected component
+    in the same symmetrized edge set (a NULL endpoint is labeled as the
+    rounds label it, see ``_label_on_driver``), so their outputs are
+    identical.
     """
     sym = edges.select(
         F.col(src).cast("long").alias("s"), F.col(dst).cast("long").alias("d")
@@ -71,6 +163,11 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
+    # bounded probe over the checkpoint: at most DRIVER_MAX_EDGES + 1
+    # rows ever reach the driver, and the graph is not recomputed
+    head = sym.limit(DRIVER_MAX_EDGES + 1).collect()
+    if len(head) <= DRIVER_MAX_EDGES:
+        return _label_on_driver(sym.sparkSession, head)
 
     labels = (
         sym.select(F.col("s").alias("id"))

@@ -87,8 +87,8 @@ def _spread(df: DataFrame) -> DataFrame:
     would run every Counter on one core. The exchange carries only
     (hyp, ref) once; a no-op whenever the input already has >=
     defaultParallelism partitions. Sums are commutative longs, so the
-    result is unchanged. Raises on a non-raw-scan input (spread_narrow's
-    exchange-free contract, r13 verdict #3)."""
+    result is unchanged. A shuffle-bearing input passes through
+    unchanged (spread_narrow never probes it, r13 verdict #3)."""
     return spread_narrow(df)
 
 

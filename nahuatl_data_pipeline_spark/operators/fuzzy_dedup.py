@@ -257,7 +257,7 @@ def _signature_bands(
     # the input already has >= defaultParallelism partitions (the
     # similarity.py cosine-pairs pattern). Everything downstream is
     # content-keyed, so the result is partition-independent by design.
-    # (spread_narrow never probes an exchange-bearing input — it passes
+    # (spread_narrow never probes a shuffle-bearing input — it passes
     # through rather than silently materializing AQE stages.)
     df = spread_narrow(df)
     shd = df.select(

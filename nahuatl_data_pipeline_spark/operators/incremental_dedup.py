@@ -152,8 +152,9 @@ def dedup_against_snapshot(
     # exchange buys full parallelism for every downstream leg; a no-op
     # whenever the batch already has >= defaultParallelism partitions
     # (the similarity.py cosine-pairs pattern). spread_narrow probes the
-    # RAW batch's split count and raises on an exchange-bearing input —
-    # probing a post-join frame would materialize its AQE stages.
+    # RAW batch's split count and passes a shuffle-bearing input through
+    # unprobed — probing a post-join frame would materialize its AQE
+    # stages.
     new = spread_narrow(new)
     release_fuzzy_caches()  # BEFORE persisting (fuzzy_dedup ordering
     # contract: unpersisting an identical canonical plan AFTER creating

@@ -126,9 +126,10 @@ def cosine_cols(a, b, dim: int | None = None) -> F.Column:
     construction: the unrolled form performs EXACTLY the fold's
     operation sequence — cast each element to double, left-to-right
     ``(0.0 + x₀·y₀) + x₁·y₁ …`` for the dot and both norms, then
-    ``dot / (na · nb)`` — and ``try_element_at`` yields NULL past the
-    end exactly like ``zip_with``'s null padding, so any row violating
-    the declared dim surfaces as NULL rather than a wrong number.
+    ``dot / (na · nb)``. A row whose arrays are not both exactly ``dim``
+    long (shorter, longer or NULL) yields NULL rather than a wrong
+    number: the expression is guarded by ``size(a) = dim AND size(b) =
+    dim``.
     ``a``/``b`` must be column NAMES when ``dim`` is set."""
     if dim is not None:
         return _cosine_fixed_dim(a, b, dim)
@@ -160,7 +161,16 @@ def _cosine_fixed_dim(a: str, b: str, dim: int) -> F.Column:
     dot = fold([f"({x} * {y})" for x, y in zip(ax, bx)])
     na = f"SQRT({fold([f'({x} * {x})' for x in ax])})"
     nb = f"SQRT({fold([f'({y} * {y})' for y in bx])})"
-    return F.expr(f"({dot} / ({na} * {nb}))")
+    # try_element_at alone would read only the first `dim` elements of
+    # an over-length array and return a wrong non-NULL cosine. The guard
+    # is an exact ×1.0 / ×NULL factor, not a CASE around the sums: inside
+    # a CASE branch the shared element reads escape subexpression
+    # elimination and each is evaluated twice (q24/q120/q139 ran 1.5-2×
+    # slower that way at sf0.01)
+    return F.expr(
+        f"(({dot} / ({na} * {nb})) * IF(size({a}) = {dim} AND size({b}) = {dim}, "
+        f"CAST(1.0 AS DOUBLE), CAST(NULL AS DOUBLE)))"
+    )
 
 
 def cosine_topk(

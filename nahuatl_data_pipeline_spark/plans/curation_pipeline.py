@@ -21,14 +21,19 @@ Every gate is attached as a BOOLEAN FLAG first and the corpus is
 filtered once at the end, so per-rule drop accounting rides the write
 job's single pass through an ``Observation`` (conditional counts) —
 no per-stage count() re-scans, the same discipline as
-``pipeline.run_corpus_pipeline``. The only internal actions are the
-connected-components rounds inside cluster dedup (documented there).
+``pipeline.run_corpus_pipeline``. The internal actions are the eager
+cache counts of banded candidate generation
+(``fuzzy_dedup.banded_candidate_pairs``) and, inside cluster dedup, the
+pair-graph checkpoint plus one bounded probe; only a graph above
+``components.DRIVER_MAX_EDGES`` edges adds propagation rounds
+(documented there).
 
 Scale shape: PII + C4 are codegen projections (no shuffle); repetition
 adds two doc-keyed partial-agg groupBys; dedup is the banded bucket
-join + min-label propagation; decontamination broadcasts the (tiny)
-eval shingle set. Nothing collects to the driver except the final stats
-row.
+join + component labeling (a driver-side union-find for a small pair
+graph, min-label propagation above the bound); decontamination
+broadcasts the (tiny) eval shingle set. Nothing collects to the driver
+except the final stats row and a small pair graph's edges.
 """
 
 from __future__ import annotations

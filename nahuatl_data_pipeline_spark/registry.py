@@ -165,6 +165,12 @@ _RECERTIFY_IF_BEFORE: dict[str, int] = {
     # re-certify rather than argue.
     "q171_psl_domain_stats": 14,
     "q174_url_head_psl_survivors": 14,
+    # r15: the fixed-dim cosine (cosine_cols(dim=)) is guarded by
+    # size(a) = dim AND size(b) = dim, so an over-length array yields
+    # NULL instead of a cosine of its first dim elements
+    "q24_cosine_topk": 15,
+    "q120_hard_negatives": 15,
+    "q139_margin_topk": 15,
 }
 
 

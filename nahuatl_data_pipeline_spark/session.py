@@ -44,6 +44,8 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # let AQE coalesce cached plans too, else every cache keeps 256 partitions
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # Shuffles START wide and AQE coalesces them down when small:
         # per-task aggregation state is bounded by input/initialN, so a
         # 100x corpus cannot blow a hash-aggregate's memory just because

@@ -1,8 +1,11 @@
 """Connected-components clustering over near-dup pair graphs."""
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
+from nahuatl_data_pipeline_spark.operators import components
 from nahuatl_data_pipeline_spark.operators.components import (
     connected_components,
     duplicate_clusters,
@@ -13,54 +16,137 @@ def _edges(spark, pairs):
     return spark.createDataFrame(pairs, "id_a long, id_b long")
 
 
-def test_chain_bridges_into_one_component(spark):
+def _force_distributed(monkeypatch, bound=0):
+    """Every non-empty graph takes the propagation / star path, however
+    small; ``bound=-1`` sends the empty graph there too."""
+    monkeypatch.setattr(components, "DRIVER_MAX_EDGES", bound)
+
+
+def _both_paths(monkeypatch, edges):
+    """Rows of ``connected_components(edges)`` on the driver path, after
+    checking that the distributed path returns the same multiset of
+    rows; each call must really take the path it is named for."""
+    def run():
+        out = connected_components(edges)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert out.dtypes == [("id", "bigint"), ("comp", "bigint")]
+        return [tuple(r) for r in out.collect()], "LocalTableScan" in plan
+
+    driver, local = run()
+    assert local, "small graph did not take the driver path"
+    with monkeypatch.context() as m:
+        _force_distributed(m, bound=-1)
+        dist, local = run()
+    assert not local, "bound -1 did not force the distributed path"
+    assert Counter(driver) == Counter(dist)
+    return driver
+
+
+def test_chain_bridges_into_one_component(spark, monkeypatch):
     """A-B, B-C, C-D with no direct A-C/A-D/B-D edges: transitivity must
     still put all four in component A — the case pairwise dedup gets
     wrong."""
-    comp = connected_components(_edges(spark, [(1, 2), (2, 3), (3, 4)]))
-    rows = {r["id"]: r["comp"] for r in comp.collect()}
+    rows = dict(_both_paths(monkeypatch, _edges(spark, [(1, 2), (2, 3), (3, 4)])))
     assert rows == {1: 1, 2: 1, 3: 1, 4: 1}
 
 
-def test_separate_cliques_stay_separate(spark):
-    comp = connected_components(
-        _edges(spark, [(1, 2), (2, 1), (10, 11), (11, 12), (10, 12)])
+def test_separate_cliques_stay_separate(spark, monkeypatch):
+    rows = dict(
+        _both_paths(
+            monkeypatch, _edges(spark, [(1, 2), (2, 1), (10, 11), (11, 12), (10, 12)])
+        )
     )
-    rows = {r["id"]: r["comp"] for r in comp.collect()}
     assert rows == {1: 1, 2: 1, 10: 10, 11: 10, 12: 10}
 
 
-def test_empty_edges_empty_result(spark):
-    comp = connected_components(_edges(spark, []))
-    assert comp.count() == 0
-    assert comp.columns == ["id", "comp"]
+def test_empty_edges_empty_result(spark, monkeypatch):
+    assert _both_paths(monkeypatch, _edges(spark, [])) == []
 
 
-def test_partition_independence(spark):
+def test_partition_independence(spark, monkeypatch):
     e = _edges(spark, [(5, 3), (3, 9), (9, 7), (20, 21)])
-    a = sorted(map(tuple, connected_components(e).collect()))
-    b = sorted(map(tuple, connected_components(e.repartition(7)).collect()))
+    a = sorted(_both_paths(monkeypatch, e))
+    b = sorted(_both_paths(monkeypatch, e.repartition(7)))
     assert a == b == [(3, 3), (5, 3), (7, 3), (9, 3), (20, 20), (21, 20)]
 
 
-def test_nonconvergence_raises_not_truncates(spark):
+@pytest.mark.parametrize(
+    "pairs, expected",
+    [
+        pytest.param(
+            [(6, 5), (5, 6), (5, 6), (6, 7), (6, 7)],
+            {5: 5, 6: 5, 7: 5},
+            id="duplicate-edges",
+        ),
+        pytest.param(
+            [(9, 9), (3, 1)], {9: 9, 1: 1, 3: 1}, id="self-loop-only-vertex"
+        ),
+        pytest.param(
+            # the rounds push labels into a NULL vertex, never out
+            [(1, None), (None, 2), (2, 3), (None, None)],
+            {1: 1, 2: 2, 3: 2, None: 1},
+            id="null-endpoints",
+        ),
+        pytest.param(
+            [(None, None), (4, 5)], {4: 4, 5: 4, None: None}, id="null-loop"
+        ),
+    ],
+)
+def test_both_paths_label_edge_cases(spark, monkeypatch, pairs, expected):
+    rows = _both_paths(monkeypatch, _edges(spark, pairs))
+    assert len(rows) == len(expected) and dict(rows) == expected
+
+
+def test_both_paths_agree_on_random_graph(spark, monkeypatch):
+    """Seeded sparse graph over 60 ids with repeats, self-loops and a
+    few NULL endpoints: longer paths than the named shapes above."""
+    import random
+
+    rng = random.Random(11)
+    ids = list(range(60)) + [None]
+    pairs = [(rng.choice(ids), rng.choice(ids)) for _ in range(70)]
+    _both_paths(monkeypatch, _edges(spark, pairs))
+
+
+def test_graph_above_bound_takes_distributed_path(spark, monkeypatch):
+    """One edge over the bound: the rounds run, with the same labels."""
+    monkeypatch.setattr(components, "DRIVER_MAX_EDGES", 5)
+    out = connected_components(_edges(spark, [(1, 2), (2, 3), (3, 4)]))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" not in plan
+    assert {r["id"]: r["comp"] for r in out.collect()} == {1: 1, 2: 1, 3: 1, 4: 1}
+
+
+def test_nonconvergence_raises_not_truncates(spark, monkeypatch):
     """With the star fallback disabled, a path graph longer than
     max_iter rounds must raise, never return a silently split
     labeling."""
+    _force_distributed(monkeypatch)
     path = _edges(spark, [(i, i + 1) for i in range(6)])
     with pytest.raises(ValueError, match="did not converge"):
         connected_components(path, max_iter=2, star_fallback=False)
 
 
-def test_budget_overrun_falls_back_to_star(spark):
+def test_budget_overrun_falls_back_to_star(spark, monkeypatch):
     """Default behavior on a planted chain that exceeds the propagation
     budget: the call silently completes via star contraction with the
     exact same labeling the converged propagation would produce."""
+    _force_distributed(monkeypatch)
     chain = [(i, i + 1) for i in range(60)]
     comp = connected_components(_edges(spark, chain), max_iter=3)
     assert comp.columns == ["id", "comp"]
     rows = {r["id"]: r["comp"] for r in comp.collect()}
     assert rows == {i: 0 for i in range(61)}
+
+
+def test_budget_overrun_keeps_self_loop_only_vertex(spark, monkeypatch):
+    """The star fallback drops self-loops on entry; a vertex seen only
+    as (x, x) must still come back as its own singleton component."""
+    _force_distributed(monkeypatch)
+    edges = _edges(spark, [(i, i + 1) for i in range(10)] + [(99, 99)])
+    comp = connected_components(edges, max_iter=1)
+    rows = {r["id"]: r["comp"] for r in comp.collect()}
+    assert rows == {**{i: 0 for i in range(11)}, 99: 99}
 
 
 def test_duplicate_clusters_canonical_flag(spark):
@@ -109,7 +195,8 @@ def _plain_labels(spark, edges, max_iter=15, star_fallback=True):
     }
 
 
-def test_star_matches_plain_on_mixed_graph(spark):
+def test_star_matches_plain_on_mixed_graph(spark, monkeypatch):
+    _force_distributed(monkeypatch)
     edges = (
         [(1, 2), (2, 3), (3, 1)]          # triangle
         + [(10, 11), (11, 12)]            # path
@@ -120,11 +207,13 @@ def test_star_matches_plain_on_mixed_graph(spark):
     assert _star_labels(spark, edges) == _plain_labels(spark, edges)
 
 
-def test_star_handles_long_chain_plain_cannot(spark):
+def test_star_handles_long_chain_plain_cannot(spark, monkeypatch):
     """A 120-node path has diameter 119: plain propagation would need
     ~120 rounds (it raises at max_iter=15); star contraction converges
     in O(log n) rounds and labels the whole chain with its min id."""
     import pytest
+
+    _force_distributed(monkeypatch)
 
     chain = [(i, i + 1) for i in range(120)]
     with pytest.raises(ValueError, match="did not converge"):

@@ -240,3 +240,46 @@ def test_substring_stage_keeps_untouched_docs_byte_identical(spark, tmp_path):
     assert stats["substring_tokens_removed"] == 7
     assert kept[3] == messy  # byte-identical: \n, \t, double space kept
     assert "\n" in kept[3] and "  " in kept[3]
+
+
+# Measured on a 4-vCPU host for the op below: 32 jobs at local[2],
+# local[4] and local[8]; 42, 60 and 96 tasks (24 + 9 per core: the
+# narrow-input spread fans out to defaultParallelism). The margins stay
+# under one propagation round of the components stage (~6 jobs) and
+# one re-introduced 256-partition cache (~261 tasks per eager count).
+_OP_MAX_JOBS = 36
+
+
+def _op_max_tasks(parallelism: int) -> int:
+    return 40 + 12 * parallelism
+
+
+def test_curation_op_job_and_task_budget(spark, tmp_path):
+    """One curation op over a small seeded corpus stays within a job and
+    a task budget, and still meets its planted ground truth."""
+    from perfbench import checks, inputs
+
+    truth = inputs.make_curation(3, 400, str(tmp_path / "in"))
+    docs = spark.read.parquet(truth["docs_path"])
+    evalset = spark.read.parquet(truth["eval_path"])
+    sc = spark.sparkContext
+    group = "curation-op-budget"
+    sc.setJobGroup(group, "one curation op")
+    try:
+        stats = run_curation_pipeline(
+            spark, docs, str(tmp_path / "gold"), evalset=evalset
+        )
+    finally:
+        sc.setJobGroup(None, None)
+    assert checks.check_curation(truth, stats, None) == []
+
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    tasks = 0
+    for job in jobs:
+        for stage_id in tracker.getJobInfo(job).stageIds:
+            stage = tracker.getStageInfo(stage_id)
+            if stage is not None:
+                tasks += stage.numCompletedTasks
+    assert len(jobs) <= _OP_MAX_JOBS, f"{len(jobs)} jobs"
+    assert tasks <= _op_max_tasks(sc.defaultParallelism), f"{tasks} tasks"

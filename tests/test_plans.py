@@ -293,3 +293,32 @@ def test_spread_narrow_contract(spark):
         "spread_narrow ran a Spark job during its partition-count probe"
     )
     assert out.schema.fieldNames() == ["doc_id", "text"]
+
+
+def test_spread_narrow_broadcast_join_is_not_a_shuffle(spark):
+    """A BroadcastExchange is not a shuffle boundary: a narrow scan
+    joined to a broadcast side is probed and spread like a bare scan,
+    while the same join behind a shuffle still passes through."""
+    from pyspark.sql import functions as F
+
+    from nahuatl_data_pipeline_spark.functions.spread import (
+        _plan_has_exchange,
+        spread_narrow,
+    )
+    from nahuatl_data_pipeline_spark.schemas import load_table
+
+    docs = load_table(spark, SF_ORACLE, "documents").select("doc_id", "text")
+    tags = spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, tag string")
+    joined = docs.join(F.broadcast(tags), "doc_id", "left")
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" in plan
+    assert not _plan_has_exchange(joined)
+
+    par = spark.sparkContext.defaultParallelism
+    assert joined.rdd.getNumPartitions() < par  # sf0.01 docs: one split
+    out = spread_narrow(joined)
+    assert out is not joined and out.rdd.getNumPartitions() == par
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, joined.collect()))
+
+    shuffled = joined.groupBy("tag").count()
+    assert _plan_has_exchange(shuffled) and spread_narrow(shuffled) is shuffled

@@ -653,3 +653,31 @@ def test_empty_corpus_schema_inherits_id_type(spark):
     assert [f.dataType for f in srp_empty.schema.fields[:2]] == [
         populated.schema["vec_id"].dataType
     ] * 2
+
+
+def test_fixed_dim_cosine_nulls_rows_off_the_declared_dim(spark):
+    """cosine_cols(dim=) equals the fold on exact-length rows and is
+    NULL on any row whose arrays are not both ``dim`` long: an
+    over-length array must not be truncated into a wrong cosine."""
+    from nahuatl_data_pipeline_spark.operators.similarity import cosine_cols
+
+    df = spark.createDataFrame(
+        [
+            (1, [1.0, 2.0, 3.0], [3.0, 2.0, 1.0]),       # exact
+            (2, [1.0, 2.0, 3.0, 4.0], [3.0, 2.0, 1.0]),  # a over-length
+            (3, [1.0, 2.0, 3.0], [3.0, 2.0, 1.0, 9.0]),  # b over-length
+            (4, [1.0, 2.0], [3.0, 2.0]),                 # both under-length
+            (5, None, [3.0, 2.0, 1.0]),                  # NULL array
+        ],
+        "k int, a array<double>, b array<double>",
+    )
+    rows = {
+        r["k"]: (r["fixed"], r["fold"])
+        for r in df.select(
+            "k",
+            cosine_cols("a", "b", dim=3).alias("fixed"),
+            cosine_cols("a", "b").alias("fold"),
+        ).collect()
+    }
+    assert rows[1][0] is not None and rows[1][0] == rows[1][1]
+    assert [rows[k][0] for k in (2, 3, 4, 5)] == [None] * 4
