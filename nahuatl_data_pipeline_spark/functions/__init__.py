@@ -41,7 +41,6 @@ from nahuatl_data_pipeline_spark.functions.hashing import (  # noqa: F401
     token_set,
     word_shingles,
 )
-from nahuatl_data_pipeline_spark.functions.normalize import strip_html  # noqa: F401
 from nahuatl_data_pipeline_spark.functions.segmentation import (  # noqa: F401
     chunk_documents,
     chunk_text,

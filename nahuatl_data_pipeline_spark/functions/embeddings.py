@@ -15,7 +15,6 @@ token sets → ~0).
 from __future__ import annotations
 
 import hashlib
-import json
 from collections.abc import Callable
 from typing import Iterator
 
@@ -123,66 +122,3 @@ def embed_text(
 
     return _embed(_col(c))
 
-
-# ---------------------------------------------------------------------------
-# Model-file load path (aligner.py:15-24 LaBSE deployment analogue)
-# ---------------------------------------------------------------------------
-
-
-def load_encoder(path: str) -> Callable[[list[str]], "np.ndarray"]:
-    """Load an encoder artifact from disk → an ``encode_fn`` for
-    ``embed_text`` (driver-side, call once; ``embed_text`` runs it
-    inside the Arrow-batched pandas_udf).
-
-    Directory paths route to ``sentence_transformers`` (the reference's
-    LaBSE deployment, aligner.py:15-24) — env-gated, raises ImportError
-    with guidance when the library isn't installed. ``.json`` files use
-    the built-in fixed-weight linear encoder, format::
-
-        {"dim": 8, "buckets": 32, "weights": [[...8 rows × 32 cols...]]}
-
-    encode(text) = L2-normalized Σ_token W[:, md5(token) % buckets] —
-    the same hashed-bag family as the default encoder but with weights
-    READ FROM THE FILE, so tests prove the artifact-loading path, not
-    just the in-code fallback.
-    """
-    import os
-
-    if os.path.isdir(path):
-        try:
-            from sentence_transformers import (  # type: ignore[import-not-found]
-                SentenceTransformer,
-            )
-        except ImportError as exc:  # pragma: no cover - env-dependent
-            raise ImportError(
-                "directory model paths need 'sentence-transformers'; "
-                "install it or export a JSON fixed-weight encoder"
-            ) from exc
-        model = SentenceTransformer(path)  # pragma: no cover - env-dependent
-
-        def _st_encode(texts: list[str]) -> "np.ndarray":  # pragma: no cover
-            return model.encode(texts, normalize_embeddings=True)
-
-        return _st_encode  # pragma: no cover - env-dependent
-
-    with open(path, encoding="utf-8") as f:
-        raw = json.load(f)
-    W = np.asarray(raw["weights"], dtype=np.float64)
-    dim, buckets = int(raw["dim"]), int(raw["buckets"])
-    if W.shape != (dim, buckets):
-        raise ValueError(
-            f"weights shape {W.shape} != (dim={dim}, buckets={buckets})"
-        )
-
-    def _encode(texts: list[str]) -> "np.ndarray":
-        out = np.zeros((len(texts), dim), dtype=np.float64)
-        for i, t in enumerate(texts):
-            for tok in t.lower().split():
-                d = hashlib.md5(tok.encode("utf-8")).digest()
-                out[i] += W[:, int.from_bytes(d[:4], "big") % buckets]
-            n = np.linalg.norm(out[i])
-            if n > 0:
-                out[i] /= n
-        return out
-
-    return _encode

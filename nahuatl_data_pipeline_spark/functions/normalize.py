@@ -62,23 +62,6 @@ def remove_page_artifacts(c: ColumnOrName) -> Column:
     return F.regexp_replace(_col(c), r"(?i)Página \d+", "")
 
 
-def strip_html(c: ColumnOrName) -> Column:
-    """F15: drop script/style blocks then all remaining tags, decode the
-    common entities (the simple-path HTML extraction of
-    driver_bible.py:52-57; the BeautifulSoup path in gemini_distiller.py
-    is the pluggable heavy variant)."""
-    out = F.regexp_replace(
-        _col(c), r"(?is)<(script|style)[^>]*>.*?</\1>", " "
-    )
-    out = F.regexp_replace(out, r"<[^>]+>", " ")
-    out = F.regexp_replace(out, "&nbsp;", " ")
-    out = F.regexp_replace(out, "&lt;", "<")
-    out = F.regexp_replace(out, "&gt;", ">")
-    # &amp; LAST: decoding it first would double-decode escaped entity
-    # references ('&amp;lt;' means the literal text '&lt;', not '<')
-    return F.regexp_replace(out, "&amp;", "&")
-
-
 def empty_to_null(c: ColumnOrName) -> Column:
     """Strip, then empty-string → NULL (schemas.py:144-159)."""
     t = F.trim(_col(c))

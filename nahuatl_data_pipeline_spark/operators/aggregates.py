@@ -160,25 +160,6 @@ def moving_average_trend(
     )
 
 
-def conditional_status_agg(
-    df: DataFrame,
-    date_col: str,
-    name_col: str,
-    status_col: str = "status",
-) -> DataFrame:
-    """A9+A10: SUM(CASE WHEN status…) per name per day + null-guarded
-    success-rate ratio (schema.sql:203-214, 222-226)."""
-    ok = F.sum(F.when(F.col(status_col) == "success", 1).otherwise(0))
-    fail = F.sum(F.when(F.col(status_col) == "failed", 1).otherwise(0))
-    total = F.count(F.lit(1))
-    return df.groupBy(F.to_date(F.col(date_col)).alias("date"), name_col).agg(
-        total.cast("long").alias("runs"),
-        ok.cast("long").alias("successes"),
-        fail.cast("long").alias("failures"),
-        F.round(100.0 * ok / F.nullif(total, F.lit(0)), 2).alias("success_pct"),
-    )
-
-
 def latest_per_group(
     df: DataFrame, group_cols: list[str], order_col: str
 ) -> DataFrame:

@@ -7,7 +7,7 @@ the scan, not after it.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -42,8 +42,3 @@ def watermark_filter(df: DataFrame, wm_col: str, last_sync) -> DataFrame:
     this into the scan (partition pruning when wm_col is the partition key).
     """
     return df.filter(F.col(wm_col) > F.lit(last_sync))
-
-
-def charset_predicate(col: str, pattern: str) -> Column:
-    """P7: regex content predicate (DataQuality.scala:58-79)."""
-    return F.col(col).rlike(pattern)

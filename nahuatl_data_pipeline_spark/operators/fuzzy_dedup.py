@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from nahuatl_data_pipeline_spark.functions.hashing import word_shingles
 from nahuatl_data_pipeline_spark.functions.spread import spread_narrow
+from nahuatl_data_pipeline_spark.session import CachePool
 
 # Generation-based cache management: each fuzzy-dedup call releases the
 # PREVIOUS call's persisted shingle/candidate intermediates and registers
@@ -37,26 +38,15 @@ from nahuatl_data_pipeline_spark.functions.spread import spread_narrow
 # leaking monotonically. Concurrent fuzzy-dedup calls in one session
 # should call release_fuzzy_caches() themselves once both results are
 # materialized.
-_LIVE_CACHES: list[DataFrame] = []
+_LIVE_CACHES = CachePool()
+release_fuzzy_caches = _LIVE_CACHES.release
+_register_caches = _LIVE_CACHES.register
 
 # Observability: banded_minhash_pairs records its candidate-pair count
 # here (the count is computed anyway for the broadcast size gate). Scale
 # probes (SCALE.md's pair-family table) read it to report candidate
 # growth vs true output without re-running the banding.
 LAST_STATS: dict[str, int] = {}
-
-
-def release_fuzzy_caches() -> None:
-    """Unpersist intermediates cached by earlier fuzzy-dedup calls."""
-    while _LIVE_CACHES:
-        try:
-            _LIVE_CACHES.pop().unpersist()
-        except Exception:
-            pass  # session already stopped
-
-
-def _register_caches(*cached: DataFrame) -> None:
-    _LIVE_CACHES.extend(cached)
 
 
 # IMPORTANT ordering contract: release_fuzzy_caches() must run at the

@@ -19,21 +19,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from nahuatl_data_pipeline_spark.session import CachePool
+
 # Generation-based cache management, mirroring fuzzy_dedup.py's contract
 # but with a SEPARATE generation: each capped linkage call releases the
 # previous linkage call's persisted block frame. A shared generation
 # with fuzzy_dedup would let a linkage call evict an in-flight fuzzy
 # call's shingle caches (and vice versa) when the families interleave.
-_LIVE_CACHES: list[DataFrame] = []
-
-
-def release_linkage_caches() -> None:
-    """Unpersist intermediates cached by earlier linkage calls."""
-    while _LIVE_CACHES:
-        try:
-            _LIVE_CACHES.pop().unpersist()
-        except Exception:
-            pass  # session already stopped
+_LIVE_CACHES = CachePool()
+release_linkage_caches = _LIVE_CACHES.release
 
 
 def blocked_levenshtein_pairs(
@@ -76,7 +70,7 @@ def blocked_levenshtein_pairs(
             "left_semi",
         ).persist()
         keyed.count()  # eager: both self-join legs read the cache
-        _LIVE_CACHES.append(keyed)
+        _LIVE_CACHES.register(keyed)
     a = keyed.select(
         F.col("__id").alias("id_a"), F.col("__t").alias("text_a"), "__blk"
     )

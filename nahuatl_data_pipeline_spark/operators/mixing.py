@@ -43,16 +43,6 @@ def sample_bucket(key: Column, seed: int) -> Column:
     return F.conv(F.substring(h, 1, 8), 16, 10).cast("double") / F.lit(_DENOM)
 
 
-def deterministic_sample(
-    df: DataFrame, key: str, fraction: float, seed: int = 42
-) -> DataFrame:
-    """Keep ~fraction of rows, decided per-row by content hash —
-    reproducible across runs, partitionings, and engines."""
-    if not 0.0 <= fraction <= 1.0:
-        raise ValueError(f"fraction must be in [0,1], got {fraction}")
-    return df.filter(sample_bucket(F.col(key), seed) < F.lit(fraction))
-
-
 def stratified_mix(
     df: DataFrame,
     strata_col: str,

@@ -96,101 +96,6 @@ def attach_media_metadata(
     )
 
 
-def sniff_image(payload: bytes | None) -> tuple[str, int, int] | None:
-    """(mime, width, height) parsed from PNG/JPEG/GIF HEADER BYTES — no
-    codec, no decode: PNG's IHDR carries dims at fixed offsets, GIF's
-    logical screen descriptor likewise, JPEG needs a marker walk to the
-    first SOF segment. This is the real (not faked) piece of metadata
-    extraction that needs no image library, so the Bronze path can
-    populate width/height at 100 TB with a pure header read per blob.
-    Returns None for unrecognized/truncated payloads."""
-    import struct
-
-    if not payload or len(payload) < 10:
-        return None
-    if payload[:8] == b"\x89PNG\r\n\x1a\n" and len(payload) >= 24:
-        if payload[12:16] != b"IHDR":  # corrupt: magic without IHDR
-            return None
-        w, h = struct.unpack(">II", payload[16:24])
-        # PNG caps dimensions at 2^31-1; garbage beyond that (or zero)
-        # is corruption — and would overflow the IntegerType metadata
-        # column, failing the whole scan task on one hostile blob
-        if not (0 < w <= 0x7FFFFFFF and 0 < h <= 0x7FFFFFFF):
-            return None
-        return ("image/png", w, h)
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        w, h = struct.unpack("<HH", payload[6:10])
-        if w == 0 or h == 0:  # same zero-is-corruption rule as PNG
-            return None
-        return ("image/gif", w, h)
-    if payload[:2] == b"\xff\xd8":  # JPEG SOI; walk to a SOF marker
-        i = 2
-        n = len(payload)
-        while i + 9 < n:
-            if payload[i] != 0xFF:
-                return None  # marker desync: corrupt
-            # the spec allows any number of 0xFF fill bytes before the
-            # marker byte — skip them or the walk desyncs on valid files
-            while i + 1 < n and payload[i + 1] == 0xFF:
-                i += 1
-            if i + 9 >= n:
-                break
-            marker = payload[i + 1]
-            if marker == 0xD9:  # EOI: no SOF found
-                return None
-            if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-                i += 2  # standalone markers have no length field
-                continue
-            seglen = struct.unpack(">H", payload[i + 2 : i + 4])[0]
-            if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                h, w = struct.unpack(">HH", payload[i + 5 : i + 9])
-                # h=0 is the rare DNL-deferred-height form; w=0 is
-                # corrupt — either way not usable metadata
-                if w == 0 or h == 0:
-                    return None
-                return ("image/jpeg", w, h)
-            i += 2 + seglen
-    return None
-
-
-def attach_sniffed_metadata(
-    df: DataFrame, payload_col: str = "payload", modality: str = "image"
-) -> DataFrame:
-    """Like :func:`attach_media_metadata`, but mime/width/height come
-    from the header sniffer — an Arrow-batched pandas projection over
-    the binary column (bytes stay in the executor; only the tiny struct
-    shuffles onward if at all)."""
-    out_schema = StructType(
-        [
-            StructField("mime", StringType(), True),
-            StructField("width", IntegerType(), True),
-            StructField("height", IntegerType(), True),
-        ]
-    )
-
-    @F.pandas_udf(out_schema)
-    def _sniff(s: pd.Series) -> pd.DataFrame:
-        rows = []
-        for b in s:
-            got = sniff_image(bytes(b) if b is not None else None)
-            rows.append(got or (None, None, None))
-        return pd.DataFrame(rows, columns=["mime", "width", "height"])
-
-    p = F.col(payload_col)
-    sniffed = _sniff(p)
-    return df.withColumn(
-        "meta",
-        F.struct(
-            F.lit(modality).alias("modality"),
-            sniffed["mime"].alias("mime"),
-            sniffed["width"].alias("width"),
-            sniffed["height"].alias("height"),
-            F.lit(None).cast("long").alias("duration_ms"),
-            F.sha2(p, 256).alias("sha256"),
-        ),
-    )
-
-
 def fake_decode(payload: bytes | None, dim: int = 8) -> np.ndarray | None:
     """Deterministic stand-in for a real codec: features derive from the
     payload's sha256 digest, so every engine/run agrees. Swap for a real
@@ -307,78 +212,3 @@ def sample_frames(
 
     return media.mapInPandas(run, schema=FRAME_SCHEMA)
 
-
-def sniff_audio(payload: bytes | None) -> tuple[str, int, int, int] | None:
-    """(mime, sample_rate, channels, duration_ms) parsed from WAV/RIFF
-    HEADER BYTES — the audio twin of :func:`sniff_image`: the canonical
-    'fmt ' chunk carries rate/channels at fixed offsets and the 'data'
-    chunk length + byte rate give duration, all without an audio
-    library. Walks the RIFF chunk list (the spec allows LIST/fact/cue
-    chunks before 'fmt ') and tolerates a truncated final chunk.
-    Returns None for unrecognized/corrupt payloads."""
-    import struct
-
-    if not payload or len(payload) < 12:
-        return None
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        return None
-    i = 12
-    n = len(payload)
-    rate = channels = byte_rate = None
-    data_len = None
-    while i + 8 <= n:
-        cid = payload[i : i + 4]
-        (clen,) = struct.unpack("<I", payload[i + 4 : i + 8])
-        if cid == b"fmt " and i + 24 <= n:
-            channels, rate = struct.unpack("<HI", payload[i + 10 : i + 16])
-            (byte_rate,) = struct.unpack("<I", payload[i + 16 : i + 20])
-        elif cid == b"data":
-            data_len = clen
-        # chunks are word-aligned: odd lengths carry a pad byte
-        i += 8 + clen + (clen & 1)
-    if not rate or not channels or rate > 10_000_000:
-        return None
-    duration_ms = None
-    if data_len is not None and byte_rate:
-        duration_ms = int(data_len * 1000 // byte_rate)
-    return ("audio/wav", rate, channels, duration_ms or 0)
-
-
-def attach_audio_metadata(
-    df: DataFrame, payload_col: str = "payload"
-) -> DataFrame:
-    """Audio counterpart of :func:`attach_sniffed_metadata`: mime /
-    sample_rate / channels / duration_ms from the RIFF header via an
-    Arrow-batched projection — bytes never leave the executor."""
-    out_schema = StructType(
-        [
-            StructField("mime", StringType(), True),
-            StructField("sample_rate", IntegerType(), True),
-            StructField("channels", IntegerType(), True),
-            StructField("duration_ms", LongType(), True),
-        ]
-    )
-
-    @F.pandas_udf(out_schema)
-    def _sniff(s: pd.Series) -> pd.DataFrame:
-        rows = []
-        for b in s:
-            got = sniff_audio(bytes(b) if b is not None else None)
-            rows.append(got or (None, None, None, None))
-        return pd.DataFrame(
-            rows, columns=["mime", "sample_rate", "channels", "duration_ms"]
-        )
-
-    p = F.col(payload_col)
-    sniffed = _sniff(p)
-    return df.withColumn(
-        "meta",
-        F.struct(
-            F.lit("audio").alias("modality"),
-            sniffed["mime"].alias("mime"),
-            sniffed["sample_rate"].alias("sample_rate"),
-            sniffed["channels"].alias("channels"),
-            sniffed["duration_ms"].alias("duration_ms"),
-            F.sha2(p, 256).alias("sha256"),
-        ),
-    )

@@ -31,23 +31,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from nahuatl_data_pipeline_spark.functions.text_analysis import token_count
+from nahuatl_data_pipeline_spark.operators.split import _shuffle_hash
 
 _H = "__pack_h"
 _B = "__pack_b"
 _IN = "__pack_in"
 _OFF = "__pack_off"
 _T = "__pack_t"
-
-
-def _shuffle_hash(key_col, seed: int):
-    # concat + coalesce, NOT concat_ws (concat_ws skips null args — see
-    # operators/split.py:_shuffle_hash for the parity rationale)
-    return F.md5(
-        F.concat(
-            F.lit(str(seed) + ":"),
-            F.coalesce(key_col.cast("string"), F.lit("")),
-        )
-    )
 
 
 def pack_sequences(
@@ -109,51 +99,6 @@ def pack_sequences(
             ),
         )
         .drop(_H, _B, _IN, _OFF, _T)
-    )
-
-
-def sequence_pieces(
-    packed: DataFrame,
-    key: str,
-    seq_len: int = 2048,
-) -> DataFrame:
-    """Explode a ``pack_sequences`` result into per-sequence pieces.
-
-    One row per (document, training sequence) pair: ``seq_id``,
-    ``piece_begin`` (token offset inside the document) and ``piece_len``.
-    Within any sequence the piece lengths sum to exactly ``seq_len``
-    (except the final partial sequence of the corpus), and per document
-    the piece lengths sum to ``n_tokens`` — both are asserted in
-    ``tests/test_packing.py``. Empty documents produce no pieces.
-
-    ``seq_len`` must equal the value given to ``pack_sequences`` — the
-    span boundaries are re-derived from ``start_offset``/``n_tokens``
-    alone (never from the stored ``seq_id``), so a mismatched value
-    yields pieces for a DIFFERENT chop, not silent corruption.
-    """
-    if seq_len <= 0:
-        raise ValueError(f"seq_len must be positive, got {seq_len}")
-    first = F.expr(f"start_offset div {seq_len}")
-    last = F.expr(f"(start_offset + n_tokens - 1) div {seq_len}")
-    s = F.col("__piece_seq")
-    seq_start = s * F.lit(seq_len)
-    seq_end = seq_start + F.lit(seq_len)  # exclusive
-    begin_abs = F.greatest(seq_start, F.col("start_offset"))
-    end_abs = F.least(seq_end, F.col("start_offset") + F.col("n_tokens"))
-    return (
-        packed.filter(F.col("n_tokens") > 0)
-        .select(
-            key,
-            "start_offset",
-            "n_tokens",
-            F.explode(F.sequence(first, last)).alias("__piece_seq"),
-        )
-        .select(
-            key,
-            s.alias("seq_id"),
-            (begin_abs - F.col("start_offset")).alias("piece_begin"),
-            (end_abs - begin_abs).alias("piece_len"),
-        )
     )
 
 

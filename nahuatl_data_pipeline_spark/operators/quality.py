@@ -121,7 +121,7 @@ def corpus_expectation_suite(
     """The reference's 8-expectation GE suite
     (corc_nah_corpus_suite.json) as Check specs:
 
-    1. (column-set match — structural; see ``validate_schema``)
+    1. (column-set match — structural; ``set(df.columns)``)
     2. es not-null            mostly = 1.0
     3. nah not-null           mostly = 0.95
     4. nah macron regex       mostly = 0.30
@@ -150,11 +150,6 @@ def corpus_expectation_suite(
         Check("source_in_set", values_in_set_ratio("source", sources), ">=", 1.0),
         Check("row_count", row_count(), "between", min_rows, max_rows),
     ]
-
-
-def validate_schema(df: DataFrame, expected_cols: set[str]) -> bool:
-    """GE expectation 1: exact column-set match (structural, no scan)."""
-    return set(df.columns) == expected_cols
 
 
 # --- persisted validation report (run_quality_check.py:262-313,343-449) ----

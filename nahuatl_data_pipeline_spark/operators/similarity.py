@@ -17,8 +17,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from nahuatl_data_pipeline_spark.functions.spread import spread_narrow
+from nahuatl_data_pipeline_spark.session import CachePool
 
 
 # Query-side broadcast gate (rows). Embedding rows are wide (dim × 8 B), so
@@ -28,29 +30,12 @@ from nahuatl_data_pipeline_spark.functions.spread import spread_narrow
 # corpus) blows past it and must NOT be collected to the driver.
 BROADCAST_MAX_QUERY_ROWS = 100_000
 
-# Generation-based cache pool (fuzzy_dedup.py:37-51 pattern): each
-# similarity call releases the previous call's persisted corpus-side
-# intermediates and registers its own, so a long-lived session holds at
-# most one call's caches while the current result stays valid however
-# the caller derives from it.
-_LIVE_CACHES: list[DataFrame] = []
-
-
-def release_similarity_caches() -> None:
-    """Unpersist intermediates cached by earlier similarity calls."""
-    while _LIVE_CACHES:
-        try:
-            _LIVE_CACHES.pop().unpersist()
-        except Exception:
-            pass  # session already stopped
-
-
-def _register_caches(*cached: DataFrame) -> None:
-    # NOTE: release_similarity_caches() must run BEFORE a call creates
-    # its own persists (fuzzy_dedup.py ordering contract: Spark's
-    # CacheManager matches plans canonically, so unpersisting an
-    # identical plan after re-persisting it evicts the shared entry).
-    _LIVE_CACHES.extend(cached)
+# Generation-based cache pool: each similarity call releases the
+# previous call's persisted intermediates (corpus side and the gate's
+# query-side pin) at its entry, BEFORE persisting its own.
+_LIVE_CACHES = CachePool()
+release_similarity_caches = _LIVE_CACHES.release
+_register_caches = _LIVE_CACHES.register
 
 
 def _gate_and_pin(df: DataFrame, max_rows: int) -> tuple[DataFrame, bool]:
@@ -60,17 +45,23 @@ def _gate_and_pin(df: DataFrame, max_rows: int) -> tuple[DataFrame, bool]:
     The old ``_fits`` probe (``limit(max_rows+1).count()``) was a whole
     job whose work was thrown away: the gated frame was then recomputed
     from scratch by ``toPandas``/the broadcast exchange/the cartesian.
-    Here the frame is LAZILY localCheckpoint'ed and the full count is
-    the materializing action — one job yields both the gate decision
-    and pinned blocks every consumer (driver collect, broadcast build
-    thread, each cartesian block) reads instead of re-deriving the
-    query-side plan. The checkpoint is storage-backed (memory+disk), so
-    an over-gate corpus-scale side spills rather than OOMs — and the
-    blocked-cartesian fallback previously recomputed that side once per
-    corpus block, so pinning it is the bigger win exactly there.
-    Returns ``(pinned_df, fits)``; output values are unchanged (the
-    checkpoint only truncates lineage)."""
-    df = df.localCheckpoint(eager=False)
+    Here the frame is persisted and the full count is the materializing
+    action — one job yields both the gate decision and pinned blocks
+    every consumer (driver collect, broadcast build thread, each
+    cartesian block) reads instead of re-deriving the query-side plan.
+    The cache is memory+disk, so an over-gate corpus-scale side spills
+    rather than OOMs — and the blocked-cartesian fallback previously
+    recomputed that side once per corpus block, so pinning it is the
+    bigger win exactly there.
+
+    The pin joins the similarity cache generation, which the CALLER
+    releases at its entry (never here: ``ivf_topk`` registers its corpus
+    cache before gating). Returns ``(pinned_df, fits)``; output values
+    are those of the unpinned plan — a persisted frame, like the local
+    checkpoint it replaced, materializes the same rows — so no query
+    needs re-certification."""
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    _register_caches(df)
     return df, df.count() <= max_rows
 
 
@@ -209,6 +200,7 @@ def cosine_topk(
     cond = (
         F.col("query_id") != F.col("neighbor_id") if exclude_self else F.lit(True)
     )
+    release_similarity_caches()  # before the gate persists
     return _brute_topk(q, c, cond, k, round_to, broadcast_max_queries, dim)
 
 
@@ -277,6 +269,7 @@ def cosine_neardup_pairs(
     """
     q = queries.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__qv"))
     c = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__cv"))
+    release_similarity_caches()  # before the gate persists
     q, fits = _gate_and_pin(q, broadcast_max_queries)
     if fits:
         qpd = q.filter(F.col("__qv").isNotNull()).toPandas()
@@ -380,9 +373,7 @@ def lsh_topk(
             array_to_vector(F.transform(arr, lambda x: x / nrm)).alias(out),
         )
 
-    from pyspark.storagelevel import StorageLevel
-
-    release_similarity_caches()  # before persisting (see _register_caches)
+    release_similarity_caches()  # before persisting (see CachePool)
     qn = normed(queries, "features")
     # The corpus side is consumed by fit's input-dim probe AND the
     # similarity join; persist so normalization + vector conversion run
@@ -484,9 +475,7 @@ def ivf_topk(
             F.transform(arr, lambda x: x / nrm).alias(vec_out),
         )
 
-    from pyspark.storagelevel import StorageLevel
-
-    release_similarity_caches()  # before persisting (see _register_caches)
+    release_similarity_caches()  # before persisting (see CachePool)
     # The normalized corpus feeds THREE consumers (row count, the driver
     # fit sample, cell assignment + the final join side) — persist and
     # materialize once; the interpreted array-normalization lambdas are
@@ -626,6 +615,7 @@ def hard_negatives(
         F.col(label_col).alias("__cl"),
     )
     cond = ~F.col("__ql").eqNullSafe(F.col("__cl"))
+    release_similarity_caches()  # before the gate persists
     return _brute_topk(q, c, cond, k, round_to, broadcast_max_queries, dim)
 
 
@@ -884,58 +874,6 @@ def merge_covariance_moments(*parts: DataFrame) -> DataFrame:
     )
 
 
-def whiten_embeddings(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    eps: float = 1e-5,
-    out_col: str = "whitened",
-) -> DataFrame:
-    """ZCA-whiten an embedding column: center, then project with
-    ``W = V (Λ + eps)^{-1/2} Vᵀ`` from the covariance eigendecomposition
-    — after it the corpus has identity covariance, which equalizes
-    dimensions before cosine/L2 retrieval and turns Euclidean distance
-    into Mahalanobis (the embedding-store preprocessing step).
-
-    Scale shape: the d×d covariance reduction is distributed
-    (:func:`embedding_covariance`), the eigenproblem is a DRIVER-side
-    ``numpy.linalg.eigh`` on d² floats (bounded at any corpus size —
-    the standard big-data PCA split), and the projection is one
-    Arrow-batched matmul per batch with ``W`` shipped in the closure.
-    Exact eigenvectors are floating-point- and library-dependent, so
-    this operator is invariant-tested (whitened covariance ≈ I), not
-    oracle-hashed — ZCA's uniqueness makes the PROJECTION stable even
-    though an individual eigenvector's sign is not.
-    """
-    base = df.where(F.col(vec_col).isNotNull() & (F.size(vec_col) == dim))
-    cells = embedding_covariance(base, vec_col, dim, round_to=None)
-    x = base.select(F.posexplode(vec_col).alias("pos", "val"))
-    means_rows = (
-        x.groupBy("pos")
-        .agg((F.sum(F.col("val").cast("double")) / F.count(F.lit(1))).alias("m"))
-        .collect()
-    )
-    mu = np.zeros(dim)
-    for r in means_rows:
-        mu[r["pos"]] = r["m"]
-    C = np.zeros((dim, dim))
-    for r in cells.collect():  # bounded: d(d+1)/2 rows
-        C[r["i"], r["j"]] = C[r["j"], r["i"]] = r["cov"]
-    lam, V = np.linalg.eigh(C)
-    W = (V * (1.0 / np.sqrt(np.maximum(lam, 0.0) + eps))) @ V.T
-
-    @F.pandas_udf("array<double>")
-    def project(vs: pd.Series) -> pd.Series:
-        X = np.asarray([np.asarray(v, dtype=np.float64) for v in vs])
-        out = (X - mu) @ W.T
-        return pd.Series(list(out))
-
-    return base.select(
-        F.col(id_col), project(F.col(vec_col)).alias(out_col)
-    )
-
-
 def mahalanobis_outliers(
     df: DataFrame,
     id_col: str,
@@ -948,10 +886,9 @@ def mahalanobis_outliers(
     the per-dimension-standardized novelty score (Σ (xᵢ−μᵢ)²/varᵢ):
     the embedding-store outlier sweep for mislabeled, corrupted, or
     off-distribution vectors before they poison retrieval or training.
-    The full-covariance variant is :func:`whiten_embeddings` + plain
-    L2; the diagonal form keeps every step exactly reproducible in SQL
-    (no eigenproblem), which is why it is the oracle-checked member of
-    the family.
+    The diagonal form keeps every step exactly reproducible in SQL (no
+    eigenproblem), which is why it is the oracle-checked member of the
+    family.
 
     Plan: per-dimension moments via posexplode + one 64-group
     aggregate; the d-row moment table broadcast-joins back onto the

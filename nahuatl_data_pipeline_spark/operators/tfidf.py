@@ -31,19 +31,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# Generation-based cache pool (fuzzy_dedup.py:37-51 pattern): each
-# tfidf_cosine_pairs call releases the previous call's persisted
-# posting index and registers its own.
-_LIVE_CACHES: list[DataFrame] = []
+from nahuatl_data_pipeline_spark.session import CachePool
 
-
-def release_tfidf_caches() -> None:
-    """Unpersist intermediates cached by earlier tf-idf calls."""
-    while _LIVE_CACHES:
-        try:
-            _LIVE_CACHES.pop().unpersist()
-        except Exception:
-            pass  # session already stopped
+# Generation-based cache pool: each tfidf_cosine_pairs call releases the
+# previous call's persisted posting index and registers its own.
+_LIVE_CACHES = CachePool()
+release_tfidf_caches = _LIVE_CACHES.release
 
 
 def term_array(text_col: str):
@@ -304,7 +297,7 @@ def tfidf_cosine_pairs(
     release_tfidf_caches()
     normed = normed.persist()
     normed.count()  # eager: both self-join legs read the cache
-    _LIVE_CACHES.append(normed)
+    _LIVE_CACHES.register(normed)
     a = normed.select(
         F.col("__doc").alias("id_a"), "term", F.col("wn").alias("wa")
     )

@@ -437,38 +437,6 @@ class MetadataStore:
         return current_runs(self.runs())
 
 
-class MetricsTracker:
-    """Operation-timing context manager (``src/utils/metrics.py``
-    MetricsTracker): records wall time + caller metrics, flushes them to
-    the store's quality_metrics table on exit.
-
-    >>> with MetricsTracker(store, "ingest", run_id) as t:
-    ...     ...work...
-    ...     t.record("records_processed", 1000)
-    """
-
-    def __init__(self, store: MetadataStore, operation: str, run_id: str):
-        self.store = store
-        self.operation = operation
-        self.run_id = run_id
-        self.metrics: dict[str, float] = {}
-        self._t0: float | None = None
-
-    def record(self, name: str, value: float) -> None:
-        self.metrics[name] = float(value)
-
-    def __enter__(self) -> "MetricsTracker":
-        self._t0 = time.perf_counter()
-        return self
-
-    def __exit__(self, exc_type, exc, tb) -> None:
-        elapsed = time.perf_counter() - (self._t0 or time.perf_counter())
-        out = dict(self.metrics)
-        out[f"{self.operation}_seconds"] = round(elapsed, 6)
-        out[f"{self.operation}_failed"] = 1.0 if exc_type else 0.0
-        self.store.log_metrics(self.run_id, out)
-
-
 def _now():
     import datetime
 

@@ -39,15 +39,6 @@ from nahuatl_data_pipeline_spark.schemas import load_table
 # A11/A12: declarative quality suite in ONE aggregate pass
 # ---------------------------------------------------------------------------
 
-_DOC_CHECKS = [
-    ("text_not_null", ">=", 1.0),
-    ("doc_id_unique", ">=", 1.0),
-    ("text_len_20_5000", ">=", 0.95),
-    ("text_has_alpha", ">=", 0.99),
-    ("row_count", "between", 1000.0),
-]
-
-
 @register(
     "q34_quality_suite",
     """
@@ -491,9 +482,8 @@ def q42_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q46_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (1 h gap), batch form of the
-    applyInPandasWithState streaming operator — lag + cumulative-sum
-    session ids; stream-vs-batch agreement in tests/test_sessionize.py."""
+    """Gap-based sessionization (1 h gap) — lag + cumulative-sum
+    session ids (tests/test_sessionize.py)."""
     from nahuatl_data_pipeline_spark.streaming.sessionize import sessionize_batch
 
     events = load_table(spark, sf_dir, "events")
@@ -733,7 +723,6 @@ def _q49_clamp_sql(expr: str) -> str:
     return expr
 
 
-_SQ = "'"  # one literal single quote
 _SQ2 = "''"  # escaped single quote inside a SQL string literal
 # TRANSLATE target of four ASCII apostrophes: '''''''' + ''  (4 × '' wrapped)
 _Q49_SQL = (

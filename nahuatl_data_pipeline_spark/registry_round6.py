@@ -7,7 +7,7 @@ grows with the round.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nahuatl_data_pipeline_spark.registry import _ORACLES, register

@@ -860,9 +860,7 @@ def q149_embedding_covariance(
     Arrow batch inside mapInPandas (the d² pair-explode alternative is
     2,080× row inflation), summed map-side into d(d+1)/2 cells; the
     oracle computes the same triangle by quadratic pair join, feasible
-    at sf0.01 (operators/similarity.py:embedding_covariance).
-    whiten_embeddings builds on this driver-side (invariant-tested —
-    eigenvectors are not oracle-hashable)."""
+    at sf0.01 (operators/similarity.py:embedding_covariance)."""
     from nahuatl_data_pipeline_spark.operators.similarity import (
         embedding_covariance,
     )
@@ -985,8 +983,7 @@ def q151_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 embedding-store outliers by diagonal Mahalanobis distance
     (per-dimension-standardized novelty) — the sweep for corrupted or
     off-distribution vectors before they poison retrieval/training
-    (operators/similarity.py:mahalanobis_outliers; full-covariance
-    variant = whiten_embeddings + L2). Moments are one 64-group
+    (operators/similarity.py:mahalanobis_outliers). Moments are one 64-group
     aggregate broadcast back; top-k is TakeOrderedAndProject, never a
     global sort."""
     from nahuatl_data_pipeline_spark.operators.similarity import (

@@ -21,18 +21,6 @@ from pyspark.sql.types import (
 
 # --- enums (reference src/models/enums.py) -------------------------------
 
-DATA_SOURCES = (
-    "huggingface",
-    "youtube",
-    "pdf",
-    "manual",
-    "synthetic",
-    "bible",
-    "unknown",
-)
-
-DATA_LAYERS = ("bronze", "silver", "diamond", "gold")
-
 # layer → priority rank used by keep-best dedup (enums.py:36-60)
 LAYER_PRIORITY = {"bronze": 0, "silver": 1, "diamond": 2, "gold": 3}
 

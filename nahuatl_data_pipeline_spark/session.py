@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Local test default. On a real cluster leave shuffle partitions high
 # (or unset) and let AQE coalesce; 32 matches the local[32] test harness.
@@ -80,3 +80,33 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+class CachePool:
+    """One operator family's generation of persisted intermediates.
+
+    Each call of the family releases the previous call's frames and
+    registers its own, so a long-lived session holds at most one call's
+    caches while the current result stays valid however the caller
+    derives from it. ``release`` must run at the START of a call, BEFORE
+    it persists anything: Spark's CacheManager matches cached plans by
+    canonical form, so unpersisting the previous call's handle after
+    re-persisting an identical plan would evict the shared entry.
+    """
+
+    def __init__(self) -> None:
+        self._frames: list[DataFrame] = []
+
+    def __iter__(self):
+        return iter(self._frames)
+
+    def register(self, *frames: DataFrame) -> None:
+        self._frames.extend(frames)
+
+    def release(self) -> None:
+        """Unpersist every frame registered since the last release."""
+        while self._frames:
+            try:
+                self._frames.pop().unpersist()
+            except Exception:
+                pass  # session already stopped

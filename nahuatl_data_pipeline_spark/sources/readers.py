@@ -231,12 +231,9 @@ def read_xml(
 ) -> DataFrame:
     """Distributed XML source (Spark 4 ships the former spark-xml
     integration natively): one row per ``row_tag`` element, attributes
-    surfaced as ``_attr`` columns. The distributed complement of the
-    driver-side ``parsers.parse_bible_xml`` regex path — that one
-    handles small fetched documents inside a download loop; this one
-    scans an XML *dataset* with executor parallelism, pushdown-pruned
-    columns, and the standard PERMISSIVE/corrupt-record contract of the
-    JSONL reader (S1).
+    surfaced as ``_attr`` columns. It scans an XML *dataset* with
+    executor parallelism, pushdown-pruned columns, and the standard
+    PERMISSIVE/corrupt-record contract of the JSONL reader (S1).
 
     Always pass ``schema`` in production: XML schema inference both
     costs an extra full scan AND coerces aggressively (observed: short

@@ -38,7 +38,3 @@ def mark_sources_done(
             F.col("ingestion_status")
         ),
     )
-
-
-def save_source_registry(registry: DataFrame, path: str) -> None:
-    registry.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)

@@ -33,28 +33,6 @@ def write_parquet(
     w.parquet(path)
 
 
-def write_orc(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """ORC sink (Spark-native, zlib-compressed by default): the exchange
-    format for Hive/Trino-adjacent consumers that want stripe-level
-    predicate pushdown instead of parquet row groups. Same layout
-    contract as ``write_parquet``."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC source — pushdown and column pruning work exactly as for
-    parquet (both are tested in tests/test_sources.py)."""
-    return spark.read.orc(path)
-
-
 def write_splits(
     df: DataFrame, out_dir: str, split_col: str = "split", fmt: str = "parquet"
 ) -> None:
@@ -70,45 +48,6 @@ def write_splits(
         w.json(out_dir)
     elif fmt == "orc":
         w.orc(out_dir)
-    else:
-        raise ValueError(f"unsupported format {fmt!r}")
-
-
-def write_training_shards(
-    df: DataFrame,
-    out_dir: str,
-    num_shards: int,
-    key: str | None = None,
-    fmt: str = "parquet",
-) -> None:
-    """Size-balanced shard layout for training dataloaders: exactly
-    ``num_shards`` partitions, one file each.
-
-    With ``key`` set, shard membership is decided by a content hash of
-    that column — STABLE across runs and incremental rebuilds (a doc
-    lands in the same shard every time, so downstream shard-level caches
-    and resume points survive a re-run); balance is multinomial, which
-    at training scale is within a fraction of a percent. Without a key,
-    round-robin balances to within one row per SOURCE partition (each
-    input partition deals independently) but gives no stability. Both
-    are one shuffle — the same cost as any repartition."""
-    from pyspark.sql import functions as F
-
-    if num_shards < 1:
-        raise ValueError(f"num_shards must be >= 1, got {num_shards}")
-    if key is not None:
-        part = df.repartition(
-            num_shards, F.crc32(F.md5(F.coalesce(F.col(key).cast("string"), F.lit(""))))
-        )
-    else:
-        part = df.repartition(num_shards)
-    w = part.write.mode("overwrite")
-    if fmt == "parquet":
-        w.parquet(out_dir)
-    elif fmt == "orc":
-        w.orc(out_dir)
-    elif fmt == "json":
-        w.json(out_dir)
     else:
         raise ValueError(f"unsupported format {fmt!r}")
 

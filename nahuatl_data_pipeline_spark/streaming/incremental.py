@@ -85,49 +85,6 @@ def windowed_event_counts(
     )
 
 
-def ohlc_stream(
-    events: DataFrame,
-    window_duration: str = "1 hour",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak: str = "event_id",
-) -> DataFrame:
-    """Streaming OHLC bars — the live counterpart of
-    operators/timeseries.py:ohlc_downsample: same (ts, tiebreak)
-    min_by/max_by open/close contract, same column layout, NO rounding
-    (like the batch operator — rounding is the caller's presentation
-    choice), so a backfill with the batch operator and the live stream
-    produce byte-identical bars — asserted cross-operator in
-    tests/test_streaming.py. Watermark bounds state to the active
-    windows; min_by/max_by fold incrementally per update, so state per
-    bar is one candidate row, not the bar's events."""
-    order = F.struct(F.col(ts_col), F.col(tiebreak))
-    return (
-        events.withWatermark(ts_col, watermark)
-        # group on the window EXPRESSION (not a .start projection): the
-        # streaming analyzer needs it to tie watermark eviction to the
-        # window; the batch-layout select below is just a projection
-        .groupBy(F.window(ts_col, window_duration), "event_type")
-        .agg(
-            F.min_by(value_col, order).alias("open"),
-            F.max(value_col).alias("high"),
-            F.min(value_col).alias("low"),
-            F.max_by(value_col, order).alias("close"),
-            F.count(F.lit(1)).alias("volume"),
-        )
-        .select(
-            "event_type",
-            F.col("window.start").alias("bar_ts"),
-            "open",
-            "high",
-            "low",
-            "close",
-            "volume",
-        )
-    )
-
-
 def streaming_dedup(
     events: DataFrame,
     keys: list[str],

@@ -1,131 +1,19 @@
-"""Custom stateful streaming operator: gap-based sessionization via
-``applyInPandasWithState`` (the Structured Streaming escape hatch for
-operators the built-ins can't express — SURVEY.md §2.11 extension).
+"""Gap-based sessionization over an event table (SURVEY.md §2.11
+extension).
 
-A session = consecutive events of one user with < ``gap`` between them.
-The same semantics in batch is the classic lag/cumsum window
-(``sessionize_batch``) — the streaming variant keeps ONE tiny state row
-per open session, emits a session the moment an event lands past its gap,
-and relies on event-time timeout + watermark to flush sessions that never
-see another event. State is O(active users), bounded by the watermark.
+A session = consecutive events of one user with < ``gap`` between them,
+computed as the classic lag/cumulative-sum window.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable
-
-import pandas as pd
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
-
-SESSION_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType(), False),
-        StructField("session_start", TimestampType(), False),
-        StructField("session_end", TimestampType(), False),
-        StructField("n_events", IntegerType(), False),
-    ]
-)
-
-_STATE_SCHEMA = StructType(
-    [
-        StructField("start_us", LongType(), False),
-        StructField("end_us", LongType(), False),
-        StructField("n", IntegerType(), False),
-    ]
-)
-
-
-def _session_fn(gap_us: int):
-    def fn(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        (user_id,) = key
-        closed: list[tuple] = []
-
-        if state.hasTimedOut:
-            if state.exists:
-                s, e, n = state.get
-                closed.append((user_id, s, e, n))
-                state.remove()
-        else:
-            cur = state.get if state.exists else None
-            events = pd.concat(list(pdfs), ignore_index=True)
-            # event-time order within the micro-batch
-            ts_us = (
-                events["ts"].astype("datetime64[us]").astype("int64").sort_values()
-            )
-            for t in ts_us:
-                if cur is None:
-                    cur = (t, t, 1)
-                elif t - cur[1] < gap_us and cur[0] - t < gap_us:
-                    # in-gap merge, bounded on BOTH sides: a late
-                    # cross-microbatch event may precede the open
-                    # session's start (batch takes min(ts) per session),
-                    # but an event more than gap BEFORE the start belongs
-                    # to its own earlier session, not this one
-                    cur = (min(cur[0], t), max(cur[1], t), cur[2] + 1)
-                elif t < cur[0]:
-                    # late event beyond the gap before the open session:
-                    # best-effort emit as its own (already-closed) session
-                    # — matches batch when no other events neighbor it
-                    closed.append((user_id, t, t, 1))
-                else:
-                    closed.append((user_id, cur[0], cur[1], cur[2]))
-                    cur = (t, t, 1)
-            if cur is not None:
-                state.update(cur)
-                # flush via timeout once the watermark passes end + gap
-                state.setTimeoutTimestamp((cur[1] + gap_us) // 1000)
-
-        if closed:
-            yield pd.DataFrame(
-                {
-                    "user_id": [c[0] for c in closed],
-                    "session_start": pd.to_datetime([c[1] for c in closed], unit="us"),
-                    "session_end": pd.to_datetime([c[2] for c in closed], unit="us"),
-                    "n_events": [c[3] for c in closed],
-                }
-            )
-
-    return fn
-
-
-def sessionize_stream(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming gap sessionization. Emits a row per CLOSED session:
-    immediately when a same-user event arrives past the gap, or via
-    event-time timeout when the watermark passes session_end + gap."""
-    gap_us = _duration_us(gap)
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _session_fn(gap_us),
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
 
 
 def sessionize_batch(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Batch equivalent (lag + cumulative-sum session ids): returns ALL
-    sessions including each user's final (still-open-in-streaming) one."""
+    """Lag + cumulative-sum session ids: one row per session, each
+    user's final one included."""
     gap_us = _duration_us(gap)
     w = Window.partitionBy("user_id").orderBy("ts")
     new_session = (

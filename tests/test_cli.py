@@ -8,7 +8,7 @@ import json
 import pytest
 
 from nahuatl_data_pipeline_spark.cli import main
-from nahuatl_data_pipeline_spark.plans.metadata import MetadataStore, MetricsTracker
+from nahuatl_data_pipeline_spark.plans.metadata import MetadataStore
 
 
 @pytest.fixture()
@@ -148,26 +148,6 @@ def test_cli_query_known_and_unknown(spark, capsys):
     out = capsys.readouterr().out.strip().splitlines()
     assert out and json.loads(out[0])["count"] >= 1
     assert main(["query", "nope"]) == 2
-
-
-def test_metrics_tracker(spark, tmp_path):
-    store = MetadataStore(spark, str(tmp_path / "meta"))
-    run_id = store.start_run("op")
-    with MetricsTracker(store, "ingest", run_id) as t:
-        t.record("records_processed", 123)
-    m = {r["metric_name"]: r["metric_value"] for r in store.metrics().collect()}
-    assert m["records_processed"] == 123.0
-    assert m["ingest_seconds"] >= 0.0 and m["ingest_failed"] == 0.0
-
-    with pytest.raises(RuntimeError):
-        with MetricsTracker(store, "boom", run_id):
-            raise RuntimeError("x")
-    m2 = {
-        (r["metric_name"]): r["metric_value"]
-        for r in store.metrics().collect()
-        if r["metric_name"].startswith("boom")
-    }
-    assert m2["boom_failed"] == 1.0
 
 
 def test_metadata_store_full_table_surface(spark, tmp_path):

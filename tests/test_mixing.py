@@ -6,32 +6,34 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from nahuatl_data_pipeline_spark.operators.mixing import (
-    deterministic_sample,
-    stratified_mix,
-)
+from nahuatl_data_pipeline_spark.operators.mixing import stratified_mix
 
 
 def _ids(df):
     return sorted(r["id"] for r in df.collect())
 
 
+def _sample(df, key, rate, seed):
+    """One-stratum mix: every row is drawn at ``rate``."""
+    return stratified_mix(df, key, {}, key=key, seed=seed, default_rate=rate)
+
+
 def test_sample_is_partition_and_run_independent(spark):
     df = spark.range(2000)
-    a = _ids(deterministic_sample(df, "id", 0.3, seed=7))
-    b = _ids(deterministic_sample(df.repartition(13), "id", 0.3, seed=7))
-    c = _ids(deterministic_sample(df, "id", 0.3, seed=7))
+    a = _ids(_sample(df, "id", 0.3, seed=7))
+    b = _ids(_sample(df.repartition(13), "id", 0.3, seed=7))
+    c = _ids(_sample(df, "id", 0.3, seed=7))
     assert a == b == c
 
 
 def test_sample_rate_approximately_held(spark):
     df = spark.range(20000)
-    n = deterministic_sample(df, "id", 0.3, seed=1).count()
+    n = _sample(df, "id", 0.3, seed=1).count()
     assert 0.27 < n / 20000 < 0.33
     # different seed → different membership, similar rate
-    m = deterministic_sample(df, "id", 0.3, seed=2)
+    m = _sample(df, "id", 0.3, seed=2)
     assert 0.27 < m.count() / 20000 < 0.33
-    assert _ids(m) != _ids(deterministic_sample(df, "id", 0.3, seed=1))
+    assert _ids(m) != _ids(_sample(df, "id", 0.3, seed=1))
 
 
 def test_sample_nested_subsets(spark):
@@ -39,8 +41,8 @@ def test_sample_nested_subsets(spark):
     threshold on one hash): the 10% mix is a subset of the 50% mix —
     what makes mixture-ratio sweeps comparable between experiments."""
     df = spark.range(5000)
-    small = set(_ids(deterministic_sample(df, "id", 0.1, seed=3)))
-    big = set(_ids(deterministic_sample(df, "id", 0.5, seed=3)))
+    small = set(_ids(_sample(df, "id", 0.1, seed=3)))
+    big = set(_ids(_sample(df, "id", 0.5, seed=3)))
     assert small <= big
 
 
@@ -64,8 +66,6 @@ def test_stratified_mix_rates_and_default(spark):
 def test_rate_validation(spark):
     df = spark.range(10)
     with pytest.raises(ValueError):
-        deterministic_sample(df, "id", 1.5)
-    with pytest.raises(ValueError):
         stratified_mix(df, "id", {"x": -0.1}, key="id")
 
 
@@ -76,7 +76,7 @@ def test_null_keys_are_dropped_like_sql(spark):
     df = spark.createDataFrame(
         [(None,), ("a",), ("b",), ("c",)], "k string"
     )
-    out = deterministic_sample(df, "k", 1.0, seed=42)
+    out = _sample(df, "k", 1.0, seed=42)
     got = sorted(r["k"] for r in out.collect())
     assert None not in got and got == ["a", "b", "c"]
     assert stratified_mix(

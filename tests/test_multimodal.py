@@ -4,7 +4,6 @@ shapes, deterministic fake decode, frame fan-out, stubbed resize."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from nahuatl_data_pipeline_spark.operators.multimodal import (
     FEATURE_SCHEMA,
@@ -87,148 +86,3 @@ def test_resize_with_real_fn(media):
     rows = {r["media_id"]: r for r in resized.collect()}
     assert rows["m2"]["payload"] == b"payload-" and rows["m2"]["meta"]["width"] == 4
     assert rows["m3"]["payload"] is None and rows["m3"]["meta"]["height"] == 2
-
-
-def _png(w, h):
-    import struct
-    import zlib
-
-    ihdr = struct.pack(">II", w, h) + b"\x08\x02\x00\x00\x00"
-    chunk = b"IHDR" + ihdr
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + struct.pack(">I", len(ihdr)) + chunk
-        + struct.pack(">I", zlib.crc32(chunk) & 0xFFFFFFFF)
-    )
-
-
-def _jpeg(w, h):
-    import struct
-
-    # SOI + APP0 (JFIF) + SOF0 carrying the dimensions
-    app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
-    sof0 = b"\xff\xc0" + struct.pack(">H", 11) + b"\x08" + struct.pack(
-        ">HH", h, w
-    ) + b"\x01\x11\x00"
-    return b"\xff\xd8" + app0 + sof0
-
-
-def _gif(w, h):
-    import struct
-
-    return b"GIF89a" + struct.pack("<HH", w, h) + b"\x00" * 4
-
-
-def test_sniff_image_formats():
-    from nahuatl_data_pipeline_spark.operators.multimodal import sniff_image
-
-    assert sniff_image(_png(640, 480)) == ("image/png", 640, 480)
-    assert sniff_image(_jpeg(1024, 768)) == ("image/jpeg", 1024, 768)
-    assert sniff_image(_gif(32, 16)) == ("image/gif", 32, 16)
-    assert sniff_image(b"not an image at all") is None
-    assert sniff_image(None) is None
-    assert sniff_image(_png(640, 480)[:12]) is None  # truncated header
-
-
-def test_attach_sniffed_metadata(spark):
-    from nahuatl_data_pipeline_spark.operators.multimodal import (
-        attach_sniffed_metadata,
-    )
-
-    rows = [
-        ("a", _png(640, 480)),
-        ("b", _jpeg(1024, 768)),
-        ("c", b"\x00\x01garbage"),
-        ("d", None),
-    ]
-    df = spark.createDataFrame(rows, "media_id string, payload binary")
-    got = {
-        r["media_id"]: r["meta"].asDict()
-        for r in attach_sniffed_metadata(df).collect()
-    }
-    assert got["a"]["mime"] == "image/png"
-    assert (got["a"]["width"], got["a"]["height"]) == (640, 480)
-    assert got["b"]["mime"] == "image/jpeg"
-    assert (got["b"]["width"], got["b"]["height"]) == (1024, 768)
-    assert got["c"]["mime"] is None and got["c"]["width"] is None
-    assert got["d"]["mime"] is None
-    assert got["a"]["sha256"] is not None and got["d"]["sha256"] is None
-
-
-def test_sniff_jpeg_fill_bytes_and_corrupt_png():
-    from nahuatl_data_pipeline_spark.operators.multimodal import sniff_image
-
-    # JPEG with 0xFF fill padding before markers (spec-legal) must still
-    # parse; EOI-before-SOF must return None, not desync
-    body = _jpeg(320, 240)
-    padded = body[:2] + b"\xff\xff" + body[2:]
-    assert sniff_image(padded) == ("image/jpeg", 320, 240)
-    # EOI before any SOF — the EOI marker lands at offset 8, and the
-    # walk's `i + 9 < n` guard needs n >= 18 to inspect it, so pad with
-    # 12 bytes (4 was too few: the loop exited before the branch ran)
-    eoi_first = (
-        b"\xff\xd8" + b"\xff\xe0\x00\x04\x00\x00" + b"\xff\xd9" + b"\x00" * 12
-    )
-    assert sniff_image(eoi_first) is None
-
-    # PNG magic with a non-IHDR first chunk must return None, never
-    # garbage dimensions
-    bad = b"\x89PNG\r\n\x1a\n" + b"\x00\x00\x00\x0d" + b"JUNK" + b"\xff" * 16
-    assert sniff_image(bad) is None
-    # valid IHDR tag but garbage dims (u32 max) — must reject, not
-    # overflow the IntegerType metadata column downstream
-    bad_dims = b"\x89PNG\r\n\x1a\n" + b"\x00\x00\x00\x0d" + b"IHDR" + b"\xff" * 16
-    assert sniff_image(bad_dims) is None
-
-
-# ---------------------------------------------------------------------------
-# audio (WAV/RIFF) header sniffing
-# ---------------------------------------------------------------------------
-
-
-def _wav_bytes(rate=16000, channels=1, bits=16, n_samples=16000, lead_junk=False):
-    import struct
-
-    byte_rate = rate * channels * bits // 8
-    block_align = channels * bits // 8
-    data = b"\x00" * (n_samples * block_align)
-    fmt = struct.pack(
-        "<HHIIHH", 1, channels, rate, byte_rate, block_align, bits
-    )
-    chunks = b""
-    if lead_junk:
-        chunks += b"LIST" + struct.pack("<I", 4) + b"INFO"
-    chunks += b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"data" + struct.pack("<I", len(data)) + data
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-
-def test_sniff_audio_parses_wav_header():
-    from nahuatl_data_pipeline_spark.operators.multimodal import sniff_audio
-
-    got = sniff_audio(_wav_bytes(rate=44100, channels=2, n_samples=44100))
-    assert got == ("audio/wav", 44100, 2, 1000)
-
-
-def test_sniff_audio_walks_leading_chunks_and_rejects_garbage():
-    from nahuatl_data_pipeline_spark.operators.multimodal import sniff_audio
-
-    assert sniff_audio(_wav_bytes(lead_junk=True))[1] == 16000
-    assert sniff_audio(None) is None
-    assert sniff_audio(b"RIFFxxxxAVI ") is None
-    assert sniff_audio(b"\x89PNG\r\n\x1a\n" + b"\x00" * 20) is None
-
-
-def test_attach_audio_metadata_struct(spark):
-    from nahuatl_data_pipeline_spark.operators.multimodal import (
-        attach_audio_metadata,
-    )
-
-    rows = [(1, _wav_bytes()), (2, b"not audio"), (3, None)]
-    df = spark.createDataFrame(rows, "id: bigint, payload: binary")
-    out = {r["id"]: r["meta"] for r in attach_audio_metadata(df).collect()}
-    assert out[1]["sample_rate"] == 16000 and out[1]["channels"] == 1
-    assert out[1]["duration_ms"] == 1000
-    assert out[1]["modality"] == "audio" and out[1]["sha256"]
-    assert out[2]["mime"] is None
-    assert out[3]["mime"] is None

@@ -132,30 +132,6 @@ def test_dedup_key_null_and_case(spark):
     assert keys[0] == keys[1] == "hola|mundo|"
 
 
-def test_strip_html(spark):
-    from nahuatl_data_pipeline_spark.functions.normalize import strip_html
-
-    html = (
-        "<html><head><style>p{color:red}</style></head>"
-        "<body><p>Hola &amp; adiós</p><script>var x=1;</script>"
-        "<b>mundo</b>&nbsp;fin</body></html>"
-    )
-    df = spark.createDataFrame([(html,)], ["t"])
-    out = df.select(
-        F.trim(F.regexp_replace(strip_html("t"), r"\s+", " ")).alias("s")
-    ).collect()[0]["s"]
-    assert out == "Hola & adiós mundo fin"
-
-
-def test_strip_html_entity_decode_order(spark):
-    from nahuatl_data_pipeline_spark.functions.normalize import strip_html
-
-    out = apply_fn(spark, strip_html, ["x &amp;lt; y", "a &lt; b &amp; c"])
-    # '&amp;lt;' is the literal text '&lt;' — must NOT double-decode to '<'
-    assert out[0] == "x &lt; y"
-    assert out[1] == "a < b & c"
-
-
 def test_orthographic_central_handles_canonical_saltillo(spark):
     from nahuatl_data_pipeline_spark.functions.normalize import (
         normalize_saltillo,

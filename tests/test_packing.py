@@ -3,10 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from nahuatl_data_pipeline_spark.operators.packing import (
-    pack_sequences,
-    sequence_pieces,
-)
+from nahuatl_data_pipeline_spark.operators.packing import pack_sequences
 
 
 def _docs(spark, texts):
@@ -91,39 +88,6 @@ def test_seed_changes_order(spark):
 def test_invalid_seq_len(spark):
     with pytest.raises(ValueError):
         pack_sequences(_docs(spark, ["a"]), "doc_id", seq_len=0)
-
-
-def test_pieces_tile_sequences_exactly(spark):
-    texts = [" ".join(f"t{i}_{j}" for j in range(7)) for i in range(30)]
-    texts.append(None)
-    df = _docs(spark, texts)
-    packed = pack_sequences(df, "doc_id", seq_len=16)
-    pieces = sequence_pieces(packed, "doc_id", seq_len=16)
-
-    # per-document: pieces cover the doc's tokens contiguously
-    per_doc = (
-        pieces.groupBy("doc_id")
-        .agg(F.sum("piece_len").alias("s"), F.min("piece_begin").alias("b"))
-        .collect()
-    )
-    n_tok = {r["doc_id"]: r["n_tokens"] for r in packed.collect()}
-    for r in per_doc:
-        assert r["s"] == n_tok[r["doc_id"]]
-        assert r["b"] == 0
-
-    # per-sequence: every sequence except the last holds exactly seq_len
-    per_seq = sorted(
-        pieces.groupBy("seq_id").agg(F.sum("piece_len").alias("s")).collect(),
-        key=lambda r: r["seq_id"],
-    )
-    total = 30 * 7
-    assert [r["seq_id"] for r in per_seq] == list(range(len(per_seq)))
-    for r in per_seq[:-1]:
-        assert r["s"] == 16
-    assert per_seq[-1]["s"] == total - 16 * (len(per_seq) - 1)
-
-    # empty doc contributes no pieces
-    assert pieces.filter(F.col("doc_id") == 30).count() == 0
 
 
 # ---------------------------------------------------------------------------

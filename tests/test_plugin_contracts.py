@@ -152,45 +152,3 @@ def test_lid_fasttext_path_is_env_gated(tmp_path):
             load_lid_model(str(p))
     else:
         pytest.skip("fasttext installed; gated branch not reachable")
-
-
-def test_encoder_model_file_load_roundtrip(spark):
-    """The fixed-weight encoder artifact drives embed_text end to end:
-    weights come FROM THE FILE (different file ⇒ different vectors), and
-    vectors are unit-norm and deterministic across partitionings."""
-    import json
-
-    from nahuatl_data_pipeline_spark.functions.embeddings import (
-        embed_text,
-        load_encoder,
-    )
-
-    path = os.path.join(_FIXTURES, "encoder_8x32.json")
-    enc = load_encoder(path)
-    vecs = enc(["perro gato", "perro gato", "bird"])
-    assert vecs.shape == (3, 8)
-    assert np.allclose(np.linalg.norm(vecs, axis=1), 1.0)
-    assert np.allclose(vecs[0], vecs[1]) and not np.allclose(vecs[0], vecs[2])
-
-    df = spark.createDataFrame(
-        [(1, "perro gato"), (2, "bird"), (3, None)], "id long, text string"
-    )
-    rows = {
-        r["id"]: r["emb"]
-        for r in df.repartition(3)
-        .select("id", embed_text("text", dim=8, encode_fn=enc).alias("emb"))
-        .collect()
-    }
-    assert rows[3] is None
-    assert np.allclose(rows[1], vecs[0], atol=1e-9)
-    assert np.allclose(rows[2], vecs[2], atol=1e-9)
-
-    # corrupt shape fails loudly at load time, not mid-job
-    with open(path) as f:
-        raw = json.load(f)
-    raw["dim"] = 4
-    badp = os.path.join("/tmp", "bad_encoder.json")
-    with open(badp, "w") as f:
-        json.dump(raw, f)
-    with pytest.raises(ValueError, match="weights shape"):
-        load_encoder(badp)

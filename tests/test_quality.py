@@ -13,7 +13,6 @@ from nahuatl_data_pipeline_spark.operators.quality import (
     row_count,
     run_checks,
     unique_ratio,
-    validate_schema,
     values_in_set_ratio,
 )
 
@@ -94,12 +93,6 @@ def test_suite_is_single_pass(spark):
     plan = run_checks(_df(spark), checks)._jdf.queryExecution().optimizedPlan().toString()
     # a single aggregate node pair (partial+final appears as one logical Aggregate)
     assert plan.count("Aggregate") == 1, plan
-
-
-def test_validate_schema(spark):
-    df = _df(spark)
-    assert validate_schema(df, {"es", "nah", "source"})
-    assert not validate_schema(df, {"es", "nah"})
 
 
 # ---------------------------------------------------------------------------

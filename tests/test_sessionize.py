@@ -1,21 +1,13 @@
-"""Stateful streaming sessionization vs its batch equivalent."""
+"""Gap-based batch sessionization."""
 
 from __future__ import annotations
 
 import datetime
 
 import pytest
-from pyspark.sql import functions as F
 
-from nahuatl_data_pipeline_spark.streaming.incremental import (
-    EVENT_SCHEMA,
-    read_event_stream,
-    run_stream_to_memory,
-)
-from nahuatl_data_pipeline_spark.streaming.sessionize import (
-    sessionize_batch,
-    sessionize_stream,
-)
+from nahuatl_data_pipeline_spark.streaming.incremental import EVENT_SCHEMA
+from nahuatl_data_pipeline_spark.streaming.sessionize import sessionize_batch
 
 
 def _ts(h, m=0):
@@ -55,88 +47,6 @@ def test_batch_sessionization(spark, event_dir):
         (200, _ts(10, 30), _ts(10, 40), 2),
         (200, _ts(15, 0), _ts(15, 0), 1),
     ]
-
-
-def test_stream_emits_closed_sessions(spark, event_dir):
-    stream = sessionize_stream(
-        read_event_stream(spark, event_dir), gap="30 minutes", watermark="1 hours"
-    )
-    run_stream_to_memory(stream, "sess_test")
-    got = sorted(map(_key, spark.table("sess_test").collect()))
-    # every session CLOSED by a later same-user event must be emitted;
-    # each user's final session may stay open in state (no later event,
-    # timeout depends on watermark advance past end+gap)
-    batch = sorted(
-        map(_key, sessionize_batch(
-            spark.read.schema(EVENT_SCHEMA).parquet(event_dir), "30 minutes"
-        ).collect())
-    )
-    last_per_user = {
-        u: max(s for s in batch if s[0] == u) for u in {s[0] for s in batch}
-    }
-    must_emit = [s for s in batch if s != last_per_user[s[0]]]
-    assert [s for s in got if s in must_emit] == must_emit
-    assert set(got) <= set(batch)  # nothing invented
-
-
-class _StubState:
-    """Minimal GroupState double for unit-testing the session fn."""
-
-    def __init__(self):
-        self.exists = False
-        self.hasTimedOut = False
-        self._v = None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v, self.exists = tuple(v), True
-
-    def remove(self):
-        self._v, self.exists = None, False
-
-    def setTimeoutTimestamp(self, ms):
-        self.timeout_ms = ms
-
-
-def _feed(fn, state, ts_list):
-    import pandas as pd
-
-    pdf = pd.DataFrame({"ts": pd.to_datetime([t * 1_000_000 for t in ts_list], unit="us")})
-    return list(fn((100,), iter([pdf]), state))
-
-
-def test_late_in_gap_event_moves_session_start_back():
-    """A late cross-microbatch event inside the gap but EARLIER than the
-    open session's start must pull session_start back (batch = min(ts)),
-    not just bump n_events."""
-    from nahuatl_data_pipeline_spark.streaming.sessionize import _session_fn
-
-    fn = _session_fn(gap_us=1800 * 1_000_000)  # 30 min
-    state = _StubState()
-    _feed(fn, state, [36000, 36600])  # 10:00, 10:10 (seconds of day)
-    assert state.get == (36000 * 1_000_000, 36600 * 1_000_000, 2)
-    # microbatch 2: 09:55 arrives late, within gap of the open session
-    _feed(fn, state, [35700])
-    assert state.get == (35700 * 1_000_000, 36600 * 1_000_000, 3)
-
-
-def test_far_late_event_becomes_own_session_not_graft():
-    """A late event more than gap BEFORE the open session's start must not
-    merge into it (batch would make it a separate session)."""
-    from nahuatl_data_pipeline_spark.streaming.sessionize import _session_fn
-
-    fn = _session_fn(gap_us=1800 * 1_000_000)  # 30 min
-    state = _StubState()
-    _feed(fn, state, [43200])  # session opens at 12:00
-    # 10:30 arrives late: 90 min before start, far beyond the gap
-    out = _feed(fn, state, [37800])
-    assert state.get == (43200 * 1_000_000, 43200 * 1_000_000, 1)  # untouched
-    rows = out[0]
-    assert len(rows) == 1 and rows.iloc[0]["n_events"] == 1
-    assert rows.iloc[0]["session_start"].timestamp() % 86400 == 37800
 
 
 def test_gap_units_day_and_validation():

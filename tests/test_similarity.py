@@ -478,43 +478,6 @@ def test_embedding_covariance_skips_bad_vectors(spark):
         assert v == pytest.approx(want[i, j], abs=1e-6)
 
 
-def test_whiten_embeddings_identity_covariance(spark):
-    import numpy as np
-
-    from nahuatl_data_pipeline_spark.operators.similarity import (
-        whiten_embeddings,
-    )
-
-    # strongly correlated deterministic data
-    X = np.array(
-        [
-            [i % 11, (i % 11) * 3.0 + (i % 4), (i % 6) - 2.0 + (i % 11) * 0.5]
-            for i in range(200)
-        ],
-        dtype=np.float64,
-    )
-    df = _cov_df(spark, X.tolist(), 3)
-    out = whiten_embeddings(df, "vec_id", "embedding", 3, eps=1e-9)
-    W = np.asarray([r["whitened"] for r in out.collect()])
-    C = np.cov(W, rowvar=False)
-    assert np.allclose(C, np.eye(3), atol=1e-4), C
-
-
-def test_whiten_preserves_rows_and_mean_zero(spark):
-    import numpy as np
-
-    from nahuatl_data_pipeline_spark.operators.similarity import (
-        whiten_embeddings,
-    )
-
-    X = [[float(i), float(i % 3)] for i in range(30)]
-    df = _cov_df(spark, X, 2)
-    out = whiten_embeddings(df, "vec_id", "embedding", 2).collect()
-    assert len(out) == 30
-    W = np.asarray([r["whitened"] for r in out])
-    assert np.allclose(W.mean(axis=0), 0.0, atol=1e-9)
-
-
 def test_mahalanobis_outliers_finds_planted_outlier(spark):
     import numpy as np
 
@@ -681,3 +644,21 @@ def test_fixed_dim_cosine_nulls_rows_off_the_declared_dim(spark):
     }
     assert rows[1][0] is not None and rows[1][0] == rows[1][1]
     assert [rows[k][0] for k in (2, 3, 4, 5)] == [None] * 4
+
+
+def test_repeated_gated_calls_bound_persisted_storage(spark, emb):
+    """The broadcast gate's query-side pin rides the similarity cache
+    generation: N sequential calls hold at most one call's persisted
+    frame, and releasing the pool returns to the baseline."""
+    from nahuatl_data_pipeline_spark.operators.similarity import (
+        release_similarity_caches,
+    )
+
+    release_similarity_caches()  # start from a known state
+    jsc = spark.sparkContext._jsc.sc()
+    base = jsc.getPersistentRDDs().size()
+    for _ in range(3):
+        cosine_topk(emb, emb, k=3).count()
+    assert jsc.getPersistentRDDs().size() <= base + 1
+    release_similarity_caches()
+    assert jsc.getPersistentRDDs().size() <= base

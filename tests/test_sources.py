@@ -173,114 +173,6 @@ def test_source_registry_roundtrip(spark, tmp_path):
     assert statuses == {"s1": "Done", "s2": "Done", "s3": "Pending"}
 
 
-def test_jdbc_option_construction():
-    from nahuatl_data_pipeline_spark.sources.jdbc import (
-        IncrementalJdbcSource,
-        bulk_insert_options,
-    )
-
-    src = IncrementalJdbcSource(
-        url="jdbc:postgresql://h/db", table="t", watermark_col="updated_at"
-    )
-    opts = src.read_options("2024-01-01 00:00:00")
-    assert "\"updated_at\" > '2024-01-01 00:00:00'" in opts["dbtable"]
-    assert opts["driver"] == "org.postgresql.Driver"
-    # self-consistent dict: no partitionColumn without both bounds
-    assert "partitionColumn" not in opts and "lowerBound" not in opts
-    parted = src.read_options("2024-01-01 00:00:00", "2024-02-01 00:00:00")
-    assert parted["partitionColumn"] == "updated_at"
-    assert parted["lowerBound"] == "2024-01-01 00:00:00"
-    assert parted["upperBound"] == "2024-02-01 00:00:00"
-    sink = bulk_insert_options("jdbc:x", "t", dialect="oracle")
-    assert sink["driver"] == "oracle.jdbc.OracleDriver"
-
-
-def test_jdbc_watermark_literal_escapes_quotes():
-    from nahuatl_data_pipeline_spark.sources.jdbc import IncrementalJdbcSource
-
-    src = IncrementalJdbcSource(
-        url="jdbc:postgresql://h/db", table="t", watermark_col="updated_at"
-    )
-    q = src.query_for("2024-01-01' OR '1'='1")
-    # quotes doubled per the SQL standard: the literal stays one literal
-    assert "'2024-01-01'' OR ''1''=''1'" in q
-    assert "OR '1'='1'" not in q.replace("''", "")  # no bare injected clause
-
-
-def test_driver_registry_dispatch(spark):
-    from nahuatl_data_pipeline_spark.sources.drivers import (
-        DRIVER_REGISTRY,
-        ingest_source,
-    )
-
-    assert {"synthetic", "hf_generic", "http_verse"} <= set(DRIVER_REGISTRY)
-    df = ingest_source(spark, "synthetic", "seed://vocab", source_id="s1")
-    rows = df.collect()
-    assert len(rows) == 6  # 3 vocab × 2 templates
-    assert all(r["layer"] == "bronze" and r["origin_file"] == "seed://vocab" for r in rows)
-    assert any("xochitl" in (r["nah"] or "") for r in rows)
-
-
-def test_ingest_pending_isolates_failures(spark, tmp_path):
-    from nahuatl_data_pipeline_spark.sources.drivers import ingest_pending
-
-    registry = spark.createDataFrame(
-        [
-            ("s1", "seed://vocab", "synthetic", "Pending"),
-            ("s2", "hf://no-such-lib", "hf_generic", "Pending"),
-            ("s3", "seed://vocab", "synthetic", "Done"),
-        ],
-        "source_id string, source_url string, ingestion_driver string, ingestion_status string",
-    )
-    out, done, failed = ingest_pending(spark, registry)
-    assert done == ["s1"] and failed == ["s2"]  # s3 not Pending → skipped
-    assert out.count() == 6
-
-
-def test_unknown_driver_raises(spark):
-    import pytest
-
-    from nahuatl_data_pipeline_spark.sources.drivers import ingest_source
-
-    with pytest.raises(KeyError, match="unknown driver"):
-        ingest_source(spark, "nope", "x://y")
-
-
-def test_partitioned_incremental_load_requires_upper_bound(spark):
-    import pytest
-
-    from nahuatl_data_pipeline_spark.sources.jdbc import IncrementalJdbcSource
-
-    src = IncrementalJdbcSource(
-        url="jdbc:postgresql://h/db", table="t", watermark_col="updated_at"
-    )  # default num_partitions=8
-    with pytest.raises(ValueError, match="requires upper_bound"):
-        src.load(spark, "2024-01-01 00:00:00")
-
-
-def test_orc_roundtrip_with_pushdown(spark, tmp_path):
-    from nahuatl_data_pipeline_spark.sources.writers import read_orc, write_orc
-
-    df = spark.range(0, 100).select(
-        F.col("id"), (F.col("id") % 7).alias("grp"), F.lit("x").alias("pad")
-    )
-    path = str(tmp_path / "orc_out")
-    write_orc(df, path)
-    back = read_orc(spark, path)
-    assert back.count() == 100
-    assert sorted(back.columns) == ["grp", "id", "pad"]
-    # predicate pushdown reaches the ORC scan, same contract as parquet
-    plan = (
-        back.filter(F.col("id") > 90)
-        .select("id")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PushedFilters: [IsNotNull(id), GreaterThan(id,90)]" in plan
-    assert back.filter(F.col("id") > 90).count() == 9
-
-
 def test_write_splits_orc(spark, tmp_path):
     from nahuatl_data_pipeline_spark.sources.writers import write_splits
 
@@ -299,54 +191,6 @@ def test_write_splits_orc(spark, tmp_path):
     )
     assert "split=train" in scan or "PartitionFilters" in scan
     assert train.count() == 27
-
-
-def test_write_training_shards_keyed_stability(spark, tmp_path):
-    import glob
-
-    from nahuatl_data_pipeline_spark.sources.writers import write_training_shards
-
-    df = spark.range(0, 2000).select(
-        F.col("id").alias("doc_id"), F.concat(F.lit("doc "), F.col("id")).alias("text")
-    )
-    out_a, out_b = str(tmp_path / "sh_a"), str(tmp_path / "sh_b")
-    write_training_shards(df, out_a, num_shards=8, key="doc_id")
-    # same data reshuffled -> identical doc->shard assignment (hash, not
-    # partition position)
-    write_training_shards(df.repartition(13), out_b, num_shards=8, key="doc_id")
-
-    files_a = sorted(glob.glob(out_a + "/part-*"))
-    assert len(files_a) == 8
-    back = spark.read.parquet(out_a)
-    assert back.count() == 2000
-
-    def shard_of(path):
-        m = {}
-        for f in sorted(glob.glob(path + "/part-*")):
-            for r in spark.read.parquet(f).collect():
-                m[r["doc_id"]] = f.split("/")[-1].split("-")[1]
-        return m
-
-    assert shard_of(out_a) == shard_of(out_b)
-    # multinomial balance: no shard more than 2x the mean on 2000 rows
-    sizes = [spark.read.parquet(f).count() for f in files_a]
-    assert max(sizes) <= 2 * (2000 / 8)
-
-
-def test_write_training_shards_round_robin_exact_balance(spark, tmp_path):
-    import glob
-
-    from nahuatl_data_pipeline_spark.sources.writers import write_training_shards
-
-    # single input partition -> exact balance; multi-partition inputs
-    # round-robin independently and deviate by at most one per partition
-    df = spark.range(0, 100).coalesce(1).select(F.col("id").alias("doc_id"))
-    out = str(tmp_path / "sh_rr")
-    write_training_shards(df, out, num_shards=4)
-    sizes = sorted(
-        spark.read.parquet(f).count() for f in glob.glob(out + "/part-*")
-    )
-    assert sizes == [25, 25, 25, 25]
 
 
 def test_write_splits_scheme_agnostic(spark, tmp_path):

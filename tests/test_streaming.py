@@ -148,128 +148,6 @@ def test_stateless_curation_ops_compose_with_streams(spark, tmp_path):
     assert got == batch and len(got) == 2
 
 
-def test_stream_equals_batch_ohlc(spark, event_dir):
-    from nahuatl_data_pipeline_spark.operators.timeseries import ohlc_downsample
-    from nahuatl_data_pipeline_spark.streaming.incremental import ohlc_stream
-
-    stream = ohlc_stream(read_event_stream(spark, event_dir))
-    run_stream_to_memory(stream, "ohlc_test", output_mode="complete")
-    got = sorted(map(tuple, spark.table("ohlc_test").collect()))
-
-    # CROSS-OPERATOR parity: a backfill with the BATCH operator must
-    # produce byte-identical bars (same contract, layout, no rounding)
-    backfill = ohlc_downsample(
-        spark.read.schema(EVENT_SCHEMA).parquet(event_dir),
-        ts="ts", value="value", by=["event_type"],
-        width="1 hour", tiebreak=["event_id"],
-    ).select("event_type", "bar_ts", "open", "high", "low", "close", "volume")
-    assert got == sorted(map(tuple, backfill.collect())) and len(got) >= 3
-    # fixture hour 10 has clicks 1.0@10:00 then 2.0@10:30:
-    # open=1.0 close=2.0 high=2.0 low=1.0
-    bars = {(r[1].hour, r[0]): r for r in spark.table("ohlc_test").collect()}
-    b = bars[(10, "click")]
-    assert (b["open"], b["high"], b["low"], b["close"], b["volume"]) == (
-        1.0, 2.0, 1.0, 2.0, 2
-    )
-
-
-def test_stream_cms_equals_batch_sketch(spark, tmp_path):
-    """Streaming CMS accumulation (cell-wise merge per micro-batch) must
-    be BIT-IDENTICAL to one batch cms_build over the same rows — the
-    mergeability contract that makes the sketch valid streaming state."""
-    from nahuatl_data_pipeline_spark.operators.sketches import cms_build
-    from nahuatl_data_pipeline_spark.streaming.sketch_sink import (
-        CmsAccumulator,
-    )
-
-    rows = [
-        (i, _ts(10 + i % 3), 100 + i, f"type{i % 7}", float(i), None)
-        for i in range(200)
-    ]
-    path = str(tmp_path / "cms_events")
-    spark.createDataFrame(rows, EVENT_SCHEMA).repartition(4).write.parquet(
-        path
-    )
-
-    acc = CmsAccumulator("event_type", width=256, depth=3)
-    stream = read_event_stream(spark, path, max_files_per_trigger=1)
-    q = (
-        stream.writeStream.foreachBatch(acc.merge_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert acc.batches_merged > 1  # actually exercised the merge path
-
-    batch = {
-        (r["row"], r["bucket"]): r["cnt"]
-        for r in cms_build(
-            spark.read.parquet(path), "event_type", width=256, depth=3
-        ).collect()
-    }
-    assert acc.cells == batch
-
-    # accumulated sketch is a drop-in for cms_estimate
-    from nahuatl_data_pipeline_spark.operators.sketches import cms_estimate
-
-    keys = spark.createDataFrame([(f"type{i}",) for i in range(7)], ["k"])
-    est = {
-        r["k"]: r["cms_estimate"]
-        for r in cms_estimate(
-            acc.to_df(spark), keys, "k", width=256, depth=3
-        ).collect()
-    }
-    import collections
-
-    true = collections.Counter(f"type{i % 7}" for i in range(200))
-    assert all(est[k] >= true[k] for k in true)  # one-sided error holds
-
-
-def test_minwise_accumulator_stream_equals_one_batch(spark, tmp_path):
-    """Streaming minwise state after the whole stream == the one-batch
-    sketch, bit for bit — MIN merges are order-independent."""
-    from nahuatl_data_pipeline_spark.operators.sketches import (
-        minwise_overlap,
-        minwise_sketch,
-    )
-    from nahuatl_data_pipeline_spark.streaming.sketch_sink import (
-        MinwiseAccumulator,
-    )
-
-    rows = [
-        (i, _ts(10 + i % 3), 100 + i % 37, f"type{i % 7}", float(i), None)
-        for i in range(200)
-    ]
-    path = str(tmp_path / "minwise_events")
-    spark.createDataFrame(rows, EVENT_SCHEMA).repartition(4).write.parquet(
-        path
-    )
-
-    acc = MinwiseAccumulator("user_id", k=16)
-    stream = read_event_stream(spark, path, max_files_per_trigger=1)
-    q = (
-        stream.writeStream.foreachBatch(acc.merge_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert acc.batches_merged > 1
-
-    batch = {
-        r["i"]: r["h"]
-        for r in minwise_sketch(
-            spark.read.parquet(path), "user_id", k=16
-        ).collect()
-    }
-    assert acc.mins == batch
-
-    # accumulated sketch is a drop-in for minwise_overlap
-    sk = acc.to_df(spark)
-    est = minwise_overlap(sk, sk, k=16).collect()[0]
-    assert est["est_jaccard"] == 1.0
-    assert 0.3 * 37 <= est["est_a"] <= 3 * 37  # k=16: loose belt
-
-
 def test_token_window_chunks_composes_with_streams(spark, tmp_path):
     """token_window_chunks is a stateless row-local explode, so the SAME
     operator runs unchanged on a readStream — the streaming shape of a
