@@ -9,7 +9,8 @@ aggregation), re-expressed as lazy DataFrame plans that Catalyst can optimize.
 Design stance (SURVEY.md §7):
 - every operator is a composable ``DataFrame -> DataFrame`` function;
 - built-in ``pyspark.sql.functions`` everywhere (JVM-side, codegen-friendly);
-- Arrow-vectorized ``pandas_udf`` only where no builtin exists (Unicode NFC);
+- Arrow-vectorized ``pandas_udf`` only where no builtin expresses the work
+  (n-gram shingling, chunk packing); Unicode NFC is ICU4J via ``reflect``;
 - no RDDs, no driver-side collect loops in any operator.
 """
 

@@ -1,9 +1,9 @@
 """Column-level function library (SURVEY.md §2.9, §2.10 heuristics).
 
 All functions are ``Column -> Column`` (or return Columns), so they compose
-inside a single ``select`` and stay in whole-stage codegen. The only Python
-boundary is Unicode NFC (Arrow-vectorized pandas_udf) — everything else is
-JVM-side.
+inside a single ``select``. The text-normalization chain is JVM-side
+end to end: Unicode NFC is a static ICU4J call through ``reflect``, every
+other rule a built-in expression in whole-stage codegen.
 """
 
 from nahuatl_data_pipeline_spark.functions.normalize import (  # noqa: F401

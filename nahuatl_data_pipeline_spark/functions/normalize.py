@@ -4,17 +4,15 @@ Composition order matters and mirrors the reference
 (``normalizers.py:65-110``): strip → NFC → language-specific rules →
 whitespace collapse. Every rule except NFC is a built-in Spark expression
 (``regexp_replace``/``translate``/``trim``), so the normalization of a
-100 TB corpus runs entirely inside whole-stage codegen. NFC has no JVM
-builtin; it is the one Arrow-vectorized pandas_udf in the hot path and is
-deliberately swappable (SURVEY.md §4 — a native Expression is the only
-performance escalation ever needed).
+100 TB corpus runs entirely inside whole-stage codegen. NFC has no Spark
+builtin; it is a static ICU4J call through the built-in ``reflect``
+(ICU4J ships with Spark), so the whole chain stays on the JVM.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 ColumnOrName = Column | str
 
@@ -25,23 +23,36 @@ def _col(c: ColumnOrName) -> Column:
 
 # --- F1: Unicode NFC (normalizers.py:43-63) --------------------------------
 
-_NFC_FORMS = ("NFC", "NFD", "NFKC", "NFKD")
+# form -> (static ``com.ibm.icu.text.Normalizer`` method, compat flag)
+_NFC_FORMS = {
+    "NFC": ("compose", False),
+    "NFD": ("decompose", False),
+    "NFKC": ("compose", True),
+    "NFKD": ("decompose", True),
+}
 
 
 def nfc_normalize(c: ColumnOrName, form: str = "NFC") -> Column:
     """Unicode normalization; default NFC preserves macrons (ā ē ī ō ū).
 
-    Arrow-batched pandas_udf: the per-batch cost is one vectorized
-    ``Series.str.normalize`` call, not a per-row Python roundtrip.
+    One static ICU4J call per non-NULL value, no Python worker. Catalyst
+    never de-duplicates it (``reflect`` is nondeterministic), so a caller
+    reading the result twice should project it once first.
+
+    Stated divergence from Python's ``unicodedata``: ICU 77 implements
+    Unicode 16, Python 3.11 Unicode 14. Over U+0080–U+2FFFF they differ
+    on exactly 20 code points, where ICU composes a canonical
+    decomposition that Python leaves decomposed: Todhri U+105C9/U+105E4,
+    Tulu-Tigalari U+11383/85/8E/91/C5/C7/C8 (U+11382 U+113C9 → U+11383),
+    Gurung Khema U+16121–16128 and Kirat Rai U+16D68–16D6A. No Latin,
+    Náhuatl or Maya character is affected.
     """
     if form not in _NFC_FORMS:
-        raise ValueError(f"form must be one of {_NFC_FORMS}, got {form!r}")
-
-    @F.pandas_udf(StringType())
-    def _nfc(s):  # pandas Series[str] -> Series[str]
-        return s.str.normalize(form)
-
-    return _nfc(_col(c))
+        raise ValueError(f"form must be one of {tuple(_NFC_FORMS)}, got {form!r}")
+    method, compat = _NFC_FORMS[form]
+    c = _col(c)
+    icu = F.lit("com.ibm.icu.text.Normalizer")
+    return F.when(c.isNotNull(), F.reflect(icu, F.lit(method), c, F.lit(compat)))
 
 
 # --- F2-F4: generic cleanup (cleaning.py, normalizers.py:108) --------------
@@ -176,7 +187,6 @@ def normalize_text(
     c: ColumnOrName,
     lang: str | None = None,
     *,
-    nfc: bool = True,
     strip_urls: bool = False,
     strip_page_artifacts: bool = False,
     fix_encoding: bool = False,
@@ -193,14 +203,14 @@ def normalize_text(
     sources arrive clean, and both stages are pure codegen so the
     opt-in costs nothing when unused.
 
-    ``nfc=False`` keeps the plan 100% JVM-side (useful when input is known
-    pre-composed, e.g. re-normalization passes).
+    The last step is :func:`empty_to_null` as ``nullif`` (the collapsed
+    text is already trimmed): Spark projects a ``nullif`` argument once,
+    where the ``CASE`` form would run the whole chain twice, NFC included.
     """
     out = _col(c)
     if fix_encoding:
         out = clean_invisible(fix_mojibake(out))
-    if nfc:
-        out = nfc_normalize(out)
+    out = nfc_normalize(out)
     if strip_urls:
         out = remove_urls(out)
     if strip_page_artifacts:
@@ -209,7 +219,7 @@ def normalize_text(
         if lang not in _LANG_RULES:
             raise ValueError(f"unknown lang {lang!r}; expected {sorted(_LANG_RULES)}")
         out = _LANG_RULES[lang](out)
-    return empty_to_null(collapse_whitespace(out))
+    return F.nullif(collapse_whitespace(out), F.lit(""))
 
 
 # ---------------------------------------------------------------------------

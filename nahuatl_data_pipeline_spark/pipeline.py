@@ -9,7 +9,8 @@ here the whole run is ONE lazy DataFrame chain
 
 so Catalyst fuses the narrow stages and the only shuffles are the dedup
 window and the split ranking (§3.1 "Spark shape"). Stage counts for run
-metadata come from a single post-write aggregate, not per-stage actions.
+metadata come from observations on the one write job, not per-stage
+actions or a read-back.
 """
 
 from __future__ import annotations
@@ -33,8 +34,7 @@ from nahuatl_data_pipeline_spark.sources.writers import write_splits
 @dataclass
 class PipelineConfig:
     """Mirrors the reference's pydantic Settings (src/utils/config.py):
-    seed/ratios (``:72-93``), length bounds (``:96-105``), NFC form
-    (``:120-123``)."""
+    seed/ratios (``:72-93``), length bounds (``:96-105``)."""
 
     seed: int = 42
     ratios: dict[str, float] = field(
@@ -42,7 +42,6 @@ class PipelineConfig:
     )
     min_length: int = 3
     max_length: int = 1000
-    nfc: bool = True
     keep: str = "best"
     lang_cols: tuple[str, ...] = ("es", "nah", "myn")
     # crawl-feed hygiene (functions/normalize.py: fix_mojibake →
@@ -80,7 +79,6 @@ def normalize_records(
                 normalize_text(
                     F.col(lang),
                     lang=lang,
-                    nfc=cfg.nfc,
                     fix_encoding=cfg.fix_encoding,
                 ),
             )
@@ -194,7 +192,15 @@ def run_corpus_pipeline(
             ratios=cfg.ratios,
             seed=cfg.seed,
         )
-        write_splits(split, out_dir)
+        # per-split counts ride the write job, like n_input
+        split_obs = Observation()
+        write_splits(
+            split.observe(
+                split_obs,
+                *[F.count_if(F.col("split") == k).alias(k) for k in cfg.ratios],
+            ),
+            out_dir,
+        )
         try:
             n_input = obs.get["n_input"]
         except Exception:
@@ -202,15 +208,8 @@ def run_corpus_pipeline(
             # task, so the observation has no row — count directly (cheap
             # exactly when this happens)
             n_input = raw.count()
-
-        # one aggregate over the written data for all output stats; the
-        # explicit schema keeps an all-filtered (zero-file) gold dir
-        # readable instead of failing schema inference
-        gold = spark.read.schema(split.schema).parquet(out_dir)
-        per_split = {
-            r["split"]: r["n"]
-            for r in gold.groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
+        # an empty observation means nothing was written either
+        per_split = {k: n for k, n in split_obs.get.items() if n}
         n_output = sum(per_split.values())
         stats = {
             "input": n_input,
@@ -242,7 +241,10 @@ def run_corpus_pipeline(
             if track_details:
                 # v2's full audit trail (unify_v2.py) — extra actions, so
                 # opt-in: dedup log, unicode preservation stats on the
-                # written gold data, and a content-checksummed snapshot
+                # written gold data, and a content-checksummed snapshot.
+                # The explicit schema keeps an all-filtered (zero-file)
+                # gold dir readable instead of failing schema inference.
+                gold = spark.read.schema(split.schema).parquet(out_dir)
                 metadata_store.log_dedup(
                     run_id, cfg.keep, before=n_input, after=n_output
                 )

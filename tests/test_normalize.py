@@ -4,6 +4,8 @@ saltillo, vowel runs, typography)."""
 
 from __future__ import annotations
 
+import unicodedata
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -91,6 +93,27 @@ def test_nfc_normalize_composes(spark):
     decomposed = "ā"
     out = apply_fn(spark, nfc_normalize, [decomposed, "ā"])
     assert out == ["ā", "ā"]
+
+    # every form agrees with unicodedata: NULL, empty, decomposed and
+    # precomposed macron vowels, saltillo, Maya ejective, Spanish
+    # punctuation, Hangul (composed and as jamo), and the ﬁ ligature
+    # that only the K forms expand
+    samples = [
+        None, "",
+        unicodedata.normalize("NFD", "āēīōū"), "āēīōū",
+        "tlaʼtolli", "k'iin", "ñ ¿ ¡",
+        "한국어", unicodedata.normalize("NFD", "한국어"), "ﬁn",
+    ]
+    for form in ("NFC", "NFD", "NFKC", "NFKD"):
+        out = apply_fn(spark, lambda c, f=form: nfc_normalize(c, form=f), samples)
+        want = [None if s is None else unicodedata.normalize(form, s) for s in samples]
+        assert out == want, form
+    assert apply_fn(spark, nfc_normalize, ["ﬁ"]) == ["ﬁ"]
+    assert apply_fn(spark, lambda c: nfc_normalize(c, form="NFKC"), ["ﬁ"]) == ["fi"]
+
+    # the stated divergence: ICU implements a newer Unicode than
+    # unicodedata and composes Tulu-Tigalari U+11382 U+113C9 to U+11383
+    assert apply_fn(spark, nfc_normalize, ["\U00011382\U000113C9"]) == ["\U00011383"]
 
 
 def test_nfc_rejects_bad_form():

@@ -228,3 +228,47 @@ def test_corpus_pipeline_cap_without_url_col_raises(spark, tmp_path):
             str(tmp_path / "gold_guard"),
             PipelineConfig(max_docs_per_domain=5),
         )
+
+
+# Measured on a 4-vCPU host for the warm op below, at local[2], local[4]
+# and local[8]: 6 jobs, against 8 when the split counts were read back
+# from the gold dir in two more jobs. The bound sits between the two.
+_CORPUS_OP_MAX_JOBS = 7
+
+
+def test_corpus_op_runs_on_the_jvm_within_a_job_budget(
+    spark, layer_dirs, tmp_path, monkeypatch
+):
+    """A warm corpus op hands ``write_splits`` a plan with no Python
+    worker stage that normalizes each language value once, and stays
+    within a job budget."""
+    from nahuatl_data_pipeline_spark import pipeline
+
+    written = []
+    write_splits = pipeline.write_splits
+
+    def capture(df, out_dir, *args, **kwargs):
+        written.append(df)
+        return write_splits(df, out_dir, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "write_splits", capture)
+    cfg = PipelineConfig(min_length=2)
+    out = str(tmp_path / "gold")
+    cold = run_corpus_pipeline(spark, layer_dirs, out, cfg)
+    sc = spark.sparkContext
+    group = "corpus-op-budget"
+    sc.setJobGroup(group, "one warm corpus op")
+    try:
+        warm = run_corpus_pipeline(spark, layer_dirs, out, cfg)
+    finally:
+        sc.setJobGroup(None, None)
+    assert warm == cold and warm["output"] == 43
+
+    qe = written[-1]._jdf.queryExecution()
+    plan = qe.optimizedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    # NFC runs once per language value on each read of the input
+    executed = qe.executedPlan().toString()
+    assert executed.count("reflect(") == 3 * executed.count("Union")
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= _CORPUS_OP_MAX_JOBS, f"{len(jobs)} jobs"
