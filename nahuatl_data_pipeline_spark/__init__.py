@@ -10,7 +10,8 @@ Design stance (SURVEY.md §7):
 - every operator is a composable ``DataFrame -> DataFrame`` function;
 - built-in ``pyspark.sql.functions`` everywhere (JVM-side, codegen-friendly);
 - Arrow-vectorized ``pandas_udf`` only where no builtin expresses the work
-  (n-gram shingling, chunk packing); Unicode NFC is ICU4J via ``reflect``;
+  (chunk packing); Unicode NFC is ICU4J via ``reflect``, n-gram shingling
+  one ``regexp_extract_all``;
 - no RDDs, no driver-side collect loops in any operator.
 """
 

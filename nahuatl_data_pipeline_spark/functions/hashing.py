@@ -13,13 +13,11 @@ generation oracle-checkable, unlike seeded ``pyspark.ml`` MinHashLSH
 
 from __future__ import annotations
 
-import re
-
-import pandas as pd
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StringType
+
+from nahuatl_data_pipeline_spark.functions.normalize import collapse_whitespace
+from nahuatl_data_pipeline_spark.functions.text_analysis import tokens
 
 ColumnOrName = Column | str
 
@@ -36,58 +34,45 @@ def content_id(*cols: ColumnOrName, length: int = 16, sep: str = "_") -> Column:
     )
 
 
-# THE whitespace class: Java regex \s ≡ RE2 \s ≡ re.ASCII \s — shared by
-# every tokenizer path (expression, oracle, and the pandas_udf below)
-_ASCII_WS = re.compile(r"\s+", re.ASCII)
-
-
 def token_set(c: ColumnOrName, lowercase: bool = True) -> Column:
     """Distinct whitespace tokens (deduplication.py:15 tokenization)."""
+    return F.array_distinct(tokens(F.lower(_col(c)) if lowercase else c))
+
+
+def word_ngrams(c: ColumnOrName, n: int, lowercase: bool = True) -> Column:
+    """Word n-gram occurrences as array<string>, in order and with
+    repeats; NULL text gives an empty array. One built-in expression:
+    :func:`collapse_whitespace`, then a regex match anchored at the
+    start or at a space captures the next n tokens in a lookahead,
+    so matches step one token at a time and overlap. The anchor
+    consumes the space: a zero-width lookbehind would also match between
+    the two halves of a surrogate pair, which Java's matcher steps into,
+    and emit an n-gram starting mid-character for any token that begins
+    outside the BMP.
+
+    Identity with the Python reference (``re.split(r"\\s+", t,
+    flags=re.ASCII)``, empties dropped, n-token windows space-joined):
+    Java ``\\s`` is the same ASCII class, so NBSP and ideographic space
+    stay inside a token as in every SQL oracle. Spark's ``lower``
+    differs from Python 3.11's ``str.lower`` only on the 27 capitals
+    Unicode 16 added a lowercase for (Cyrillic U+1C89, Latin
+    Extended-D U+A7CB/A7CC/A7DA/A7DC, Garay U+10D50–U+10D65), none of
+    them used in Náhuatl, Spanish or Maya text."""
     base = F.lower(_col(c)) if lowercase else _col(c)
-    return F.array_distinct(
-        F.filter(F.split(F.trim(base), r"\s+"), lambda t: t != "")
+    window = "(?:^| )(?=(" + " ".join(["[^ ]+"] * n) + "))"
+    return F.coalesce(
+        F.regexp_extract_all(collapse_whitespace(base), F.lit(window), 1),
+        F.array().cast("array<string>"),
     )
 
 
 def word_shingles(c: ColumnOrName, n: int = 3, lowercase: bool = True) -> Column:
-    """n-gram word shingles as array<string> (distinct, first-occurrence
-    order; order is irrelevant downstream — min/intersect/union only).
-
-    n > 1 runs as an Arrow-batched pandas_udf: the pure-expression
-    formulation (transform over a sequence of offsets + slice + concat_ws)
-    is a nested higher-order function, which Spark evaluates INTERPRETED —
-    measured ~1.7 ms/doc vs ~0.1 ms/doc through Arrow. Tokenization is
-    an ASCII ``\\s+`` regex split (``re.ASCII``), NOT str.split(): Java
-    regex ``\\s`` and DuckDB/RE2 ``\\s`` are both the ASCII class
-    ``[ \\t\\n\\v\\f\\r]``, while str.split() also breaks on Unicode
-    whitespace (NBSP, ideographic space…) — a crawl doc containing one
-    would give this path a different token stream than every expression
-    path and every SQL oracle. One class definition across all three.
-    """
+    """n-gram word shingles as array<string>: the distinct
+    :func:`word_ngrams`, first-occurrence order (order is irrelevant
+    downstream — min/intersect/union only)."""
     if n == 1:
         return token_set(c, lowercase=lowercase)
-
-    ws = _ASCII_WS
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def _shingle(s: pd.Series) -> pd.Series:
-        def one(t):
-            if t is None:
-                return []
-            tk = [
-                x for x in ws.split(t.lower() if lowercase else t) if x
-            ]
-            if len(tk) < n:
-                return []
-            return list(
-                dict.fromkeys(
-                    " ".join(tk[i : i + n]) for i in range(len(tk) - n + 1)
-                )
-            )
-
-        return s.map(one)
-
-    return _shingle(_col(c))
+    return F.array_distinct(word_ngrams(c, n, lowercase))
 
 
 # Mersenne prime 2^31 − 1: (A·h + B) mod P stays under 2^62, so every

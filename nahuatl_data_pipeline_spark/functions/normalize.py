@@ -74,9 +74,9 @@ def remove_page_artifacts(c: ColumnOrName) -> Column:
 
 
 def empty_to_null(c: ColumnOrName) -> Column:
-    """Strip, then empty-string → NULL (schemas.py:144-159)."""
-    t = F.trim(_col(c))
-    return F.when(t == "", F.lit(None).cast("string")).otherwise(t)
+    """Strip, then empty-string → NULL (schemas.py:144-159); ``nullif``
+    projects the stripped value once."""
+    return F.nullif(F.trim(_col(c)), F.lit(""))
 
 
 # --- F5-F7: Náhuatl rules (normalizers.py:136-153) -------------------------
@@ -203,9 +203,9 @@ def normalize_text(
     sources arrive clean, and both stages are pure codegen so the
     opt-in costs nothing when unused.
 
-    The last step is :func:`empty_to_null` as ``nullif`` (the collapsed
-    text is already trimmed): Spark projects a ``nullif`` argument once,
-    where the ``CASE`` form would run the whole chain twice, NFC included.
+    The last step is ``nullif`` as in :func:`empty_to_null` (the
+    collapsed text is already trimmed), so the chain runs once per
+    value, NFC included.
     """
     out = _col(c)
     if fix_encoding:

@@ -1,9 +1,10 @@
 """Spread a narrow input across the cluster before an expensive
-Arrow/pandas stage.
+per-row stage.
 
 A corpus that arrives as a handful of scan splits (small files, a
 filtered union) would run the family's dominant per-row cost — the
-shingling / row-stats / matmul pandas_udf — on that handful of cores.
+shingling regex, the row-stats / matmul pandas_udf — on that handful
+of cores.
 One narrow round-robin exchange buys full parallelism for everything
 downstream; a no-op whenever the input already has >=
 defaultParallelism partitions. Downstream consumers are content-keyed

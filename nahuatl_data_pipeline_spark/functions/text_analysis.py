@@ -28,7 +28,13 @@ _WS = r"\s+"
 
 
 def tokens(c: ColumnOrName) -> Column:
-    """``array<string>`` of whitespace tokens; empty strings removed."""
+    r"""``array<string>`` of whitespace tokens; empty strings removed.
+
+    THE tokenization expression (trim + ``\s+`` split) of every
+    Spark-side token path — term-level operators, curation gates and
+    registry queries; callers that lowercase pass ``F.lower(c)``. One
+    definition, so vocabularies cannot drift between operators or from
+    their SQL oracles."""
     return F.filter(F.split(F.trim(_col(c)), _WS), lambda t: t != "")
 
 

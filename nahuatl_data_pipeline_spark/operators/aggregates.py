@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from nahuatl_data_pipeline_spark.functions.text_analysis import macron_count
+from nahuatl_data_pipeline_spark.functions.text_analysis import macron_count, tokens
 
 
 def language_counts(
@@ -97,9 +97,7 @@ def type_token_ratio(df: DataFrame, col: str, group_by: str | None = None) -> Da
     """
     tok = df.select(
         *( [F.col(group_by)] if group_by else [] ),
-        F.explode(
-            F.filter(F.split(F.trim(F.col(col)), r"\s+"), lambda t: t != "")
-        ).alias("token"),
+        F.explode(tokens(col)).alias("token"),
     )
     aggs = [
         F.count("token").cast("long").alias("n_tokens"),

@@ -15,9 +15,10 @@ corpus build needs (they ship alongside the dedup family as first-class
   terminal punctuation, no code braces, no boilerplate phrases,
   minimum length.
 
-All three are pure DataFrame ops: tokenization via split/filter,
-counting via explode + two-level groupBy (map-side partial agg), rules
-via codegen string predicates. No Python UDFs anywhere.
+All three are pure DataFrame ops: tokenization and shingling via
+built-in split/regex expressions, counting via explode + two-level
+groupBy (map-side partial agg), rules via codegen string predicates.
+No Python UDFs anywhere.
 """
 
 from __future__ import annotations
@@ -27,14 +28,7 @@ from pyspark.sql import functions as F
 
 from nahuatl_data_pipeline_spark.functions.hashing import hash60, word_shingles
 from nahuatl_data_pipeline_spark.functions.spread import spread_narrow
-
-_WS = r"\s+"
-
-
-def _token_array(text_col: str):
-    return F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), _WS), lambda t: t != ""
-    )
+from nahuatl_data_pipeline_spark.functions.text_analysis import tokens
 
 
 def repetition_signals(
@@ -56,8 +50,9 @@ def repetition_signals(
     the doc id with map-side combine. Thresholds default to Gopher's
     published cutoffs; tune per corpus.
     """
+    tk = tokens(F.lower(F.col(text_col)))
     base = (
-        df.select(F.col(id_col).alias("id"), _token_array(text_col).alias("tk"))
+        df.select(F.col(id_col).alias("id"), tk.alias("tk"))
         .filter(F.size("tk") >= 2)
     )
 
@@ -144,7 +139,7 @@ def contamination_flags(
     2× the shuffle width.
     """
     sh = word_shingles(text_col, n=n)
-    # spread a narrow train input before the shingling pandas_udf (the
+    # spread a narrow train input before the per-row shingling regex (the
     # _signature_bands pattern; no-op at >= defaultParallelism splits)
     train = spread_narrow(train)
     tr = train.select(F.col(id_col).alias("id"), F.explode(sh).alias("s")).select(
@@ -182,7 +177,7 @@ def c4_rule_flags(
     bad = F.lit(False)
     for p in bad_phrases:
         bad = bad | lower.contains(p)
-    n_words = F.size(_token_array(text_col)).cast("long")
+    n_words = F.size(tokens(lower)).cast("long")
     ends = t.rlike(r'[.!?"]\s*$')
     brace = t.contains("{") | t.contains("}")
     return df.select(

@@ -26,18 +26,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from nahuatl_data_pipeline_spark.functions.text_analysis import tokens
+
+
 def _counts(df: DataFrame, text_col: str, name: str) -> DataFrame:
-    """Corpus token counts — the same tokenization contract as
-    operators/tfidf.py:tokenize (trim + lowercase + ``\\s+`` split),
-    but id-free: drift needs only the terms, so a corpus without a
-    document-id column is fine."""
+    """Corpus token counts of the lowercased text through the shared
+    tokenizer (functions/text_analysis.py:tokens), like
+    operators/tfidf.py:tokenize but id-free: drift needs only the
+    terms, so a corpus without a document-id column is fine."""
     return (
-        df.select(
-            F.explode(
-                F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-            ).alias("term")
-        )
-        .filter(F.col("term") != "")
+        df.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias(name))
     )

@@ -54,7 +54,7 @@ LAST_STATS: dict[str, int] = {}
 # CacheManager matches cached plans by canonical form, so if call N+1
 # persists a plan identical to call N's (same corpus, same params) and
 # THEN unpersists call N's handle, the shared cache entry dies and call
-# N+1 executes fully uncached — with the shingle pandas_udf recomputed
+# N+1 executes fully uncached — with the per-row shingling recomputed
 # per join leg (measured: 14 s → 78 s on back-to-back sf1 q38 runs).
 # Persisted frames are also materialized EAGERLY (a count) before being
 # wired into self-joins: two legs of one job racing to populate a lazy
@@ -217,8 +217,8 @@ def _signature_bands(
     band explode over cached rows. Eager (count) per the module's
     racing-legs contract.
 
-    Shingling via nested array lambdas is interpreted (no codegen) and
-    costs ~1 ms/doc — computed ONCE and cached; every downstream leg
+    Shingling is the family's dominant per-row cost (a regex pass over
+    every doc's text) — computed ONCE and cached; every downstream leg
     (signatures + both Jaccard sides) reuses it. Signatures come from
     EXPLODED shingles: md5+hex-parse runs once per token inside
     whole-stage codegen, and the k components are k cheap integer mins
@@ -228,7 +228,7 @@ def _signature_bands(
 
     ``persist_shd=False`` skips the persist AND its eager-count job:
     right for a side known to be small (a broadcast eval suite), where
-    re-running the Arrow shingling per consuming leg costs less than a
+    re-running the shingling per consuming leg costs less than a
     dedicated materialization job (r13 — the q157 eval side).
     """
     from nahuatl_data_pipeline_spark.functions.hashing import (
@@ -238,14 +238,14 @@ def _signature_bands(
     )
 
     n_bands = num_hashes // band_size
-    # Spread a narrow input before the Arrow shingling: a corpus that
+    # Spread a narrow input before the shingling: a corpus that
     # arrives as a handful of scan splits (small files, a filtered
-    # union) would run the pandas_udf — the family's dominant per-row
-    # cost — on that handful of cores. One narrow (id, text) round-robin
-    # exchange buys full parallelism for the shingling, the signature
-    # aggregate and both verify legs reading the cache; a no-op whenever
-    # the input already has >= defaultParallelism partitions (the
-    # similarity.py cosine-pairs pattern). Everything downstream is
+    # union) would run the shingling regex — the family's dominant
+    # per-row cost — on that handful of cores. One narrow (id, text)
+    # round-robin exchange buys full parallelism for the shingling, the
+    # signature aggregate and both verify legs reading the cache; a
+    # no-op whenever the input already has >= defaultParallelism
+    # partitions (the similarity.py cosine-pairs pattern). Everything downstream is
     # content-keyed, so the result is partition-independent by design.
     # (spread_narrow never probes a shuffle-bearing input — it passes
     # through rather than silently materializing AQE stages.)
@@ -692,7 +692,7 @@ def fuzzy_decontamination_pairs(
     )
     # broadcast_eval ⇒ the eval side is small by contract: skip its
     # persist + eager-count job and let the two consuming legs (bands
-    # + verify shingles) recompute the tiny Arrow shingling inline —
+    # + verify shingles) recompute the tiny shingling inline —
     # one fewer job barrier per call (r13). The non-broadcast escape
     # hatch (eval side is another full corpus) keeps the cache.
     ev_shd, ev_bands = _signature_bands(
@@ -921,22 +921,22 @@ def prefix_containment_pairs(
     key is the recall/cost point chosen here, and the exact containment
     verify on candidates makes precision 1.0 regardless.
 
-    Scale shape mirrors ``ngram_jaccard_pairs``: shingle once (Arrow
-    pandas_udf), persist, bucket self-join on the prefix key, exact
-    verify — work is Σ bucket² over hash-spread buckets, never n².
+    Scale shape mirrors ``ngram_jaccard_pairs``: shingle once, persist,
+    bucket self-join on the prefix key, exact verify — work is
+    Σ bucket² over hash-spread buckets, never n².
     """
     from nahuatl_data_pipeline_spark.functions.hashing import hash64
-    from nahuatl_data_pipeline_spark.operators.tfidf import term_array
+    from nahuatl_data_pipeline_spark.functions.text_analysis import tokens
 
     release_fuzzy_caches()  # BEFORE persisting (see ordering contract)
-    # the canonical tokenizer (tfidf.term_array) — NOT a fresh split
-    # expression, so the prefix cut can never drift from the corpus view
-    toks = F.filter(term_array(text_col), lambda t: t != "")
+    # the shared tokenizer — NOT a fresh split expression, so the
+    # prefix cut can never drift from the corpus view
+    toks = tokens(F.lower(F.col(text_col)))
     prefix = F.array_join(F.slice(toks, 1, prefix_tokens), " ")
     key = F.array_min(
         F.transform(word_shingles(prefix, n=shingle_n), hash64)
     )
-    # spread a narrow input before the two shingling pandas_udfs (the
+    # spread a narrow input before the two shingling passes (the
     # _signature_bands pattern; no-op at >= defaultParallelism splits)
     df = spread_narrow(df)
     # NOTE (r14, verdict task #4 attempted and REVERTED with plan

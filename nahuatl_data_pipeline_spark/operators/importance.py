@@ -28,36 +28,10 @@ hash equality (the repo's float policy).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StringType
 
-from nahuatl_data_pipeline_spark.functions.hashing import _ASCII_WS, hash64
-
-
-def ngram_bag(c, n: int = 2, lowercase: bool = True):
-    """Word n-gram OCCURRENCES (with repeats — a bag, not the set
-    :func:`functions.hashing.word_shingles` returns; importance
-    estimation needs counts). Same ASCII ``\\s+`` tokenizer as every
-    other text path so SQL oracles see the identical token stream.
-    Arrow-batched for the same reason word_shingles is (nested
-    higher-order expressions run interpreted)."""
-    ws = _ASCII_WS
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def _bag(s: pd.Series) -> pd.Series:
-        def one(t):
-            if t is None:
-                return []
-            tk = [x for x in ws.split(t.lower() if lowercase else t) if x]
-            if len(tk) < n:
-                return []
-            return [" ".join(tk[i : i + n]) for i in range(len(tk) - n + 1)]
-
-        return s.map(one)
-
-    return _bag(F.col(c) if isinstance(c, str) else c)
+from nahuatl_data_pipeline_spark.functions.hashing import hash64, word_ngrams
 
 
 def dsir_log_weights(
@@ -84,7 +58,7 @@ def dsir_log_weights(
     explode as one extra boolean and rolls the target bucket counts up
     from the per-doc aggregate (a doc's occurrences all carry its flag,
     so Σ __c over flagged docs is exactly the flagged occurrence
-    count) — the frame form would replay the corpus-sized pandas-UDF
+    count) — the frame form would replay the corpus-sized n-gram
     explode over the target subset a second time, the operator's
     dominant cost.
     """
@@ -92,7 +66,7 @@ def dsir_log_weights(
         raise ValueError("pass exactly one of `target` or `target_flag`")
     occ_cols = [
         F.col(id_col),
-        F.explode(ngram_bag(text_col, n=ngram_n)).alias("__g"),
+        F.explode(word_ngrams(text_col, ngram_n)).alias("__g"),
     ]
     if target_flag is not None:
         occ = df.select(*occ_cols, target_flag.alias("__t")).select(
@@ -113,13 +87,13 @@ def dsir_log_weights(
         )
         doc_b = occ.groupBy(id_col, "__b").agg(F.count(F.lit(1)).alias("__c"))
         tocc = target.select(
-            F.explode(ngram_bag(text_col, n=ngram_n)).alias("__g")
+            F.explode(word_ngrams(text_col, ngram_n)).alias("__g")
         ).select((hash64("__g") % n_buckets).alias("__b"))
         tgt_b = tocc.groupBy("__b").agg(F.count(F.lit(1)).alias("__ct"))
     # roll raw-corpus bucket counts up from doc_b (Σ per-doc counts is
     # the same integer), NOT from occ: an independent occ aggregate
-    # would replay the corpus-sized pandas-UDF n-gram explode — the
-    # operator's dominant cost — a second time per call
+    # would replay the corpus-sized n-gram explode — the operator's
+    # dominant cost — a second time per call
     raw_b = doc_b.groupBy("__b").agg(
         F.sum("__c").cast("long").alias("__ca")
     )

@@ -109,7 +109,7 @@ def snapshot_index(
 ) -> SnapshotIndex:
     """Build the reusable snapshot index (keys + shingles + buckets).
 
-    The expensive legs — the Arrow shingling pandas_udf and the bucket
+    The expensive legs — the per-row shingling and the bucket
     aggregation — run once per snapshot here instead of once per batch
     inside :func:`dedup_against_snapshot`. Persist the three frames (or
     write them to parquet) before looping over batches.
@@ -147,7 +147,7 @@ def dedup_against_snapshot(
         raise ValueError("pass exactly one of `seen` or `index`")
     # Spread a narrow batch before anything touches it: an incremental
     # batch is often a handful of scan partitions (one crawl file),
-    # which would run the Arrow shingling + bucket aggregation on a few
+    # which would run the shingling + bucket aggregation on a few
     # cores of the whole cluster. One narrow (id, text) round-robin
     # exchange buys full parallelism for every downstream leg; a no-op
     # whenever the batch already has >= defaultParallelism partitions
@@ -172,7 +172,7 @@ def dedup_against_snapshot(
         return survivors
 
     # shingles feed both the bucket agg and the verify join — persist so
-    # the Arrow shingling pandas_udf runs once per side, not twice
+    # the per-row shingling runs once per side, not twice
     nsh = _shingles(survivors, id_col, text_col, shingle_n, "__nid", "__nsh").persist()
     nsh.count()  # eager: bucket leg + verify join read the cache
     nbk = _bucket_keys(nsh, "__nid", "__nsh", num_perms)

@@ -37,7 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from nahuatl_data_pipeline_spark.operators.tfidf import term_array, tokenize
+from nahuatl_data_pipeline_spark.functions.text_analysis import tokens
+from nahuatl_data_pipeline_spark.operators.tfidf import tokenize
 
 
 def bigram_occurrences(
@@ -47,7 +48,7 @@ def bigram_occurrences(
     with its own 1-shifted slice (a narrow projection — no posexplode +
     self-join on position). Documents with <2 tokens yield no rows."""
     base = docs.select(
-        id_col, F.filter(term_array(text_col), lambda t: t != "").alias("__tk")
+        id_col, tokens(F.lower(F.col(text_col))).alias("__tk")
     ).filter(F.size("__tk") >= 2)  # slice needs a non-negative length
     tk = F.col("__tk")
     pairs = F.arrays_zip(

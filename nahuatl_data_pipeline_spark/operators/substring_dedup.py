@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from nahuatl_data_pipeline_spark.functions.text_analysis import tokens
+
 
 def exact_substring_dedup(
     df: DataFrame,
@@ -56,12 +58,9 @@ def exact_substring_dedup(
     base = F.col(text_col)
     if lowercase:
         base = F.lower(base)
-    toks = F.filter(
-        F.split(F.trim(base), r"\s+"), lambda t: t != ""
-    )
     pos_tok = df.select(
         F.col(id_col).alias("__doc"),
-        F.posexplode(toks).alias("__pos", "__tok"),
+        F.posexplode(tokens(base)).alias("__pos", "__tok"),
     )
 
     w_doc = Window.partitionBy("__doc").orderBy("__pos")

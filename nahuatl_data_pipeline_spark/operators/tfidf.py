@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from nahuatl_data_pipeline_spark.functions.text_analysis import tokens
 from nahuatl_data_pipeline_spark.session import CachePool
 
 # Generation-based cache pool: each tfidf_cosine_pairs call releases the
@@ -39,24 +40,14 @@ _LIVE_CACHES = CachePool()
 release_tfidf_caches = _LIVE_CACHES.release
 
 
-def term_array(text_col: str):
-    r"""THE tokenization expression (trim + lowercase + ``\s+`` split)
-    shared by every term-level operator (tf-idf here, drift's corpus
-    counts) — one definition, so vocabularies cannot drift between
-    operators or their SQL oracles."""
-    return F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-
-
 def tokenize(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """One row per (doc, token): trim + lowercase + ``\\s+`` split,
-    empties dropped — the SAME tokenization contract as the dedup /
-    curation operators (functions/hashing.py:token_set), so tf-idf and
-    drift vocabularies agree with every other operator's view of the
-    corpus. Pure projection + generator — stays in whole-stage
-    codegen."""
+    """One row per (doc, token) of the lowercased text, through the
+    shared tokenizer (functions/text_analysis.py:tokens), so tf-idf
+    vocabularies agree with every other operator's view of the corpus.
+    Pure projection + generator — stays in whole-stage codegen."""
     return docs.select(
-        id_col, F.explode(term_array(text_col)).alias("term")
-    ).filter(F.col("term") != "")
+        id_col, F.explode(tokens(F.lower(F.col(text_col)))).alias("term")
+    )
 
 
 def tfidf_top_terms(
@@ -233,7 +224,7 @@ def tfidf_cosine_pairs(
         )
 
         # shd is the persisted (id, shingle-array) frame: the banding
-        # already paid the shingle pandas_udf once, so (for n>1, where
+        # already paid the per-row shingling once, so (for n>1, where
         # shingles are distinct-per-doc) the tf table explodes the CACHE
         # instead of re-shingling the corpus.
         shd, cands, n_cands = banded_candidate_pairs(

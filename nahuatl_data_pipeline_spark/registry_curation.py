@@ -24,6 +24,7 @@ from nahuatl_data_pipeline_spark.functions.pii import (
     pii_counts,
     redact_pii,
 )
+from nahuatl_data_pipeline_spark.functions.text_analysis import tokens
 from nahuatl_data_pipeline_spark.registry import register
 from nahuatl_data_pipeline_spark.schemas import load_table
 
@@ -276,12 +277,7 @@ def q63_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "lang",
-        F.explode(
-            F.filter(
-                F.split(F.trim(F.lower(F.col("text"))), r"\s+"),
-                lambda t: t != "",
-            )
-        ).alias("token"),
+        F.explode(tokens(F.lower(F.col("text")))).alias("token"),
     )
     return tok.groupBy("lang").agg(
         F.count("token").alias("n_tokens"),

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nahuatl_data_pipeline_spark.functions.normalize import collapse_whitespace
+from nahuatl_data_pipeline_spark.functions.text_analysis import tokens
 from nahuatl_data_pipeline_spark.operators.quality import (
     Check,
     length_in_range_ratio,
@@ -903,9 +904,7 @@ def q54_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     count → global top-k. Deterministic tie-break on the token so both
     engines cut the k boundary identically."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("token")
-    ).filter(F.col("token") != "")
+    toks = docs.select(F.explode(tokens(F.lower(F.col("text")))).alias("token"))
     return (
         toks.groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))

@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nahuatl_data_pipeline_spark.functions.text_analysis import tokens
 from nahuatl_data_pipeline_spark.registry import register
 from nahuatl_data_pipeline_spark.schemas import load_table
 
@@ -100,12 +101,7 @@ def q167_hll_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "lang",
-        F.explode(
-            F.filter(
-                F.split(F.trim(F.lower(F.col("text"))), r"\s+"),
-                lambda t: t != "",
-            )
-        ).alias("token"),
+        F.explode(tokens(F.lower(F.col("text")))).alias("token"),
     )
     return hll_registers(tok, "token", p=_Q167_P, group_cols=("lang",))
 
@@ -333,12 +329,7 @@ def q170_hll_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "lang",
-        F.explode(
-            F.filter(
-                F.split(F.trim(F.lower(F.col("text"))), r"\s+"),
-                lambda t: t != "",
-            )
-        ).alias("token"),
+        F.explode(tokens(F.lower(F.col("text")))).alias("token"),
     )
     grid = hll_registers(tok, "token", p=_Q167_P, group_cols=("lang",))
     return hll_estimate(grid, p=_Q167_P, group_cols=("lang",))

@@ -753,7 +753,7 @@ def q85_duplicate_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from q38 (pairwise similarity) and q68 (sentence rewrite): this is
     a per-doc scalar profile.
 
-    Plan: shingle once (Arrow pandas_udf) → explode → min-doc per
+    Plan: shingle once → explode → min-doc per
     shingle as a WINDOW over the exploded rows (a groupBy + join-back
     would duplicate the shingling subtree in the plan) → per-doc
     ratio. One shingle-keyed shuffle, one doc-keyed; nothing is
@@ -766,9 +766,9 @@ def q85_duplicate_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(word_shingles("text", n=3)).alias("s")
     )
     # first_doc as a window over sh, NOT groupBy + join-back: the
-    # self-join shape would duplicate the shingling pandas_udf subtree
-    # in the plan (no exchange reuse under AQE — the tfidf lesson),
-    # running the expensive Arrow shingle pass twice per corpus
+    # self-join shape would duplicate the shingling subtree in the plan
+    # (no exchange reuse under AQE — the tfidf lesson), running the
+    # per-row shingle pass twice per corpus
     from pyspark.sql import Window
 
     first_doc = F.min("doc_id").over(Window.partitionBy("s"))

@@ -185,10 +185,10 @@ def q106_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         prefix_containment_pairs,
     )
 
-    from nahuatl_data_pipeline_spark.operators.tfidf import term_array
+    from nahuatl_data_pipeline_spark.functions.text_analysis import tokens
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.filter(term_array("text"), lambda t: t != "")
+    toks = tokens(F.lower(F.col("text")))
     planted = docs.filter(F.col("doc_id") < 100).select(
         (F.col("doc_id") + 2000000).alias("doc_id"),
         F.array_join(F.slice(toks, 1, 10), " ").alias("text"),

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nahuatl_data_pipeline_spark.functions.text_analysis import tokens
 from nahuatl_data_pipeline_spark.registry import register
 from nahuatl_data_pipeline_spark.schemas import load_table
 
@@ -161,10 +162,7 @@ def q123_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nahuatl_data_pipeline_spark.operators.mixing import budget_select
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col("text"))), r"\s+"),
-        lambda t: t != "",
-    )
+    toks = tokens(F.lower(F.col("text")))
     base = (
         docs.select(
             "doc_id",
@@ -242,14 +240,7 @@ def q124_token_topn_other(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nahuatl_data_pipeline_spark.operators.pivot import topn_other
 
     docs = load_table(spark, sf_dir, "documents")
-    occ = docs.select(
-        F.explode(
-            F.filter(
-                F.split(F.trim(F.lower(F.col("text"))), r"\s+"),
-                lambda t: t != "",
-            )
-        ).alias("t")
-    )
+    occ = docs.select(F.explode(tokens(F.lower(F.col("text")))).alias("t"))
     out = topn_other(occ, "t", n=20).localCheckpoint(eager=True)
     grand = out.agg(F.sum("total").alias("__g"))
     return (
@@ -429,12 +420,7 @@ def q127_length_rule_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("text").isNotNull()
     )
-    n_toks = F.size(
-        F.filter(
-            F.split(F.trim(F.lower(F.col("text"))), r"\s+"),
-            lambda t: t != "",
-        )
-    )
+    n_toks = F.size(tokens(F.lower(F.col("text"))))
     labeled = docs.select(
         F.when(F.length("text") >= 200, "long").otherwise("short").alias("a"),
         F.when(n_toks >= 40, "long").otherwise("short").alias("b"),

@@ -254,11 +254,22 @@ def _op_max_tasks(parallelism: int) -> int:
     return 40 + 12 * parallelism
 
 
-def test_curation_op_job_and_task_budget(spark, tmp_path):
+def test_curation_op_job_and_task_budget(spark, tmp_path, monkeypatch):
     """One curation op over a small seeded corpus stays within a job and
-    a task budget, and still meets its planted ground truth."""
+    a task budget, writes a plan with no Python worker stage, and still
+    meets its planted ground truth."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
     from perfbench import checks, inputs
 
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def capture(self, path, *args, **kwargs):
+        written.append(self._df)
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
     truth = inputs.make_curation(3, 400, str(tmp_path / "in"))
     docs = spark.read.parquet(truth["docs_path"])
     evalset = spark.read.parquet(truth["eval_path"])
@@ -272,6 +283,8 @@ def test_curation_op_job_and_task_budget(spark, tmp_path):
     finally:
         sc.setJobGroup(None, None)
     assert checks.check_curation(truth, stats, None) == []
+    plan = written[-1]._jdf.queryExecution().optimizedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
     tracker = sc.statusTracker()
     jobs = tracker.getJobIdsForGroup(group)

@@ -5,6 +5,8 @@ threshold, distinct docs survive, results are deterministic."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -354,15 +356,55 @@ def test_containment_short_docs_dropped(spark):
     assert prefix_containment_pairs(df, "doc_id", "text").collect() == []
 
 
+def _reference_shingles(t, n, lowercase=True):
+    """The Python shingler word_shingles must reproduce: ASCII ``\\s+``
+    split, empties dropped, distinct n-token windows in first-occurrence
+    order, [] for NULL."""
+    if t is None:
+        return []
+    t = t.lower() if lowercase else t
+    tk = [x for x in re.split(r"\s+", t, flags=re.ASCII) if x]
+    grams = (" ".join(tk[i : i + n]) for i in range(len(tk) - n + 1))
+    return list(dict.fromkeys(grams))
+
+
 def test_word_shingles_ascii_whitespace_contract(spark):
-    """The pandas_udf tokenizer must split on the SAME ASCII \\s class
-    as the Java-regex/oracle paths: a non-breaking space is NOT a
-    separator, so 'a\\xa0b' stays one token everywhere."""
+    """word_shingles splits on the SAME ASCII \\s class as the oracle
+    paths: a non-breaking space is NOT a separator, so 'a\\xa0b' stays
+    one token everywhere. Boundary inputs match the Python reference."""
     from nahuatl_data_pipeline_spark.functions.hashing import word_shingles
 
     df = spark.createDataFrame([("a\xa0b c d e",)], ["text"])
     got = df.select(word_shingles("text", n=3).alias("sh")).collect()[0]["sh"]
     assert got == ["a\xa0b c d", "c d e"]
+
+    samples = [
+        None, "", "one", "one two",
+        "a\tb\nc\r\nd\x0be\x0cf",
+        "  \t lead  and trail \n\n ",
+        "a\xa0b c d e",
+        "x y x y x y",
+        "Tlazohcāmati Huēyi TLAHTOANI tlazohcāmati huēyi",
+        " ".join(f"w{i % 17}" for i in range(40)),
+        "we 🙂smile at 🙂 you",
+        "🙂a 🙂b 🙂c",
+    ]
+    df = spark.createDataFrame([(s,) for s in samples], "text string")
+    for n, lowercase in ((2, True), (3, True), (3, False), (13, True)):
+        got = [
+            r["sh"]
+            for r in df.select(
+                word_shingles("text", n=n, lowercase=lowercase).alias("sh")
+            ).collect()
+        ]
+        want = [_reference_shingles(s, n, lowercase) for s in samples]
+        assert got == want, (n, lowercase)
+
+    # the stated divergence: Spark lowercases U+A7CB (Unicode 16) to
+    # U+0264, where Python 3.11's tables leave it unchanged
+    df = spark.createDataFrame([("\ua7cb b c",)], "text string")
+    got = df.select(word_shingles("text", n=2).alias("sh")).collect()[0]["sh"]
+    assert got == ["\u0264 b", "b c"]
 
 
 # ---------------------------------------------------------------------------

@@ -7,10 +7,8 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from nahuatl_data_pipeline_spark.operators.importance import (
-    dsir_log_weights,
-    ngram_bag,
-)
+from nahuatl_data_pipeline_spark.functions.hashing import word_ngrams
+from nahuatl_data_pipeline_spark.operators.importance import dsir_log_weights
 
 
 def _docs(spark, rows):
@@ -22,7 +20,7 @@ def test_ngram_bag_keeps_repeats(spark):
     out = {
         r["doc_id"]: r["g"]
         for r in df.select(
-            "doc_id", ngram_bag("text", n=2).alias("g")
+            "doc_id", word_ngrams("text", 2).alias("g")
         ).collect()
     }
     assert out[1] == ["a b", "b a", "a b"]  # bag, not set
