@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nahuatl_data_pipeline_spark.session import pin
+
 
 def zscore_outliers(
     df: DataFrame,
@@ -54,7 +56,7 @@ def zscore_outliers(
     # its own job (r13 — one job instead of eager-materialize + probe),
     # and the broadcast side stays precomputed blocks, never a big
     # aggregate inside the broadcast thread (guide §7.4 timeout mode).
-    stats = (
+    stats = pin(
         df.groupBy(*keys)
         .agg(
             F.round(F.avg(v), round_stats).alias("group_mean"),
@@ -64,8 +66,8 @@ def zscore_outliers(
             *[F.col(k).alias(f"__g_{k}") for k in keys],
             "group_mean",
             "group_std",
-        )
-        .localCheckpoint(eager=False)
+        ),
+        truncate=True,
     )
     z = F.round(
         (v - F.col("group_mean")) / F.col("group_std"), round_stats
@@ -145,26 +147,24 @@ def mad_outliers(
     contract — so the flagged set is identical in any engine.
     """
     v = F.col(value_col)
-    med = (
+    med = pin(
         df.groupBy(*keys)
         .agg(F.round(F.percentile(v, 0.5), round_stats).alias("group_median"))
-        .select(
-            *[F.col(k).alias(f"__g_{k}") for k in keys], "group_median"
-        )
-        .localCheckpoint(eager=False)
+        .select(*[F.col(k).alias(f"__g_{k}") for k in keys], "group_median"),
+        truncate=True,
     )
     dev = _gated_stats_join(df, med, keys, broadcast_max_groups).withColumn(
         "__absdev", F.abs(v - F.col("group_median"))
     )
-    mad = (
+    mad = pin(
         dev.groupBy(*keys)
         .agg(
             F.round(F.percentile(F.col("__absdev"), 0.5), round_stats).alias(
                 "group_mad"
             )
         )
-        .select(*[F.col(k).alias(f"__g_{k}") for k in keys], "group_mad")
-        .localCheckpoint(eager=False)
+        .select(*[F.col(k).alias(f"__g_{k}") for k in keys], "group_mad"),
+        truncate=True,
     )
     cut = F.lit(threshold) * F.lit(1.4826) * F.col("group_mad")
     return (
@@ -215,14 +215,14 @@ def winsorized_stats(
     (q64) at ±ε, same second pass.
     """
     v = F.col(value_col)
-    bounds = (
+    bounds = pin(
         df.groupBy(*keys)
         .agg(
             F.round(F.percentile(v, lower_q), round_bounds).alias("lo"),
             F.round(F.percentile(v, upper_q), round_bounds).alias("hi"),
         )
-        .select(*[F.col(k).alias(f"__g_{k}") for k in keys], "lo", "hi")
-        .localCheckpoint(eager=False)
+        .select(*[F.col(k).alias(f"__g_{k}") for k in keys], "lo", "hi"),
+        truncate=True,
     )
     clamped = F.when(
         v.isNotNull(), F.least(F.greatest(v, F.col("lo")), F.col("hi"))

@@ -66,6 +66,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nahuatl_data_pipeline_spark.session import pin
+
 # symmetrized edge rows labeled on the driver (measured: module docstring)
 DRIVER_MAX_EDGES = 50_000
 
@@ -158,10 +160,11 @@ def connected_components(
     # the entire upstream pair computation (a banded-Jaccard query at
     # corpus scale) — the sf1 self-run measured q58 at 72 s from exactly
     # that recompute, vs the edges-once cost plus cheap rounds after.
-    sym = (
-        sym.unionByName(sym.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    sym = pin(
+        sym.unionByName(
+            sym.select(F.col("d").alias("s"), F.col("s").alias("d"))
+        ).distinct(),
+        eager=True, truncate=True,
     )
     # bounded probe over the checkpoint: at most DRIVER_MAX_EDGES + 1
     # rows ever reach the driver, and the graph is not recomputed
@@ -169,11 +172,11 @@ def connected_components(
     if len(head) <= DRIVER_MAX_EDGES:
         return _label_on_driver(sym.sparkSession, head)
 
-    labels = (
+    labels = pin(
         sym.select(F.col("s").alias("id"))
         .distinct()
-        .withColumn("comp", F.col("id"))
-        .localCheckpoint(eager=True)
+        .withColumn("comp", F.col("id")),
+        eager=True, truncate=True,
     )
     for _ in range(max_iter):
         prop = sym.join(
@@ -193,13 +196,12 @@ def connected_components(
         # lazy checkpoint: the convergence count below is the round's
         # first action, so it materializes the checkpoint blocks in the
         # same job — one job per round instead of two (r13)
-        agg = (
-            merged.groupBy("id")
-            .agg(
+        agg = pin(
+            merged.groupBy("id").agg(
                 F.min("comp").alias("comp"),
                 F.min("__old").alias("__old"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            truncate=True,
         )
         changed = agg.filter(F.col("comp") < F.col("__old")).count()
         labels = agg.drop("__old")
@@ -277,7 +279,7 @@ def connected_components_star(
     ``(id, component)``, component = min id of the cluster, exactly like
     :func:`connected_components` (asserted equal in tests).
     """
-    e = (
+    e = pin(
         edges.select(
             F.col(src).cast("long").alias("s"),
             F.col(dst).cast("long").alias("d"),
@@ -286,9 +288,9 @@ def connected_components_star(
         .select(
             F.least("s", "d").alias("s"), F.greatest("s", "d").alias("d")
         )
-        .distinct()
+        .distinct(),
         # lazy: the _sig(e) below materializes the checkpoint (r13)
-        .localCheckpoint(eager=False)
+        truncate=True,
     )
 
     def _sig(df: DataFrame) -> tuple:
@@ -403,7 +405,7 @@ def connected_components_star(
             # graph at the cap must stop exactly at max_iter rounds).
             stepped = _star_round(stepped)
         rounds_left -= 2
-        new_e = stepped.localCheckpoint(eager=False)
+        new_e = pin(stepped, truncate=True)
         # both sides are distinct SETS, so equal count plus one empty
         # set-difference proves equality. The signature (count +
         # order-independent hash-sum, one job) gates the probe: it

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from nahuatl_data_pipeline_spark.session import pin
+
 
 def _n_levels(col: str):
     """Distinct level count INCLUDING a null level — count_distinct
@@ -45,10 +47,9 @@ def chi2_independence(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     raw would overflow int64 around ~3e9 balanced rows (ANSI mode turns
     that into a runtime error, non-ANSI into silent garbage).
     """
-    cells = (
-        df.groupBy(col_a, col_b)
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .localCheckpoint(eager=True)
+    cells = pin(
+        df.groupBy(col_a, col_b).agg(F.count(F.lit(1)).alias("n_ab")),
+        eager=True, truncate=True,
     )
     row_tot = cells.groupBy(col_a).agg(F.sum("n_ab").alias("n_a"))
     col_tot = cells.groupBy(col_b).agg(F.sum("n_ab").alias("n_b"))
@@ -146,12 +147,11 @@ def cohens_kappa(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     labeled = df.where(
         F.col(col_a).isNotNull() & F.col(col_b).isNotNull()
     )
-    cells = (
+    cells = pin(
         labeled.groupBy(
             F.col(col_a).alias("__a"), F.col(col_b).alias("__b")
-        )
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .localCheckpoint(eager=True)
+        ).agg(F.count(F.lit(1)).alias("__c")),
+        eager=True, truncate=True,
     )
     rm = cells.groupBy(F.col("__a").alias("__l")).agg(
         F.sum("__c").alias("__r")

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from nahuatl_data_pipeline_spark.functions.text_analysis import tokens
+from nahuatl_data_pipeline_spark.session import pin
 
 
 def _counts(df: DataFrame, text_col: str, name: str) -> DataFrame:
@@ -62,13 +63,12 @@ def token_drift(
     # feeds BOTH the totals aggregate and the divergence fold, and
     # without materialization each consumer would re-tokenize and
     # re-shuffle both corpora
-    vocab = (
-        ca.join(cb, "term", "full_outer")
-        .select(
+    vocab = pin(
+        ca.join(cb, "term", "full_outer").select(
             F.coalesce("na", F.lit(0)).alias("na"),
             F.coalesce("nb", F.lit(0)).alias("nb"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True, truncate=True,
     )
     # per-token smoothed probabilities need the totals + union vocab
     # size; both are 1-row aggregates broadcast back via crossJoin

@@ -27,38 +27,18 @@ from pyspark.sql import functions as F
 
 from nahuatl_data_pipeline_spark.functions.hashing import word_shingles
 from nahuatl_data_pipeline_spark.functions.spread import spread_narrow
-from nahuatl_data_pipeline_spark.session import CachePool
+from nahuatl_data_pipeline_spark.session import CachePool, pin, unpin
 
-# Generation-based cache management: each fuzzy-dedup call releases the
-# PREVIOUS call's persisted shingle/candidate intermediates and registers
-# its own. The current result's caches stay valid however the caller
-# chains/derives from it (a GC- or result-lifetime tie would evict them
-# the moment the returned object is dropped — e.g. `f(df).select(...)`),
-# while a long-lived session holds at most one call's caches instead of
-# leaking monotonically. Concurrent fuzzy-dedup calls in one session
-# should call release_fuzzy_caches() themselves once both results are
-# materialized.
+# Concurrent fuzzy-dedup calls in one session should call
+# release_fuzzy_caches() themselves once both results are materialized.
 _LIVE_CACHES = CachePool()
 release_fuzzy_caches = _LIVE_CACHES.release
-_register_caches = _LIVE_CACHES.register
 
 # Observability: banded_minhash_pairs records its candidate-pair count
 # here (the count is computed anyway for the broadcast size gate). Scale
 # probes (SCALE.md's pair-family table) read it to report candidate
 # growth vs true output without re-running the banding.
 LAST_STATS: dict[str, int] = {}
-
-
-# IMPORTANT ordering contract: release_fuzzy_caches() must run at the
-# START of each call, BEFORE the call creates its own persists. Spark's
-# CacheManager matches cached plans by canonical form, so if call N+1
-# persists a plan identical to call N's (same corpus, same params) and
-# THEN unpersists call N's handle, the shared cache entry dies and call
-# N+1 executes fully uncached — with the per-row shingling recomputed
-# per join leg (measured: 14 s → 78 s on back-to-back sf1 q38 runs).
-# Persisted frames are also materialized EAGERLY (a count) before being
-# wired into self-joins: two legs of one job racing to populate a lazy
-# cache each recompute the partitions the other hasn't finished.
 
 
 # --------------------------------------------------------------------------
@@ -114,11 +94,6 @@ def minhash_lsh_pairs(
     every pair of documents shares most of its token *set* and the LSH
     buckets degenerate toward one giant bucket → O(n²) candidates).
 
-    The tokenized+hashed frame is persisted for the duration of the call
-    chain (generation-managed like the banded path): the self-join
-    consumes it as BOTH sides, so without the persist every shingle and
-    TF vector is computed twice.
-
     Dirty-corpus envelope: approxSimilarityJoin has no hot-bucket cap
     lever, so on a corpus with B-member duplicate families it carries
     the full Σ C(B,2) candidate volume. Resource sizing measured at the
@@ -133,9 +108,8 @@ def minhash_lsh_pairs(
     this path exists for SparkDedup.scala parity and clean corpora.
     """
     from pyspark.ml.feature import HashingTF
-    from pyspark.storagelevel import StorageLevel
 
-    release_fuzzy_caches()  # BEFORE persisting (see ordering contract)
+    release_fuzzy_caches()
     tokens = word_shingles(text_col, n=shingle_n)
     prepared = df.filter(F.col(text_col).isNotNull()).withColumn(
         "__tokens", tokens
@@ -144,20 +118,20 @@ def minhash_lsh_pairs(
         inputCol="__tokens", outputCol="__features", numFeatures=num_features
     )
     # MinHashLSH requires at least one non-zero feature. Persist ONLY
-    # (id, features): a .persist() materializes every column of its
+    # (id, features): a persisted frame materializes every column of its
     # plan — Catalyst cannot prune THROUGH a cache — so carrying text +
     # the shingle array into the cache multiplies its footprint by the
     # document size for columns no downstream consumer reads (the join
     # needs __features, the output only the ids). Measured at the 100×
     # decade: the unpruned cache was the allocation behind the 16 GiB
     # fresh-JVM floor (SCALE.md round 10).
-    prepared = (
-        tf.transform(prepared.filter(F.size("__tokens") > 0))
-        .select(id_col, "__features")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    prepared = pin(
+        tf.transform(prepared.filter(F.size("__tokens") > 0)).select(
+            id_col, "__features"
+        ),
+        eager=True,  # both self-join legs read it
+        pool=_LIVE_CACHES,
     )
-    prepared.count()  # eager: both self-join legs read the cache
-    _register_caches(prepared)
     model = _minhash_model(prepared, num_features, num_hash_tables, seed)
     joined = model.approxSimilarityJoin(
         prepared, prepared, threshold, distCol="distance"
@@ -201,21 +175,21 @@ def _signature_bands(
     persist_sigs: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared shingle → minhash signature → exploded band-key legs of
-    the banded pipeline. Returns (shd, bands); ``shd`` (the persisted
-    shingle frame) is eager-cached — the caller owns registering it via
-    ``_register_caches`` once its own derived frames exist.
+    the banded pipeline. Returns (shd, bands); ``shd`` (the shingle
+    frame) is pinned eagerly into the family's generation, which the
+    caller has released before calling.
 
-    ``persist_sigs=True`` additionally caches the SIGNATURE frame (one
+    ``persist_sigs=True`` additionally pins the SIGNATURE frame (one
     row per doc, ``num_hashes`` longs — the pipeline's narrowest frame,
-    orders smaller than ``shd``'s shingle arrays) and registers it for
-    release. For consumers that read ``bands`` from two places — the
-    uncapped band self-join's legs — this is the r13-verdict task #3
+    orders smaller than ``shd``'s shingle arrays). For consumers that
+    read ``bands`` from two places — the uncapped band self-join's
+    legs — this is the r13-verdict task #3
     fix: AQE does NOT reuse the identical signature-aggregate exchange
     across the legs (measured ReusedExchange=0 at sf0.1), so without
     the cache each leg replays the plan's biggest shuffle (shingle
     explode → hash → min-aggregate). With it, each leg is a narrow
-    band explode over cached rows. Eager (count) per the module's
-    racing-legs contract.
+    band explode over cached rows; pinning the post-explode bands
+    instead would materialize n_bands× the rows.
 
     Shingling is the family's dominant per-row cost (a regex pass over
     every doc's text) — computed ONCE and cached; every downstream leg
@@ -255,8 +229,8 @@ def _signature_bands(
         word_shingles(text_col, n=shingle_n).alias("__sh"),
     ).filter(F.size("__sh") > 0)
     if persist_shd:
-        shd = shd.persist()
-        shd.count()  # eager: signature leg + both Jaccard sides read the cache
+        # eager: the signature leg and both Jaccard sides read it
+        shd = pin(shd, eager=True, pool=_LIVE_CACHES)
 
     tok = shd.select("__id", F.explode("__sh").alias("__s")).withColumn(
         "__hv", hash64(F.col("__s"))
@@ -268,12 +242,8 @@ def _signature_bands(
         ]
     )
     if persist_sigs:
-        # bounded: one row per doc × num_hashes longs. Eager count per
-        # the racing-legs contract; registered here (the caller has
-        # already released the previous generation before calling).
-        sigs = sigs.persist()
-        sigs.count()
-        _register_caches(sigs)
+        # bounded: one row per doc × num_hashes longs
+        sigs = pin(sigs, eager=True, pool=_LIVE_CACHES)
 
     bands = sigs.select(
         "__id",
@@ -311,10 +281,9 @@ def _band_bucket_sizes(
     and the max ``c`` bounds the hottest join task. Used by the scale
     probes to diagnose hot-bucket skew WITHOUT running the join."""
     release_fuzzy_caches()
-    shd, bands = _signature_bands(
+    _, bands = _signature_bands(
         df, id_col, text_col, shingle_n, num_hashes, band_size
     )
-    _register_caches(shd)
     return bands.groupBy("band_id", "band_key").agg(
         F.count(F.lit(1)).alias("c")
     )
@@ -333,13 +302,13 @@ def banded_candidate_pairs(
     every operator that wants banded-minhash pruning with its own verify
     metric (Jaccard here; tf-idf cosine in operators/tfidf.py).
 
-    Returns ``(shd, cands, n_cands)``: the persisted shingle frame
-    (``__id``, ``__sh``), the persisted + eagerly materialized distinct
-    candidate pair frame (``id_a`` < ``id_b``), and its size (computed
-    anyway for the callers' broadcast gates; also recorded in
-    ``LAST_STATS``). Both frames are registered with the call's cache
-    generation — callers must NOT call ``release_fuzzy_caches`` after
-    this returns until they are done with the result.
+    Returns ``(shd, cands, n_cands)``: the pinned shingle frame
+    (``__id``, ``__sh``), the pinned distinct candidate pair frame
+    (``id_a`` < ``id_b``), and its size (the count that materializes
+    it, read by the callers' broadcast gates; also recorded in
+    ``LAST_STATS``). Both pins join the call's cache generation —
+    callers must NOT call ``release_fuzzy_caches`` after this returns
+    until they are done with the result.
 
     Plan shape: per-row signature (no shuffle) → explode bands (rows ×
     n_bands) → self-join on (band_id, band_key) → distinct pairs. The
@@ -348,19 +317,11 @@ def banded_candidate_pairs(
     :func:`banded_minhash_pairs` for the recall contract).
     """
     assert num_hashes % band_size == 0
-    release_fuzzy_caches()  # BEFORE persisting (see ordering contract)
+    release_fuzzy_caches()
     shd, bands = _signature_bands(
         df, id_col, text_col, shingle_n, num_hashes, band_size,
-        # Uncapped self-join: both legs read `bands`, and AQE does NOT
-        # reuse the identical signature-aggregate exchange across them
-        # (r14 probe: ReusedExchange=0) — so the r13 note ("caching
-        # showed no improvement") measured the wrong frame: persisting
-        # the post-explode BANDS adds n_bands× rows of materialization,
-        # while persisting the pre-explode SIGNATURES (one narrow row
-        # per doc) removes the duplicated explode→hash→min-agg shuffle
-        # for the cost of the smallest frame in the pipeline. The
-        # capped path consumes bands exactly once (window → filter →
-        # collect_list) — nothing to share, keep it cache-free.
+        # both legs of the uncapped self-join read `bands`; the capped
+        # path reads it once (window → filter → collect_list)
         persist_sigs=max_bucket_size is None,
     )
     if max_bucket_size is not None:
@@ -398,7 +359,6 @@ def banded_candidate_pairs(
             .filter(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b")
             .dropDuplicates(["id_a", "id_b"])
-            .persist()
         )
     else:
         a = bands.select(F.col("__id").alias("id_a"), "band_id", "band_key")
@@ -408,11 +368,10 @@ def banded_candidate_pairs(
             .filter(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b")
             .dropDuplicates(["id_a", "id_b"])
-            .persist()
         )
+    cands = pin(cands, pool=_LIVE_CACHES)
     n_cands = cands.count()
     LAST_STATS["banded_candidates"] = n_cands
-    _register_caches(shd, cands)
     return shd, cands, n_cands
 
 
@@ -488,7 +447,7 @@ def banded_minhash_pairs(
         )
         .filter(F.col("jaccard") >= jaccard_threshold)
     )
-    return out  # shd/cands already cache-registered by banded_candidate_pairs
+    return out
 
 
 def ngram_jaccard_pairs(
@@ -556,13 +515,9 @@ _PAIR_TABLE_LOCK = threading.Lock()
 
 
 def release_pair_tables() -> None:
-    """Unpersist every cached shared pair table (test/session teardown)."""
+    """Unpin every cached shared pair table (test/session teardown)."""
     while _PAIR_TABLE_CACHE:
-        _, df = _PAIR_TABLE_CACHE.popitem()
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped
+        unpin(_PAIR_TABLE_CACHE.popitem()[1])
 
 
 def near_dup_pairs(
@@ -613,26 +568,26 @@ def near_dup_pairs(
             _PAIR_TABLE_CACHE[key] = hit  # re-insert: LRU recency
             LAST_STATS["pair_table_hit"] = 1
             return hit
-    pairs = ngram_jaccard_pairs(
-        df,
-        id_col,
-        text_col,
-        shingle_n=shingle_n,
-        jaccard_threshold=jaccard_threshold,
-        num_hashes=num_hashes,
-        band_size=band_size,
-        broadcast_max_candidates=broadcast_max_candidates,
-        max_bucket_size=max_bucket_size,
-    ).persist()
-    pairs.count()  # materialize BEFORE releasing the build intermediates
-    release_fuzzy_caches()  # shd/cands are baked into the pair table now
+    # no pool: this LRU owns the pin. Materialized BEFORE releasing the
+    # build intermediates, which are baked into the pair table now.
+    pairs = pin(
+        ngram_jaccard_pairs(
+            df,
+            id_col,
+            text_col,
+            shingle_n=shingle_n,
+            jaccard_threshold=jaccard_threshold,
+            num_hashes=num_hashes,
+            band_size=band_size,
+            broadcast_max_candidates=broadcast_max_candidates,
+            max_bucket_size=max_bucket_size,
+        ),
+        eager=True,
+    )
+    release_fuzzy_caches()
     with _PAIR_TABLE_LOCK:
         while len(_PAIR_TABLE_CACHE) >= _PAIR_TABLE_MAX:
-            old = _PAIR_TABLE_CACHE.pop(next(iter(_PAIR_TABLE_CACHE)))
-            try:
-                old.unpersist()
-            except Exception:
-                pass
+            unpin(_PAIR_TABLE_CACHE.pop(next(iter(_PAIR_TABLE_CACHE))))
         _PAIR_TABLE_CACHE[key] = pairs
     return pairs
 
@@ -685,7 +640,7 @@ def fuzzy_decontamination_pairs(
     scrub-by-anti-join shape.
     """
     eval_id = eval_id_col or id_col
-    release_fuzzy_caches()  # BEFORE persisting (see ordering contract)
+    release_fuzzy_caches()
     tr_shd, tr_bands = _signature_bands(
         train.select(F.col(id_col), F.col(text_col)),
         id_col, text_col, shingle_n, num_hashes, band_size,
@@ -700,10 +655,6 @@ def fuzzy_decontamination_pairs(
         id_col, text_col, shingle_n, num_hashes, band_size,
         persist_shd=not broadcast_eval,
     )
-    if broadcast_eval:
-        _register_caches(tr_shd)
-    else:
-        _register_caches(tr_shd, ev_shd)
     cands = (
         tr_bands.select(
             F.col("__id").alias("train_id"), "band_id", "band_key"
@@ -928,7 +879,7 @@ def prefix_containment_pairs(
     from nahuatl_data_pipeline_spark.functions.hashing import hash64
     from nahuatl_data_pipeline_spark.functions.text_analysis import tokens
 
-    release_fuzzy_caches()  # BEFORE persisting (see ordering contract)
+    release_fuzzy_caches()
     # the shared tokenizer — NOT a fresh split expression, so the
     # prefix cut can never drift from the corpus view
     toks = tokens(F.lower(F.col(text_col)))
@@ -951,16 +902,15 @@ def prefix_containment_pairs(
     # pre-cache exchange cost +40% local wall. The da46f74 collect_list
     # fold is also wrong here: q106 has no bucket cap, so folding would
     # buffer unbounded shingle-array buckets in one aggregation buffer.
-    docs = (
+    docs = pin(
         df.select(
             F.col(id_col).alias("__id"),
             word_shingles(text_col, n=shingle_n).alias("__sh"),
             key.alias("__key"),
-        )
-        .filter((F.size("__sh") > 0) & F.col("__key").isNotNull())
-        .persist()
+        ).filter((F.size("__sh") > 0) & F.col("__key").isNotNull()),
+        eager=True,  # both self-join legs read it
+        pool=_LIVE_CACHES,
     )
-    docs.count()  # eager: both self-join legs read the cache
     a = docs.select(
         F.col("__id").alias("id_a"), F.col("__sh").alias("sh_a"), "__key"
     )
@@ -978,5 +928,4 @@ def prefix_containment_pairs(
             "id_a", "id_b", F.round("containment", 6).alias("containment")
         )
     )
-    _register_caches(docs)
     return out

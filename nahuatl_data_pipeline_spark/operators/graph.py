@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nahuatl_data_pipeline_spark.session import pin
+
 
 def pagerank(
     edges: DataFrame,
@@ -80,21 +82,24 @@ def pagerank(
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
     w = (F.col(weight) if weight else F.lit(1.0)).cast("double")
-    e = edges.select(
-        F.col(src).alias("__s"), F.col(dst).alias("__d"), w.alias("__w")
-    ).localCheckpoint(eager=True)
+    e = pin(
+        edges.select(
+            F.col(src).alias("__s"), F.col(dst).alias("__d"), w.alias("__w")
+        ),
+        eager=True, truncate=True,
+    )
     out_w = e.groupBy("__s").agg(F.sum("__w").alias("__ow"))
     # lazy: trans's eager checkpoint below consumes nodes exactly once
     # (its union leg) and materializes these blocks in the same job —
     # the nodes.count() after it then reads checkpointed blocks. One
     # job barrier saved per call (r13).
-    nodes = (
+    nodes = pin(
         e.select(F.col("__s").alias("node"))
         .unionByName(e.select(F.col("__d").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        truncate=True,
     )
-    trans = (
+    trans = pin(
         e.join(out_w, "__s")
         .select("__s", "__d", (F.col("__w") / F.col("__ow")).alias("__p"))
         .unionByName(
@@ -103,8 +108,8 @@ def pagerank(
                 F.col("node").alias("__d"),
                 F.lit(0.0).alias("__p"),
             )
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True, truncate=True,
     )
     n = nodes.count()
     if n == 0:
@@ -133,7 +138,7 @@ def pagerank(
             # (each truncation still caps analysis/lineage depth — the
             # physical plan is compiled at call time either way). Three
             # mid-loop job barriers removed per call (r13).
-            ranks = ranks.localCheckpoint(eager=False)
+            ranks = pin(ranks, truncate=True)
     r = F.col("__r")
     if round_to is not None:
         r = F.round(r, round_to)

@@ -45,9 +45,10 @@ from nahuatl_data_pipeline_spark.functions.hashing import (
 from nahuatl_data_pipeline_spark.functions.normalize import dedup_key
 from nahuatl_data_pipeline_spark.functions.spread import spread_narrow
 from nahuatl_data_pipeline_spark.operators.fuzzy_dedup import (
-    _register_caches,
+    _LIVE_CACHES,
     release_fuzzy_caches,
 )
+from nahuatl_data_pipeline_spark.session import pin
 
 
 class SnapshotIndex(NamedTuple):
@@ -156,9 +157,7 @@ def dedup_against_snapshot(
     # unprobed — probing a post-join frame would materialize its AQE
     # stages.
     new = spread_narrow(new)
-    release_fuzzy_caches()  # BEFORE persisting (fuzzy_dedup ordering
-    # contract: unpersisting an identical canonical plan AFTER creating
-    # this call's persist would evict the shared cache entry)
+    release_fuzzy_caches()
     own_index = index is None
     if own_index:
         idx = snapshot_index(seen, id_col, text_col, shingle_n, num_perms)
@@ -171,20 +170,19 @@ def dedup_against_snapshot(
     if jaccard_threshold is None:
         return survivors
 
-    # shingles feed both the bucket agg and the verify join — persist so
+    # shingles feed both the bucket agg and the verify join — pin so
     # the per-row shingling runs once per side, not twice
-    nsh = _shingles(survivors, id_col, text_col, shingle_n, "__nid", "__nsh").persist()
-    nsh.count()  # eager: bucket leg + verify join read the cache
+    nsh = pin(
+        _shingles(survivors, id_col, text_col, shingle_n, "__nid", "__nsh"),
+        eager=True, pool=_LIVE_CACHES,
+    )
     nbk = _bucket_keys(nsh, "__nid", "__nsh", num_perms)
     if own_index:
-        ssh = idx.shingles.persist()
-        ssh.count()
+        ssh = pin(idx.shingles, eager=True, pool=_LIVE_CACHES)
         sbk = _bucket_keys(ssh, "__sid", "__ssh", num_perms)
-        _register_caches(nsh, ssh)
     else:
         ssh = idx.shingles
         sbk = idx.buckets
-        _register_caches(nsh)
 
     cand = (
         nbk.join(sbk, ["__p", "__b"]).select("__nid", "__sid").distinct()

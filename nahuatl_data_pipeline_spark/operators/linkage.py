@@ -19,13 +19,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from nahuatl_data_pipeline_spark.session import CachePool
+from nahuatl_data_pipeline_spark.session import CachePool, pin
 
-# Generation-based cache management, mirroring fuzzy_dedup.py's contract
-# but with a SEPARATE generation: each capped linkage call releases the
-# previous linkage call's persisted block frame. A shared generation
-# with fuzzy_dedup would let a linkage call evict an in-flight fuzzy
-# call's shingle caches (and vice versa) when the families interleave.
+# A pool of its own: one shared with fuzzy_dedup would let interleaved
+# linkage and fuzzy calls evict each other's in-flight caches.
 _LIVE_CACHES = CachePool()
 release_linkage_caches = _LIVE_CACHES.release
 
@@ -55,22 +52,18 @@ def blocked_levenshtein_pairs(
     ).filter(F.col("__blk").isNotNull())
     if max_block_size is not None:
         sizes = keyed.groupBy("__blk").agg(F.count(F.lit(1)).alias("__bc"))
-        # materialize: both a/b self-join legs consume `keyed`, and an
-        # unmaterialized semi-join would re-run the scan + sizes
-        # aggregate per leg (4 input scans instead of 1 — the round-5
-        # exchange-reuse trap), on exactly the large-corpus runs the
-        # cap targets. persist (recomputable on executor loss), NOT
-        # localCheckpoint (executor-local, unrecoverable on a real
-        # cluster); lifetime rides linkage's OWN cache generation —
-        # NOT fuzzy_dedup's, which would evict an in-flight fuzzy
-        # call's shingle caches when the two families interleave.
-        release_linkage_caches()  # BEFORE persisting (ordering contract)
-        keyed = keyed.join(
-            sizes.filter(F.col("__bc") <= max_block_size), ["__blk"],
-            "left_semi",
-        ).persist()
-        keyed.count()  # eager: both self-join legs read the cache
-        _LIVE_CACHES.register(keyed)
+        # pin: both self-join legs read `keyed`, and an unmaterialized
+        # semi-join would re-run the scan + sizes aggregate per leg (4
+        # input scans instead of 1 — the round-5 exchange-reuse trap).
+        # A persist, not a checkpoint: recomputable on executor loss.
+        release_linkage_caches()
+        keyed = pin(
+            keyed.join(
+                sizes.filter(F.col("__bc") <= max_block_size), ["__blk"],
+                "left_semi",
+            ),
+            eager=True, pool=_LIVE_CACHES,
+        )
     a = keyed.select(
         F.col("__id").alias("id_a"), F.col("__t").alias("text_a"), "__blk"
     )

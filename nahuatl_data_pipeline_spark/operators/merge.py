@@ -29,6 +29,8 @@ import functools
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nahuatl_data_pipeline_spark.session import pin
+
 
 def _gated_broadcast(df: DataFrame, max_rows: int) -> DataFrame:
     """Broadcast hint only when a bounded ``limit().count()`` probe says
@@ -37,7 +39,7 @@ def _gated_broadcast(df: DataFrame, max_rows: int) -> DataFrame:
     instead of an unbounded forced broadcast. The probed side is
     localCheckpoint'ed first: it is consumed twice (probe + join), and
     without materialization the probe would re-run its whole lineage."""
-    df = df.localCheckpoint(eager=True)
+    df = pin(df, eager=True, truncate=True)
     if df.limit(max_rows + 1).count() <= max_rows:
         return F.broadcast(df)
     return df
@@ -121,7 +123,7 @@ def scd2_merge(
     # updates is consumed four times (probe, pairs, new_keys, new_rows):
     # materialize it once so the probe and every join leg read the
     # checkpoint instead of re-running the batch's lineage.
-    updates = updates.localCheckpoint(eager=True)
+    updates = pin(updates, eager=True, truncate=True)
     fits = (
         updates.limit(broadcast_max_updates + 1).count()
         <= broadcast_max_updates
@@ -139,10 +141,13 @@ def scd2_merge(
     # subtrees (the tfidf.py lesson). With it, the base table is
     # scanned exactly twice: once for the pairs join, once for the
     # output tagging.
-    matched = pairs.select(
-        *[F.col(f"b.{k}") for k in keys],
-        _changed_predicate(tracked).alias("__changed"),
-    ).localCheckpoint(eager=True)
+    matched = pin(
+        pairs.select(
+            *[F.col(f"b.{k}") for k in keys],
+            _changed_predicate(tracked).alias("__changed"),
+        ),
+        eager=True, truncate=True,
+    )
     changed_keys = matched.filter(F.col("__changed")).drop("__changed")
     matched_keys = matched.drop("__changed")
     base_rows = (

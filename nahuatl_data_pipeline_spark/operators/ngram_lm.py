@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from nahuatl_data_pipeline_spark.functions.text_analysis import tokens
 from nahuatl_data_pipeline_spark.operators.tfidf import tokenize
+from nahuatl_data_pipeline_spark.session import pin
 
 
 def bigram_occurrences(
@@ -130,10 +131,10 @@ def perplexity_buckets(
         weighted_quantile,
     )
 
-    scored = (
+    scored = pin(
         bigram_logprob(docs, id_col, text_col, alpha=alpha)
         .join(docs.select(id_col, group_col), id_col)
-        .withColumn("__one", F.lit(1))
+        .withColumn("__one", F.lit(1)),
         # materialize ONCE: the weighted_quantile call (reading its
         # input several times internally) plus the final join would
         # otherwise replay the LM scoring's explode + window shuffles
@@ -142,7 +143,7 @@ def perplexity_buckets(
         # stream it truncates). LAZY: weighted_quantile's internal
         # cut-collecting action is the first consumer and materializes
         # the blocks in its own job — one job fewer per call (r13).
-        .localCheckpoint(eager=False)
+        truncate=True,
     )
     # both tertile cuts from ONE banded-prefix-sum pass (r13:
     # weighted_quantile qs= multi-quantile mode — the old per-cut call

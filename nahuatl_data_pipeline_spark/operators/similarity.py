@@ -17,10 +17,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from nahuatl_data_pipeline_spark.functions.spread import spread_narrow
-from nahuatl_data_pipeline_spark.session import CachePool
+from nahuatl_data_pipeline_spark.session import CachePool, pin
 
 
 # Query-side broadcast gate (rows). Embedding rows are wide (dim × 8 B), so
@@ -30,38 +29,30 @@ from nahuatl_data_pipeline_spark.session import CachePool
 # corpus) blows past it and must NOT be collected to the driver.
 BROADCAST_MAX_QUERY_ROWS = 100_000
 
-# Generation-based cache pool: each similarity call releases the
-# previous call's persisted intermediates (corpus side and the gate's
-# query-side pin) at its entry, BEFORE persisting its own.
 _LIVE_CACHES = CachePool()
 release_similarity_caches = _LIVE_CACHES.release
-_register_caches = _LIVE_CACHES.register
 
 
 def _gate_and_pin(df: DataFrame, max_rows: int) -> tuple[DataFrame, bool]:
     """Broadcast gate + materialization fused into ONE job (the
     anomaly.py ``_gated_stats_join`` pattern, r13; VERDICT r13 task #5).
 
-    The old ``_fits`` probe (``limit(max_rows+1).count()``) was a whole
-    job whose work was thrown away: the gated frame was then recomputed
-    from scratch by ``toPandas``/the broadcast exchange/the cartesian.
-    Here the frame is persisted and the full count is the materializing
-    action — one job yields both the gate decision and pinned blocks
-    every consumer (driver collect, broadcast build thread, each
-    cartesian block) reads instead of re-deriving the query-side plan.
-    The cache is memory+disk, so an over-gate corpus-scale side spills
-    rather than OOMs — and the blocked-cartesian fallback previously
-    recomputed that side once per corpus block, so pinning it is the
-    bigger win exactly there.
+    The frame is pinned and the full count materializes it: one job
+    yields both the gate decision and the blocks every consumer (driver
+    collect, broadcast build thread, each cartesian block) reads instead
+    of re-deriving the query-side plan. The cache spills to disk, so an
+    over-gate corpus-scale side spills rather than OOMs, and the
+    blocked-cartesian fallback reads it once per corpus block. A bounded
+    ``limit(max_rows + 1)`` probe would save nothing, because a cached
+    partition is always computed in full (such a probe over a persisted
+    16-partition, 4M-row frame cached all 16 partitions).
 
     The pin joins the similarity cache generation, which the CALLER
-    releases at its entry (never here: ``ivf_topk`` registers its corpus
-    cache before gating). Returns ``(pinned_df, fits)``; output values
-    are those of the unpinned plan — a persisted frame, like the local
-    checkpoint it replaced, materializes the same rows — so no query
-    needs re-certification."""
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _register_caches(df)
+    releases at its entry (never here: ``ivf_topk`` pins its corpus
+    side before gating). Returns ``(pinned_df, fits)``; a pinned frame
+    holds the same rows as the unpinned plan, so no query needs
+    re-certification."""
+    df = pin(df, pool=_LIVE_CACHES)
     return df, df.count() <= max_rows
 
 
@@ -200,7 +191,7 @@ def cosine_topk(
     cond = (
         F.col("query_id") != F.col("neighbor_id") if exclude_self else F.lit(True)
     )
-    release_similarity_caches()  # before the gate persists
+    release_similarity_caches()
     return _brute_topk(q, c, cond, k, round_to, broadcast_max_queries, dim)
 
 
@@ -269,7 +260,7 @@ def cosine_neardup_pairs(
     """
     q = queries.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__qv"))
     c = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__cv"))
-    release_similarity_caches()  # before the gate persists
+    release_similarity_caches()
     q, fits = _gate_and_pin(q, broadcast_max_queries)
     if fits:
         qpd = q.filter(F.col("__qv").isNotNull()).toPandas()
@@ -373,13 +364,12 @@ def lsh_topk(
             array_to_vector(F.transform(arr, lambda x: x / nrm)).alias(out),
         )
 
-    release_similarity_caches()  # before persisting (see CachePool)
+    release_similarity_caches()
     qn = normed(queries, "features")
     # The corpus side is consumed by fit's input-dim probe AND the
-    # similarity join; persist so normalization + vector conversion run
+    # similarity join; pin so normalization + vector conversion run
     # once (and the emptiness probe below is a cheap cached lookup).
-    cn = normed(corpus, "features").persist(StorageLevel.MEMORY_AND_DISK)
-    _register_caches(cn)
+    cn = pin(normed(corpus, "features"), pool=_LIVE_CACHES)
     # fit on an empty corpus throws; an empty result is the right answer
     # (a date-filtered corpus partition can legitimately be empty)
     if cn.isEmpty():
@@ -475,16 +465,13 @@ def ivf_topk(
             F.transform(arr, lambda x: x / nrm).alias(vec_out),
         )
 
-    release_similarity_caches()  # before persisting (see CachePool)
+    release_similarity_caches()
     # The normalized corpus feeds THREE consumers (row count, the driver
-    # fit sample, cell assignment + the final join side) — persist and
+    # fit sample, cell assignment + the final join side) — pin and
     # materialize once; the interpreted array-normalization lambdas are
     # the expensive projection here.
-    cn = normed(corpus, "neighbor_id", "__cv").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    cn = pin(normed(corpus, "neighbor_id", "__cv"), pool=_LIVE_CACHES)
     n_rows = cn.count()  # eager cache population doubles as the row count
-    _register_caches(cn)
     if n_rows == 0:
         release_similarity_caches()
         return _empty_topk_result(corpus, id_col)
@@ -615,7 +602,7 @@ def hard_negatives(
         F.col(label_col).alias("__cl"),
     )
     cond = ~F.col("__ql").eqNullSafe(F.col("__cl"))
-    release_similarity_caches()  # before the gate persists
+    release_similarity_caches()
     return _brute_topk(q, c, cond, k, round_to, broadcast_max_queries, dim)
 
 
@@ -705,19 +692,17 @@ def margin_topk(
         if exclude_self
         else c.crossJoin(F.broadcast(q))
     )
-    scored = (
-        paired
-        .select(
+    scored = pin(
+        paired.select(
             "query_id",
             "neighbor_id",
             F.round(
                 cosine_cols("__qv", "__cv", dim), round_to
             ).alias("cosine"),
-        )
-        .persist()
+        ),
+        eager=True,  # three consumers read it
+        pool=_LIVE_CACHES,
     )
-    scored.count()  # eager: three consumers read the cache
-    _register_caches(scored)
     wq = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id")
     )

@@ -33,6 +33,7 @@ from nahuatl_data_pipeline_spark.functions.hashing import (
     hash64,
     minhash_constants,
 )
+from nahuatl_data_pipeline_spark.session import pin
 
 
 def _bucket(key, row: int, width: int):
@@ -262,7 +263,7 @@ def bloom_prefilter(
     each of the depth join legs consumes it, and without the checkpoint
     the build-side distinct would re-run per leg (the exchange-reuse
     lesson). ``width``/``depth`` must match the build."""
-    positions = positions.localCheckpoint(eager=True)
+    positions = pin(positions, eager=True, truncate=True)
     out = df
     for r in range(depth):
         # __-prefixed alias: an unqualified "bucket" would be ambiguous

@@ -32,10 +32,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from nahuatl_data_pipeline_spark.functions.text_analysis import tokens
-from nahuatl_data_pipeline_spark.session import CachePool
+from nahuatl_data_pipeline_spark.session import CachePool, pin
 
-# Generation-based cache pool: each tfidf_cosine_pairs call releases the
-# previous call's persisted posting index and registers its own.
 _LIVE_CACHES = CachePool()
 release_tfidf_caches = _LIVE_CACHES.release
 
@@ -286,9 +284,7 @@ def tfidf_cosine_pairs(
     # fits with room to spare. Lineage truncation isn't needed here —
     # the plan is not iterative — only reuse is.
     release_tfidf_caches()
-    normed = normed.persist()
-    normed.count()  # eager: both self-join legs read the cache
-    _LIVE_CACHES.register(normed)
+    normed = pin(normed, eager=True, pool=_LIVE_CACHES)
     a = normed.select(
         F.col("__doc").alias("id_a"), "term", F.col("wn").alias("wa")
     )
@@ -372,7 +368,7 @@ def pmi_cooccurrence(
     # three consumers (both self-join legs + the marginal count) —
     # materialize once or the tokenize subtree runs three times
     # (module lesson, same as tfidf_cosine_pairs' posting table)
-    dt = dt.localCheckpoint(eager=True)
+    dt = pin(dt, eager=True, truncate=True)
     tc = dt.groupBy("term").agg(F.count(F.lit(1)).alias("n_t"))
     if max_vocab is not None:
         # Output-identical pre-cut: a term in < min_pair_docs documents

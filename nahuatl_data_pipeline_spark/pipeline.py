@@ -27,6 +27,7 @@ from nahuatl_data_pipeline_spark.operators.filters import (
     translation_pair_filter,
 )
 from nahuatl_data_pipeline_spark.operators.split import seeded_split
+from nahuatl_data_pipeline_spark.session import run_scope
 from nahuatl_data_pipeline_spark.sources.readers import read_layer_dir
 from nahuatl_data_pipeline_spark.sources.writers import write_splits
 
@@ -85,6 +86,7 @@ def normalize_records(
     return out
 
 
+@run_scope()
 def run_corpus_pipeline(
     spark: SparkSession,
     layer_dirs: dict[str, str],

@@ -22,11 +22,12 @@ filtered once at the end, so per-rule drop accounting rides the write
 job's single pass through an ``Observation`` (conditional counts) —
 no per-stage count() re-scans, the same discipline as
 ``pipeline.run_corpus_pipeline``. The internal actions are the eager
-cache counts of banded candidate generation
+pins of banded candidate generation
 (``fuzzy_dedup.banded_candidate_pairs``) and, inside cluster dedup, the
 pair-graph checkpoint plus one bounded probe; only a graph above
 ``components.DRIVER_MAX_EDGES`` edges adds propagation rounds
-(documented there).
+(documented there). The run executes in a ``session.run_scope``, which
+releases every one of those pins when it returns or raises.
 
 Scale shape: PII + C4 are codegen projections (no shuffle); repetition
 adds two doc-keyed partial-agg groupBys; dedup is the banded bucket
@@ -51,6 +52,7 @@ from nahuatl_data_pipeline_spark.operators.curation import (
     repetition_signals,
 )
 from nahuatl_data_pipeline_spark.operators.fuzzy_dedup import ngram_jaccard_pairs
+from nahuatl_data_pipeline_spark.session import run_scope
 
 
 def url_head_stages(
@@ -194,6 +196,7 @@ class CurationConfig:
     psl_rules: dict | None = None
 
 
+@run_scope()
 def run_curation_pipeline(
     spark: SparkSession,
     docs: DataFrame,

@@ -20,6 +20,7 @@ from nahuatl_data_pipeline_spark.registry import (
     register,
 )
 from nahuatl_data_pipeline_spark.schemas import load_table
+from nahuatl_data_pipeline_spark.session import pin
 
 # ---------------------------------------------------------------------------
 # q104: deterministic weighted top-k sample (Efraimidis–Spirakis A-ES)
@@ -522,10 +523,9 @@ def q111_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # one shingle pass: exact counts first (checkpointed), sketch built
     # FROM the counts — cell-wise identical to the streaming build
-    counts = (
-        stream.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
+    counts = pin(
+        stream.groupBy("term").agg(F.count(F.lit(1)).alias("cnt")),
+        eager=True, truncate=True,
     )
     sketch = cms_build(
         counts, "term", width=_Q111_W, depth=_Q111_D, count_col="cnt"
@@ -1022,10 +1022,9 @@ def q121_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from it, which materializes these blocks in the same job — an
     # eager checkpoint here would pay one extra scan job for nothing
     # (the r13 gated-stats-join lesson).
-    sel = (
-        orders.filter(F.col("o_totalprice") > 400000)
-        .select("o_orderkey")
-        .localCheckpoint(eager=False)
+    sel = pin(
+        orders.filter(F.col("o_totalprice") > 400000).select("o_orderkey"),
+        truncate=True,
     )
     pos = bloom_positions(sel, "o_orderkey", width=_Q121_W, depth=3)
     passed = bloom_prefilter(li, "l_orderkey", pos, width=_Q121_W, depth=3)

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from nahuatl_data_pipeline_spark.functions.text_analysis import tokens
 from nahuatl_data_pipeline_spark.registry import register
 from nahuatl_data_pipeline_spark.schemas import load_table
+from nahuatl_data_pipeline_spark.session import pin
 
 # ---------------------------------------------------------------------------
 # q122: minwise set-overlap sketch (cardinality + Jaccard, bit-exact)
@@ -241,7 +242,7 @@ def q124_token_topn_other(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     occ = docs.select(F.explode(tokens(F.lower(F.col("text")))).alias("t"))
-    out = topn_other(occ, "t", n=20).localCheckpoint(eager=True)
+    out = pin(topn_other(occ, "t", n=20), eager=True, truncate=True)
     grand = out.agg(F.sum("total").alias("__g"))
     return (
         out.crossJoin(F.broadcast(grand))

@@ -11,6 +11,8 @@ across clusters.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -82,31 +84,86 @@ def get_spark(
     return builder.getOrCreate()
 
 
-class CachePool:
-    """One operator family's generation of persisted intermediates.
+# the pins of the calling thread's innermost run_scope; None outside one
+_SCOPE: ContextVar[CachePool | None] = ContextVar("pin_scope", default=None)
 
-    Each call of the family releases the previous call's frames and
-    registers its own, so a long-lived session holds at most one call's
-    caches while the current result stays valid however the caller
-    derives from it. ``release`` must run at the START of a call, BEFORE
-    it persists anything: Spark's CacheManager matches cached plans by
-    canonical form, so unpersisting the previous call's handle after
-    re-persisting an identical plan would evict the shared entry.
+
+class CachePool(list):
+    """One operator family's generation of persist pins: each call of the
+    family releases the previous call's pins, so a long session holds at
+    most one call's caches and the current result stays valid however the
+    caller derives from it. Ordering contract: ``release`` runs at the
+    START of a call, BEFORE it pins anything. Spark's CacheManager
+    matches cached plans by canonical form, so unpersisting the previous
+    handle after re-persisting an identical plan evicts the shared entry
+    and runs the new call uncached (14 s -> 78 s on back-to-back sf1 q38).
     """
 
-    def __init__(self) -> None:
-        self._frames: list[DataFrame] = []
-
-    def __iter__(self):
-        return iter(self._frames)
-
-    def register(self, *frames: DataFrame) -> None:
-        self._frames.extend(frames)
-
     def release(self) -> None:
-        """Unpersist every frame registered since the last release."""
-        while self._frames:
-            try:
-                self._frames.pop().unpersist()
-            except Exception:
-                pass  # session already stopped
+        while self:
+            unpin(self.pop())
+
+
+def pin(
+    df: DataFrame,
+    *,
+    eager: bool = False,
+    truncate: bool = False,
+    pool: CachePool | None = None,
+) -> DataFrame:
+    """Materialize ``df`` for reuse; the engine's one way to pin a frame.
+
+    ``truncate=True`` is a lineage cut, ``localCheckpoint(eager=eager)``.
+    Otherwise the frame is persisted at PySpark's default level, which
+    spills to disk as the serialized ``MEMORY_AND_DISK`` does (a level
+    never changes values), and ``eager`` runs one ``count()``: pin
+    eagerly when two legs of one job read the frame, or the legs race to
+    fill the cache and each recomputes what the other has not finished.
+
+    The owner that releases the pin, first match wins: the calling
+    thread's innermost :func:`run_scope`; else ``pool``, for builders
+    that return lazy frames over their pins; else nobody, so the caller
+    keeps the handle for :func:`unpin` (the pair-table LRU in
+    ``fuzzy_dedup``) or garbage collection frees a checkpoint. Never
+    release a checkpoint under a live frame: a released persist pin only
+    recomputes, but every frame derived from a released checkpoint
+    fails. So a checkpoint never joins a pool.
+    """
+    if truncate:
+        df = df.localCheckpoint(eager=eager)
+    else:
+        df = df.persist()
+        if eager:
+            df.count()
+    scope = _SCOPE.get()
+    if scope is not None:
+        scope.append(df)
+    elif pool is not None and not truncate:
+        pool.append(df)
+    return df
+
+
+def unpin(df: DataFrame) -> None:
+    """Release a pin: unpersist a persisted frame, or drop a checkpoint's
+    blocks from its RDD (``unpersist`` on the frame frees nothing)."""
+    try:
+        if df.is_cached:
+            df.unpersist()
+        else:
+            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except Exception:
+        pass  # session already stopped
+
+
+@contextmanager
+def run_scope():
+    """Release every pin the calling thread makes inside the block when it
+    exits, raised or not; nothing may read those pins afterwards. Both
+    pipelines run in one, so a long session holds no pins between runs."""
+    pins = CachePool()
+    token = _SCOPE.set(pins)
+    try:
+        yield
+    finally:
+        _SCOPE.reset(token)
+        pins.release()
