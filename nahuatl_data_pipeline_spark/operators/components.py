@@ -23,15 +23,17 @@ Beyond", SOCC'14), which converges in O(log n) rounds at the cost of a
 more complex per-round plan.
 
 Small graphs skip the rounds: :func:`connected_components` probes the
-symmetrized edge list with one bounded ``limit(DRIVER_MAX_EDGES + 1)``
-collect, and a graph at or under :data:`DRIVER_MAX_EDGES` is labeled on
-the driver by a union-find that keeps the same min-id labels, returned
-as a local DataFrame. The dedup graphs of a curation run are small
-(hundreds of verified pairs per few thousand docs), so this replaces
-~20 one-to-five-task round and checkpoint jobs with the edge-list
-checkpoint and one probe job. Above the bound the distributed
-propagation / star path runs unchanged; the probe is its only extra
-work.
+symmetrized edge list, under a lazy persist pin, with one bounded
+``limit(DRIVER_MAX_EDGES + 1)`` collect, and a graph at or under
+:data:`DRIVER_MAX_EDGES` is labeled on the driver by a union-find that
+keeps the same min-id labels, returned as a local DataFrame. The dedup
+graphs of a curation run are small (hundreds of verified pairs per few
+thousand docs), so this replaces ~20 one-to-five-task round and
+checkpoint jobs with the one probe job, and the pin is released before
+the call returns. Above the bound the edge list is checkpointed from
+the pinned frame, whose shuffle the probe already wrote, so the
+upstream pair computation runs once; the distributed propagation /
+star path then runs unchanged.
 
 The bound was measured on a 4-vCPU host (local[4], warm JVM): graphs
 of disjoint 2-4-vertex cliques behind a shuffle, the whole call plus
@@ -66,7 +68,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nahuatl_data_pipeline_spark.session import pin
+from nahuatl_data_pipeline_spark.session import pin, unpin
 
 # symmetrized edge rows labeled on the driver (measured: module docstring)
 DRIVER_MAX_EDGES = 50_000
@@ -155,23 +157,29 @@ def connected_components(
     sym = edges.select(
         F.col(src).cast("long").alias("s"), F.col(dst).cast("long").alias("d")
     )
-    # Materialize the symmetrized edge list ONCE: every round's join
-    # re-reads it, and without this checkpoint each round would re-run
-    # the entire upstream pair computation (a banded-Jaccard query at
-    # corpus scale) — the sf1 self-run measured q58 at 72 s from exactly
-    # that recompute, vs the edges-once cost plus cheap rounds after.
-    sym = pin(
-        sym.unionByName(
-            sym.select(F.col("d").alias("s"), F.col("s").alias("d"))
-        ).distinct(),
-        eager=True, truncate=True,
-    )
-    # bounded probe over the checkpoint: at most DRIVER_MAX_EDGES + 1
-    # rows ever reach the driver, and the graph is not recomputed
-    head = sym.limit(DRIVER_MAX_EDGES + 1).collect()
+    sym = sym.unionByName(
+        sym.select(F.col("d").alias("s"), F.col("s").alias("d"))
+    ).distinct()
+    # bounded probe of the edge list: at most DRIVER_MAX_EDGES + 1 rows
+    # ever reach the driver, and a small graph is read this once. The
+    # lazy persist pin keeps one plan, so one shuffle, under both the
+    # probe and the checkpoint below: above the bound the checkpoint
+    # reads the probe's shuffle output instead of re-running the
+    # upstream pair computation
+    cached = pin(sym)
+    head = cached.limit(DRIVER_MAX_EDGES + 1).collect()
     if len(head) <= DRIVER_MAX_EDGES:
+        unpin(cached)
         return _label_on_driver(sym.sparkSession, head)
 
+    # Above the bound, checkpoint the symmetrized edge list: every
+    # round's join re-reads it, and without the lineage cut each round
+    # would re-run the entire upstream pair computation (a banded-
+    # Jaccard query at corpus scale) — the sf1 self-run measured q58 at
+    # 72 s from exactly that recompute, vs the edges-once cost plus
+    # cheap rounds after. The checkpoint no longer needs the persist pin.
+    sym = pin(cached, eager=True, truncate=True)
+    unpin(cached)
     labels = pin(
         sym.select(F.col("s").alias("id"))
         .distinct()

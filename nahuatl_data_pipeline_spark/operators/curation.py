@@ -16,9 +16,13 @@ corpus build needs (they ship alongside the dedup family as first-class
   minimum length.
 
 All three are pure DataFrame ops: tokenization and shingling via
-built-in split/regex expressions, counting via explode + two-level
-groupBy (map-side partial agg), rules via codegen string predicates.
-No Python UDFs anywhere.
+built-in split/regex expressions, rules via codegen string predicates.
+No Python UDFs anywhere. The two per-document gates (repetition, C4)
+are row-local *attach* operators: one projection that returns the input
+rows with their signal columns and ``keep_doc``, no shuffle — a
+document's token-frequency table fits in its row, so the mode fractions
+come from its sorted token array. Only decontamination shuffles: its
+matched grams are counted per doc with a map-side partial aggregate.
 """
 
 from __future__ import annotations
@@ -31,76 +35,106 @@ from nahuatl_data_pipeline_spark.functions.spread import spread_narrow
 from nahuatl_data_pipeline_spark.functions.text_analysis import tokens
 
 
+def _longest_run(sorted_arr: F.Column) -> F.Column:
+    """Length of the longest run of equal adjacent elements: over a
+    sorted array, the count of its most frequent element. One
+    ``aggregate`` with a ``(prev, run, best)`` accumulator; elements
+    must be non-NULL (a NULL ``prev`` compares unequal, so it only
+    marks the start)."""
+    init = F.struct(
+        F.lit(None).cast("string").alias("prev"),
+        F.lit(0).alias("run"),
+        F.lit(0).alias("best"),
+    )
+
+    def step(acc: F.Column, x: F.Column) -> F.Column:
+        run = F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1))
+        return F.struct(
+            x.alias("prev"),
+            run.alias("run"),
+            F.greatest(acc["best"], run).alias("best"),
+        )
+
+    return F.aggregate(sorted_arr, init, step, lambda acc: acc["best"])
+
+
+def _attach_guard(df: DataFrame, op: str, names: tuple[str, ...]) -> None:
+    """Raise if ``df`` already has one of the columns ``op`` attaches
+    (Spark resolves names case-insensitively, so the check does too)."""
+    have = {c.lower() for c in df.columns}
+    clash = [c for c in names if c in have]
+    if clash:
+        raise ValueError(
+            f"{op}: the input already has column(s) {clash}, which it "
+            "attaches; rename or drop them first"
+        )
+
+
+_REPETITION_COLUMNS = (
+    "n_tokens", "distinct_frac", "top_token_frac", "top_bigram_frac", "keep_doc",
+)
+_C4_COLUMNS = (
+    "n_words", "ends_with_punct", "has_brace", "has_bad_phrase", "keep_doc",
+)
+
+
 def repetition_signals(
     df: DataFrame,
-    id_col: str = "doc_id",
     text_col: str = "text",
     max_top_bigram_frac: float = 0.18,
     max_top_token_frac: float = 0.30,
 ) -> DataFrame:
-    """Per-document repetition statistics + a Gopher-style keep flag.
+    """Per-document repetition statistics + a Gopher-style keep flag,
+    attached to ``df``: one row per input row, the input's columns plus
+    ``n_tokens, distinct_frac, top_token_frac, top_bigram_frac,
+    keep_doc``; a ``df`` that already has one of those names raises
+    ``ValueError``.
 
-    Output: ``(id, n_tokens, distinct_frac, top_token_frac,
-    top_bigram_frac, keep_doc)``; documents with fewer than 2 tokens are
-    excluded (no bigram exists, and the signals are meaningless).
+    A document with fewer than 2 tokens, or a NULL text, has no bigram,
+    so its three fractions are NULL and ``keep_doc`` is false;
+    ``n_tokens`` is its token count (NULL for a NULL text).
 
-    distinct_frac comes straight off the token array (array_distinct —
-    no shuffle); the two mode fractions need a frequency table, so each
-    is explode → groupBy(id, gram) → groupBy(id), both shuffles keyed by
-    the doc id with map-side combine. Thresholds default to Gopher's
-    published cutoffs; tune per corpus.
+    Every signal is row-local, so the operator is one projection with
+    no shuffle (and runs unchanged on a stream). The text is tokenized
+    once, into a column of its own projection that every signal reads.
+    A mode fraction is the longest run of the sorted token (bigram)
+    array over its size — the same value, after ``round(…, 6)``, as the
+    count of the most frequent gram over the total. Thresholds default
+    to Gopher's published cutoffs; tune per corpus.
     """
-    tk = tokens(F.lower(F.col(text_col)))
-    base = (
-        df.select(F.col(id_col).alias("id"), tk.alias("tk"))
-        .filter(F.size("tk") >= 2)
-    )
-
-    def mode_frac(grams: DataFrame, out: str) -> DataFrame:
-        return (
-            grams.groupBy("id", "g")
-            .count()
-            .groupBy("id")
-            .agg(
-                F.round(
-                    F.max("count") / F.sum("count"), 6
-                ).alias(out)
-            )
-        )
-
-    tok = mode_frac(base.select("id", F.explode("tk").alias("g")), "top_token_frac")
-    bigram = F.transform(
-        F.sequence(F.lit(1), F.size("tk") - 1),
+    _attach_guard(df, "repetition_signals", _REPETITION_COLUMNS)
+    tk = F.col("__rep_tk")
+    n = F.size(tk)
+    bigrams = F.transform(
+        F.sequence(F.lit(1), n - 1),
         lambda i: F.concat(
-            F.element_at(F.col("tk"), i),
-            F.lit(" "),
-            F.element_at(F.col("tk"), i + 1),
+            F.element_at(tk, i), F.lit(" "), F.element_at(tk, i + 1)
         ),
     )
-    big = mode_frac(
-        base.select("id", F.explode(bigram).alias("g")), "top_bigram_frac"
-    )
-    stats = base.select(
-        "id",
-        F.size("tk").cast("long").alias("n_tokens"),
-        F.round(F.size(F.array_distinct("tk")) / F.size("tk"), 6).alias(
-            "distinct_frac"
-        ),
-    )
-    return (
-        stats.join(tok, "id")
-        .join(big, "id")
+
+    def frac(num: F.Column, den: F.Column) -> F.Column:
+        return F.when(n >= 2, F.round(num / den, 6))
+
+    signals = (
+        df.withColumn("__rep_tk", tokens(F.lower(F.col(text_col))))
         .select(
-            F.col("id").alias(id_col),
-            "n_tokens",
-            "distinct_frac",
-            "top_token_frac",
-            "top_bigram_frac",
-            (
-                (F.col("top_bigram_frac") <= max_top_bigram_frac)
-                & (F.col("top_token_frac") <= max_top_token_frac)
-            ).alias("keep_doc"),
+            "*",
+            n.cast("long").alias("n_tokens"),
+            frac(F.size(F.array_distinct(tk)), n).alias("distinct_frac"),
+            frac(_longest_run(F.array_sort(tk)), n).alias("top_token_frac"),
+            frac(_longest_run(F.array_sort(bigrams)), n - 1).alias(
+                "top_bigram_frac"
+            ),
         )
+        .drop("__rep_tk")
+    )
+    return signals.select(
+        "*",
+        F.coalesce(
+            (F.col("top_bigram_frac") <= max_top_bigram_frac)
+            & (F.col("top_token_frac") <= max_top_token_frac),
+            F.lit(False),
+        ).alias("keep_doc"),
     )
 
 
@@ -160,37 +194,43 @@ def contamination_flags(
 
 def c4_rule_flags(
     df: DataFrame,
-    id_col: str = "doc_id",
     text_col: str = "text",
     min_words: int = 50,
     bad_phrases: tuple[str, ...] = ("lorem ipsum",),
 ) -> DataFrame:
-    """C4 cleaning rules as per-document flags + combined keep.
+    """C4 cleaning rules as per-document flags + combined keep, attached
+    to ``df``: one row per input row, the input's columns plus
+    ``n_words, ends_with_punct, has_brace, has_bad_phrase, keep_doc``
+    (a ``df`` that already has one of those names raises ``ValueError``).
+    Flags instead of a silent filter so curation runs can report
+    per-rule rejection rates (the C4 paper reports exactly these) before
+    committing to a drop.
 
-    ``(id, n_words, ends_with_punct, has_brace, has_bad_phrase,
-    keep_doc)``. Flags instead of a silent filter so curation runs can
-    report per-rule rejection rates (the C4 paper reports exactly these)
-    before committing to a drop.
+    One row-local projection, no shuffle. Each flag, the token count
+    among them, is a named column before ``keep_doc`` combines them: an
+    expression repeated under the ``AND`` would escape subexpression
+    elimination and run per use.
     """
+    _attach_guard(df, "c4_rule_flags", _C4_COLUMNS)
     t = F.col(text_col)
     lower = F.lower(t)
     bad = F.lit(False)
     for p in bad_phrases:
         bad = bad | lower.contains(p)
-    n_words = F.size(tokens(lower)).cast("long")
-    ends = t.rlike(r'[.!?"]\s*$')
-    brace = t.contains("{") | t.contains("}")
-    return df.select(
-        F.col(id_col),
-        n_words.alias("n_words"),
-        ends.alias("ends_with_punct"),
-        brace.alias("has_brace"),
+    flags = df.select(
+        "*",
+        F.size(tokens(lower)).cast("long").alias("n_words"),
+        t.rlike(r'[.!?"]\s*$').alias("ends_with_punct"),
+        (t.contains("{") | t.contains("}")).alias("has_brace"),
         bad.alias("has_bad_phrase"),
+    )
+    return flags.select(
+        "*",
         (
-            ends
-            & ~brace
-            & ~bad
-            & (n_words >= min_words)
+            F.col("ends_with_punct")
+            & ~F.col("has_brace")
+            & ~F.col("has_bad_phrase")
+            & (F.col("n_words") >= min_words)
         ).alias("keep_doc"),
     )
 

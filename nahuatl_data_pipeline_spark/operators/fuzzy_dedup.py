@@ -176,8 +176,11 @@ def _signature_bands(
 ) -> tuple[DataFrame, DataFrame]:
     """Shared shingle → minhash signature → exploded band-key legs of
     the banded pipeline. Returns (shd, bands); ``shd`` (the shingle
-    frame) is pinned eagerly into the family's generation, which the
-    caller has released before calling.
+    frame) is pinned into the family's generation, which the caller has
+    released before calling. Both pins are lazy: the caller's first
+    action fills them (the candidate count, for
+    :func:`banded_candidate_pairs`), so no count job runs just to fill
+    a cache.
 
     ``persist_sigs=True`` additionally pins the SIGNATURE frame (one
     row per doc, ``num_hashes`` longs — the pipeline's narrowest frame,
@@ -200,10 +203,10 @@ def _signature_bands(
     shuffle to one row per doc. min() is insensitive to duplicate
     shingles, so this equals the per-row array_min formulation exactly.
 
-    ``persist_shd=False`` skips the persist AND its eager-count job:
-    right for a side known to be small (a broadcast eval suite), where
-    re-running the shingling per consuming leg costs less than a
-    dedicated materialization job (r13 — the q157 eval side).
+    ``persist_shd=False`` skips the persist: right for a side known to
+    be small (a broadcast eval suite), where re-running the shingling
+    per consuming leg costs less than holding a cache (r13 — the q157
+    eval side).
     """
     from nahuatl_data_pipeline_spark.functions.hashing import (
         MINHASH_P,
@@ -229,8 +232,8 @@ def _signature_bands(
         word_shingles(text_col, n=shingle_n).alias("__sh"),
     ).filter(F.size("__sh") > 0)
     if persist_shd:
-        # eager: the signature leg and both Jaccard sides read it
-        shd = pin(shd, eager=True, pool=_LIVE_CACHES)
+        # the signature leg and both Jaccard sides read it
+        shd = pin(shd, pool=_LIVE_CACHES)
 
     tok = shd.select("__id", F.explode("__sh").alias("__s")).withColumn(
         "__hv", hash64(F.col("__s"))
@@ -243,7 +246,7 @@ def _signature_bands(
     )
     if persist_sigs:
         # bounded: one row per doc × num_hashes longs
-        sigs = pin(sigs, eager=True, pool=_LIVE_CACHES)
+        sigs = pin(sigs, pool=_LIVE_CACHES)
 
     bands = sigs.select(
         "__id",
@@ -305,10 +308,10 @@ def banded_candidate_pairs(
     Returns ``(shd, cands, n_cands)``: the pinned shingle frame
     (``__id``, ``__sh``), the pinned distinct candidate pair frame
     (``id_a`` < ``id_b``), and its size (the count that materializes
-    it, read by the callers' broadcast gates; also recorded in
-    ``LAST_STATS``). Both pins join the call's cache generation —
-    callers must NOT call ``release_fuzzy_caches`` after this returns
-    until they are done with the result.
+    it and the lazy shingle pin, read by the callers' broadcast gates;
+    also recorded in ``LAST_STATS``). Both pins join the call's cache
+    generation — callers must NOT call ``release_fuzzy_caches`` after
+    this returns until they are done with the result.
 
     Plan shape: per-row signature (no shuffle) → explode bands (rows ×
     n_bands) → self-join on (band_id, band_key) → distinct pairs. The
@@ -646,10 +649,9 @@ def fuzzy_decontamination_pairs(
         id_col, text_col, shingle_n, num_hashes, band_size,
     )
     # broadcast_eval ⇒ the eval side is small by contract: skip its
-    # persist + eager-count job and let the two consuming legs (bands
-    # + verify shingles) recompute the tiny shingling inline —
-    # one fewer job barrier per call (r13). The non-broadcast escape
-    # hatch (eval side is another full corpus) keeps the cache.
+    # persist and let the two consuming legs (bands + verify shingles)
+    # recompute the tiny shingling inline (r13). The non-broadcast
+    # escape hatch (eval side is another full corpus) keeps the cache.
     ev_shd, ev_bands = _signature_bands(
         evalset.select(F.col(eval_id).alias(id_col), F.col(text_col)),
         id_col, text_col, shingle_n, num_hashes, band_size,

@@ -21,18 +21,22 @@ Every gate is attached as a BOOLEAN FLAG first and the corpus is
 filtered once at the end, so per-rule drop accounting rides the write
 job's single pass through an ``Observation`` (conditional counts) —
 no per-stage count() re-scans, the same discipline as
-``pipeline.run_corpus_pipeline``. The internal actions are the eager
-pins of banded candidate generation
-(``fuzzy_dedup.banded_candidate_pairs``) and, inside cluster dedup, the
-pair-graph checkpoint plus one bounded probe; only a graph above
-``components.DRIVER_MAX_EDGES`` edges adds propagation rounds
-(documented there). The run executes in a ``session.run_scope``, which
-releases every one of those pins when it returns or raises.
+``pipeline.run_corpus_pipeline``. The C4 and repetition flags are
+columns of the redacted rows; only the duplicate and contamination
+flags are joined back on the doc id. The internal actions are the
+candidate count of banded candidate generation
+(``fuzzy_dedup.banded_candidate_pairs``, which also fills its lazy
+shingle and signature pins) and, inside cluster dedup, one bounded
+probe of the pair graph; only a graph above
+``components.DRIVER_MAX_EDGES`` edges adds its checkpoint and the
+propagation rounds (documented there). The run executes in a
+``session.run_scope``, which releases every pin when it returns or
+raises.
 
-Scale shape: PII + C4 are codegen projections (no shuffle); repetition
-adds two doc-keyed partial-agg groupBys; dedup is the banded bucket
-join + component labeling (a driver-side union-find for a small pair
-graph, min-label propagation above the bound); decontamination
+Scale shape: PII, C4 and repetition are row-local projections over the
+same rows (no shuffle; each gate tokenizes once); dedup is the banded
+bucket join + component labeling (a driver-side union-find for a small
+pair graph, min-label propagation above the bound); decontamination
 broadcasts the (tiny) eval shingle set. Nothing collects to the driver
 except the final stats row and a small pair graph's edges.
 """
@@ -213,6 +217,13 @@ def run_curation_pipeline(
     canonical member of its near-dup cluster (or in no cluster), and
     shares no ``decontam_n``-gram with ``evalset``. Drops overlap, so
     ``output`` is counted directly rather than derived.
+
+    The C4 and repetition gates attach their signals as columns of the
+    ``docs`` rows, so ``docs`` must not already have a column named
+    ``n_words``, ``ends_with_punct``, ``has_brace``, ``has_bad_phrase``,
+    ``n_tokens``, ``distinct_frac``, ``top_token_frac``,
+    ``top_bigram_frac`` or ``keep_doc``: such a frame raises
+    ``ValueError`` before any job runs.
     """
     from pyspark.sql import Observation
 
@@ -297,16 +308,19 @@ def run_curation_pipeline(
     else:
         redacted = redacted.withColumn("__sub_removed", F.lit(0))
 
-    c4 = c4_rule_flags(
-        redacted, id_col, text_col, min_words=cfg.min_words
-    ).select(id_col, F.col("keep_doc").alias("__keep_c4"))
-    rep = repetition_signals(
-        redacted,
-        id_col,
+    # The two per-document gates attach their keep flag as a column of
+    # the redacted rows (row-local projections, no shuffle); called
+    # through this module's namespace, where a tracer can wrap them.
+    cols = redacted.columns
+    gated = c4_rule_flags(
+        redacted, text_col, min_words=cfg.min_words
+    ).select(*cols, F.col("keep_doc").alias("__keep_c4"))
+    gated = repetition_signals(
+        gated,
         text_col,
         max_top_bigram_frac=cfg.max_top_bigram_frac,
         max_top_token_frac=cfg.max_top_token_frac,
-    ).select(id_col, F.col("keep_doc").alias("__keep_rep"))
+    ).select(*cols, "__keep_c4", F.col("keep_doc").alias("__keep_rep"))
 
     pairs = ngram_jaccard_pairs(
         redacted, id_col, text_col,
@@ -317,11 +331,7 @@ def run_curation_pipeline(
         (~F.col("is_canonical")).alias("__is_dup"),
     )
 
-    flagged = (
-        redacted.join(c4, id_col, "left")
-        .join(rep, id_col, "left")
-        .join(dup, id_col, "left")
-    )
+    flagged = gated.join(dup, id_col, "left")
     if evalset is not None:
         contam = contamination_flags(
             redacted, evalset, id_col, text_col, n=cfg.decontam_n
@@ -330,10 +340,11 @@ def run_curation_pipeline(
     else:
         flagged = flagged.withColumn("__is_contam", F.lit(False))
 
-    # sub-2-token docs have no repetition row: fail the gate, like C4
+    # a NULL text has a NULL C4 flag: it fails the gate (repetition's
+    # keep_doc is never NULL)
     keep = (
         F.coalesce(F.col("__keep_c4"), F.lit(False))
-        & F.coalesce(F.col("__keep_rep"), F.lit(False))
+        & F.col("__keep_rep")
         & ~F.coalesce(F.col("__is_dup"), F.lit(False))
         & ~F.coalesce(F.col("__is_contam"), F.lit(False))
     )
@@ -346,9 +357,7 @@ def run_curation_pipeline(
         obs,
         F.count(F.lit(1)).alias("input"),
         n_failed(~F.coalesce(F.col("__keep_c4"), F.lit(False))).alias("failed_c4"),
-        n_failed(~F.coalesce(F.col("__keep_rep"), F.lit(False))).alias(
-            "failed_repetition"
-        ),
+        n_failed(~F.col("__keep_rep")).alias("failed_repetition"),
         n_failed(F.coalesce(F.col("__is_dup"), F.lit(False))).alias("near_dups"),
         n_failed(F.coalesce(F.col("__is_contam"), F.lit(False))).alias(
             "contaminated"

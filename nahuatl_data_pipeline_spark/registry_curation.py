@@ -139,12 +139,19 @@ _Q60_SQL = """
 def q60_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition filters: top-token / top-bigram mass
     fractions + distinct-token fraction with the published keep
-    thresholds. Mode fractions via explode → two-level groupBy (map-side
-    partial agg); distinct_frac stays shuffle-free on the token array."""
+    thresholds, for documents of at least 2 tokens. Every signal is
+    row-local on the token array, so the plan has no shuffle; the
+    oracle counts the same modes with UNNEST + two-level GROUP BY. The
+    longest run of equal elements in a sorted gram array is the count of
+    its most frequent gram and its size is the gram total, so each
+    fraction divides the oracle's MAX(c) by its SUM(c)."""
     from nahuatl_data_pipeline_spark.operators.curation import repetition_signals
 
     docs = load_table(spark, sf_dir, "documents")
-    return repetition_signals(docs)
+    return repetition_signals(docs).filter(F.col("n_tokens") >= 2).select(
+        "doc_id", "n_tokens", "distinct_frac", "top_token_frac",
+        "top_bigram_frac", "keep_doc",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -258,7 +265,10 @@ def q62_c4_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("doc_id") % 7 == 0, " {code}").otherwise(""),
         F.when(F.col("doc_id") % 11 == 0, " lorem ipsum dolor").otherwise(""),
     )
-    return c4_rule_flags(docs.select("doc_id", t.alias("text")))
+    return c4_rule_flags(docs.select("doc_id", t.alias("text"))).select(
+        "doc_id", "n_words", "ends_with_punct", "has_brace",
+        "has_bad_phrase", "keep_doc",
+    )
 
 
 # ---------------------------------------------------------------------------

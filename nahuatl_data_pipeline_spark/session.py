@@ -116,9 +116,16 @@ def pin(
     ``truncate=True`` is a lineage cut, ``localCheckpoint(eager=eager)``.
     Otherwise the frame is persisted at PySpark's default level, which
     spills to disk as the serialized ``MEMORY_AND_DISK`` does (a level
-    never changes values), and ``eager`` runs one ``count()``: pin
-    eagerly when two legs of one job read the frame, or the legs race to
-    fill the cache and each recomputes what the other has not finished.
+    never changes values), and ``eager`` runs one ``count()``. A lazy pin
+    is filled by the first action that reads it. An eager pin still pays
+    where two legs of one job read the frame on several executors:
+    tasks of one executor wait for a block another task is writing, but
+    tasks of different executors each compute it. Measured no worse
+    lazily in one JVM: the banded pipeline's shingle and signature pins,
+    both filled by the candidate count whose two self-join legs read the
+    signatures (local[4], 2,500 docs: 3.88 s lazy against 3.97 s eager
+    per warm curation op, medians of 8 alternating ops; 23 against 25
+    jobs).
 
     The owner that releases the pin, first match wins: the calling
     thread's innermost :func:`run_scope`; else ``pool``, for builders

@@ -117,6 +117,56 @@ def test_graph_above_bound_takes_distributed_path(spark, monkeypatch):
     assert {r["id"]: r["comp"] for r in out.collect()} == {1: 1, 2: 1, 3: 1, 4: 1}
 
 
+def test_small_graph_pins_nothing(spark):
+    """The driver path probes the lazy edge list and labels what it
+    collected: no persisted or checkpointed RDD is left behind."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    out = connected_components(_edges(spark, [(1, 2), (2, 3), (7, 8)]))
+    assert {r["id"]: r["comp"] for r in out.collect()} == {
+        1: 1, 2: 1, 3: 1, 7: 7, 8: 7,
+    }
+    assert set(jsc.getPersistentRDDs().keys()) == before
+
+
+def test_distributed_path_checkpoints_edges_once(spark, monkeypatch):
+    """Above the bound the symmetrized edge list is checkpointed exactly
+    once, after the probe, from the probe's pinned frame: the upstream
+    of the edge list runs no more often than on the driver path, and
+    the labels equal the driver path's."""
+    evals = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        evals.add(1)
+        return x
+
+    tick_udf = F.udf(tick, "long")
+    pairs = [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21)]
+
+    def edges():
+        return _edges(spark, pairs).select(tick_udf("id_a").alias("id_a"), "id_b")
+
+    driver = sorted(map(tuple, connected_components(edges()).collect()))
+    driver_evals, evals.value = evals.value, 0
+    pins = []
+    real_pin = components.pin
+
+    def counting_pin(df, **kw):
+        pins.append((tuple(df.columns), kw))
+        return real_pin(df, **kw)
+
+    monkeypatch.setattr(components, "pin", counting_pin)
+    monkeypatch.setattr(components, "DRIVER_MAX_EDGES", 3)
+    out = connected_components(edges())
+    dist = sorted(map(tuple, out.collect()))
+    assert "LocalTableScan" not in out._jdf.queryExecution().executedPlan().toString()
+    assert [kw for cols, kw in pins if cols == ("s", "d")] == [
+        {}, {"eager": True, "truncate": True}
+    ]
+    assert evals.value == driver_evals > 0
+    assert dist == driver
+
+
 def test_nonconvergence_raises_not_truncates(spark, monkeypatch):
     """With the star fallback disabled, a path graph longer than
     max_iter rounds must raise, never return a silently split

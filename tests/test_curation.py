@@ -1,6 +1,7 @@
 """Curation operators: PII redaction, repetition signals,
 decontamination, C4 rules."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from nahuatl_data_pipeline_spark.functions.pii import pii_counts, redact_pii
@@ -69,12 +70,87 @@ def test_repetition_flags_looped_text(spark):
     assert out[2]["distinct_frac"] > 0.9
 
 
-def test_repetition_skips_sub_two_token_docs(spark):
+def test_repetition_skips_sub_two_token_docs(spark, tmp_path):
+    """The attach contract keeps every input row: a doc with fewer than
+    2 tokens (or a NULL text) fails the gate with NULL fractions. q60
+    publishes only the docs the signals are defined on."""
+    from nahuatl_data_pipeline_spark.registry_curation import (
+        q60_repetition_signals,
+    )
+
     df = spark.createDataFrame(
         [(1, "one"), (2, ""), (3, None), (4, "two tokens here")],
         "doc_id long, text string",
     )
-    assert [r["doc_id"] for r in repetition_signals(df).collect()] == [4]
+    out = {r["doc_id"]: r for r in repetition_signals(df).collect()}
+    assert sorted(out) == [1, 2, 3, 4]
+    for d in (1, 2, 3):
+        assert out[d]["keep_doc"] is False
+        assert out[d]["distinct_frac"] is None
+        assert out[d]["top_token_frac"] is None
+        assert out[d]["top_bigram_frac"] is None
+    assert [out[d]["n_tokens"] for d in (1, 2, 3)] == [1, 0, None]
+    assert out[4]["keep_doc"] is False  # 2 bigrams, each 0.5 > 0.18
+    assert out[4]["top_bigram_frac"] == 0.5
+    assert out[4]["text"] == "two tokens here"  # input columns ride along
+
+    df.write.parquet(str(tmp_path / "documents.parquet"))
+    q60 = q60_repetition_signals(spark, str(tmp_path))
+    assert [r["doc_id"] for r in q60.collect()] == [4]
+
+
+def _repetition_edge_rows():
+    return [
+        (900001, "a b a b"),                         # two tokens tied
+        (900002, "la la la la la"),                  # one token repeated
+        (900003, "Tree tree TREE leaf Leaf"),         # mixed case
+        (900004, "x\t\ty \n\n  x\ty\n"),            # tab / newline runs
+        (900005, "\U0001F600 word \U0001F600 other"),  # non-BMP token
+        (900006, None),
+        (900007, ""),
+        (900008, "single"),
+        (900009, "   padded   "),                   # 1 token after trim
+        (900010, "Ab ab aB AB ab ab"),              # bigram ties
+    ]
+
+
+def test_repetition_mode_fractions_match_q60_oracle(spark, duck, tmp_path):
+    """The row-local mode fractions (longest run of the sorted gram
+    array) equal the oracle's UNNEST + two-level GROUP BY counts, over a
+    seeded corpus plus edge rows, projected to q60's columns."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nahuatl_data_pipeline_spark.registry_curation import (
+        _Q60_SQL,
+        q60_repetition_signals,
+    )
+    from perfbench.inputs import make_curation
+    from tests.conftest import canonicalize
+
+    truth = make_curation(3, 400, str(tmp_path / "in"))
+    docs = pq.read_table(truth["docs_path"]).to_pylist()
+    docs += [{"doc_id": i, "text": t} for i, t in _repetition_edge_rows()]
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pq.write_table(
+        pa.Table.from_pylist(
+            docs, pa.schema([("doc_id", pa.int64()), ("text", pa.string())])
+        ),
+        str(sf / "documents.parquet"),
+    )
+    got = q60_repetition_signals(spark, str(sf)).toPandas()
+    con = duck(str(sf))
+    want = con.sql(_Q60_SQL).df()
+    assert len(got) == len(want) > 400
+    assert set(got["doc_id"]) >= {900001, 900002, 900003, 900004, 900005, 900010}
+    assert not set(got["doc_id"]) & {900006, 900007, 900008, 900009}
+    pd.testing.assert_frame_equal(canonicalize(got), canonicalize(want))
+    row = got.set_index("doc_id")
+    assert row.loc[900001, "top_token_frac"] == 0.5
+    assert row.loc[900002, "top_token_frac"] == 1.0
+    assert row.loc[900003, "top_token_frac"] == 0.6
 
 
 # -------------------------------------------------- decontamination
@@ -124,6 +200,17 @@ def test_c4_flags(spark):
     assert not out[3]["keep_doc"] and out[3]["has_bad_phrase"]
     assert not out[4]["keep_doc"] and not out[4]["ends_with_punct"]
     assert not out[5]["keep_doc"] and out[5]["n_words"] == 2
+
+
+def test_gates_refuse_input_with_their_column_names(spark):
+    """Both gates attach their signals to the input rows: an input that
+    already has one of those names is refused, case-insensitively."""
+    df = spark.createDataFrame(
+        [(1, "a b c.", True)], "doc_id long, text string, Keep_Doc boolean"
+    )
+    for gate in (c4_rule_flags, repetition_signals):
+        with pytest.raises(ValueError, match="keep_doc"):
+            gate(df)
 
 
 def test_contamination_join_key_is_collision_safe(spark):

@@ -1,5 +1,6 @@
 """End-to-end curation pipeline: flags → single filtered write → stats."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from nahuatl_data_pipeline_spark.plans.curation_pipeline import (
@@ -69,6 +70,46 @@ def test_curation_pipeline_decontamination(spark, tmp_path):
     assert sorted(
         r["doc_id"] for r in spark.read.parquet(out).collect()
     ) == [2, 6]
+
+
+def test_curation_pipeline_fails_sub_two_token_docs(spark, tmp_path):
+    """A 1-token doc passes C4 at min_words=1 and a NULL text has no
+    tokens at all: the repetition gate itself fails both (its attached
+    flag is false, not a NULL from a missing join row)."""
+    rows = [
+        (1, _PROSE + " one."),
+        (2, "hello."),  # 1 token, passes C4 at min_words=1
+        (3, None),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    out = str(tmp_path / "gold_short")
+    cfg = CurationConfig(min_words=1, jaccard_threshold=0.9)
+    stats = run_curation_pipeline(spark, docs, out, cfg=cfg)
+    assert stats["input"] == 3
+    assert stats["failed_repetition"] == 2
+    assert stats["failed_c4"] == 1  # only the NULL text
+    assert stats["output"] == 1
+    assert [r["doc_id"] for r in spark.read.parquet(out).collect()] == [1]
+
+
+def test_curation_pipeline_rejects_gate_column_names(spark, tmp_path):
+    """The gates attach their signals as columns of the docs rows, so a
+    docs frame that already has one of their names is refused before any
+    job runs, with the clashing name in the message."""
+    docs = spark.createDataFrame(
+        [(1, _PROSE, 7)], "doc_id long, text string, N_Tokens int"
+    )
+    out = tmp_path / "gold_clash"
+    sc = spark.sparkContext
+    group = "curation-clash"
+    sc.setJobGroup(group, "clash")
+    try:
+        with pytest.raises(ValueError, match="n_tokens"):
+            run_curation_pipeline(spark, docs, str(out))
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert not out.exists()
 
 
 def test_curation_pipeline_empty_input(spark, tmp_path):
@@ -242,22 +283,22 @@ def test_substring_stage_keeps_untouched_docs_byte_identical(spark, tmp_path):
     assert "\n" in kept[3] and "  " in kept[3]
 
 
-# Measured on a 4-vCPU host for the op below: 32 jobs at local[2],
-# local[4] and local[8]; 42, 60 and 96 tasks (24 + 9 per core: the
+# Measured on a 4-vCPU host for the op below: 22 jobs at local[2],
+# local[4] and local[8]; 31, 47 and 79 tasks (15 + 8 per core: the
 # narrow-input spread fans out to defaultParallelism). The margins stay
 # under one propagation round of the components stage (~6 jobs) and
 # one re-introduced 256-partition cache (~261 tasks per eager count).
-_OP_MAX_JOBS = 36
+_OP_MAX_JOBS = 25
 
 
 def _op_max_tasks(parallelism: int) -> int:
-    return 40 + 12 * parallelism
+    return 30 + 10 * parallelism
 
 
 def test_curation_op_job_and_task_budget(spark, tmp_path, monkeypatch):
     """One curation op over a small seeded corpus stays within a job and
-    a task budget, writes a plan with no Python worker stage, and still
-    meets its planted ground truth."""
+    a task budget, writes a plan with no Python worker stage and one
+    tokenizer per gate, and still meets its planted ground truth."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     from perfbench import checks, inputs
@@ -283,8 +324,13 @@ def test_curation_op_job_and_task_budget(spark, tmp_path, monkeypatch):
     finally:
         sc.setJobGroup(None, None)
     assert checks.check_curation(truth, stats, None) == []
-    plan = written[-1]._jdf.queryExecution().optimizedPlan().toString()
+    qe = written[-1]._jdf.queryExecution()
+    plan = qe.optimizedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    # one whitespace tokenizer per gate: a tokenizer inlined at each use
+    # sits under AND/coalesce branches that subexpression elimination
+    # skips, and runs once per use
+    assert qe.executedPlan().toString().count("split(trim(lower(") <= 2
 
     tracker = sc.statusTracker()
     jobs = tracker.getJobIdsForGroup(group)

@@ -195,6 +195,18 @@ def test_q61_eval_side_broadcast(spark):
     assert "SortMergeJoin" not in plan
 
 
+def test_q60_repetition_signals_single_scan_no_shuffle(spark):
+    """Both mode fractions are computed inside the row, so the gate is
+    one projection over one scan. The tokenizer runs in that projection
+    and in the ``n_tokens >= 2`` filter pushed below it (the scan line
+    only echoes the filter); the groupBy form ran it 11 times."""
+    plan = plan_of(spark, "q60_repetition_signals")
+    assert "Exchange" not in plan and "Join" not in plan
+    assert plan.count("FileScan parquet") == 1
+    ops = [l for l in plan.splitlines() if "FileScan" not in l]
+    assert sum(l.count("split(trim(lower(text") for l in ops) == 2
+
+
 def test_q62_c4_rules_single_scan_no_shuffle(spark):
     plan = plan_of(spark, "q62_c4_rules")
     assert "Exchange" not in plan

@@ -117,11 +117,15 @@ def test_incremental_resume_cycle(spark, event_dir, tmp_path):
 
 
 def test_stateless_curation_ops_compose_with_streams(spark, tmp_path):
-    """PII redaction and C4 flags are stateless projections, so the SAME
-    operator objects run unchanged on a readStream — stream output must
-    equal the batch run on identical files."""
+    """PII redaction, C4 flags and repetition signals are stateless
+    projections, so the SAME operator objects run unchanged on a
+    readStream — stream output must equal the batch run on identical
+    files."""
     from nahuatl_data_pipeline_spark.functions.pii import redact_pii
-    from nahuatl_data_pipeline_spark.operators.curation import c4_rule_flags
+    from nahuatl_data_pipeline_spark.operators.curation import (
+        c4_rule_flags,
+        repetition_signals,
+    )
     from nahuatl_data_pipeline_spark.streaming.incremental import (
         run_stream_to_memory,
     )
@@ -131,21 +135,31 @@ def test_stateless_curation_ops_compose_with_streams(spark, tmp_path):
         [
             (1, "contact a@b.example about the meeting agenda today."),
             (2, "plain prose with no contacts at all in this line"),
+            (3, "spam ham " * 20),
+            (4, "single"),
         ],
         "doc_id long, text string",
     ).write.parquet(path)
     schema = "doc_id long, text string"
 
     def curate(df):
-        return c4_rule_flags(
+        c4 = c4_rule_flags(
             df.withColumn("text", redact_pii(F.col("text"))), min_words=5
-        )
+        ).withColumnRenamed("keep_doc", "keep_c4")
+        return repetition_signals(c4)
 
-    batch = sorted(map(tuple, curate(spark.read.schema(schema).parquet(path)).collect()))
+    batch = sorted(
+        map(tuple, curate(spark.read.schema(schema).parquet(path)).collect()),
+        key=lambda r: r[0],
+    )
     stream = curate(spark.readStream.schema(schema).parquet(path))
     run_stream_to_memory(stream, "curate_stream", output_mode="append")
-    got = sorted(map(tuple, spark.table("curate_stream").collect()))
-    assert got == batch and len(got) == 2
+    got = sorted(
+        map(tuple, spark.table("curate_stream").collect()), key=lambda r: r[0]
+    )
+    assert got == batch and len(got) == 4
+    keep_rep = {r["doc_id"]: r["keep_doc"] for r in spark.table("curate_stream").collect()}
+    assert keep_rep == {1: True, 2: True, 3: False, 4: False}
 
 
 def test_token_window_chunks_composes_with_streams(spark, tmp_path):
