@@ -36,8 +36,6 @@ from nahuatl_data_pipeline_spark.functions.hashing import (  # noqa: F401
     content_id,
     hash64,
     minhash_from_hashes,
-    minhash_signature_cols,
-    simhash64,
     token_set,
     word_shingles,
 )

@@ -1,14 +1,16 @@
-"""Hash-based ids and engine-portable MinHash signatures.
+"""Hash-based ids and the engine-portable hash family of near-dup dedup.
 
 ``content_id`` mirrors the reference's content-addressed Bronze ids
 (``pipeline/ingestion/manager.py:17-21``: sha256(url+ts)[:16]).
 
-``minhash_signature_cols`` is a *deterministic, engine-portable* MinHash:
-permutation_i(token) = md5(i || ':' || token), signature_i = lexicographic
-MIN over the doc's token set. Because md5 is identical everywhere, the same
-signature is computable in any SQL engine — which makes near-dup candidate
-generation oracle-checkable, unlike seeded ``pyspark.ml`` MinHashLSH
-(that lives in operators/fuzzy_dedup.py as the scale path).
+Portable MinHash: a shingle hashes to ``hash64`` (md5's first 15 hex
+chars as an int64, mod P = 2^31 − 1); permutation i is the affine map
+``(A_i·h + B_i) mod P`` with :func:`minhash_constants`; component i is
+its minimum over the doc's shingles. All of it is exact 64-bit integer
+arithmetic, so any SQL engine computes the same signature — near-dup
+candidates are oracle-checkable, unlike seeded ``pyspark.ml``
+MinHashLSH. ``operators/fuzzy_dedup._signature_bands`` bands it;
+``hash60`` is the unreduced variant that portable SimHash votes on.
 """
 
 from __future__ import annotations
@@ -110,29 +112,6 @@ def hash60(c: ColumnOrName) -> Column:
     return F.conv(F.substring(F.md5(_col(c)), 1, 15), 16, 10).cast("long")
 
 
-def minhash_signature_cols(
-    shingles: Column, num_hashes: int = 8, prefix: str = "mh"
-) -> list[Column]:
-    """num_hashes MinHash components over a shingle array, as int64s.
-
-    Component i is min((A_i·h + B_i) mod P) over the doc's shingle hashes
-    (the standard universal-hashing MinHash construction); exact integer
-    arithmetic → portable to any SQL oracle. Returns aliased Columns
-    ``mh0..mh{k-1}``.
-
-    CONVENIENCE FORM: the inline hash subtree is re-evaluated per
-    component (no CSE across HOF lambdas), i.e. k md5 passes. Hot paths
-    should materialize the hash array first —
-    ``withColumn("hv", F.transform(sh, lambda s: hash64(s)))`` then
-    :func:`minhash_from_hashes` (q22 does this), or use the exploded
-    map-side-agg formulation (operators/fuzzy_dedup.py).
-    """
-    # NB: per-element lambdas must take exactly ONE parameter — a second
-    # parameter would be bound by Spark to the array index, not the closure.
-    hashes = F.transform(shingles, lambda s: hash64(s))
-    return minhash_from_hashes(hashes, num_hashes, prefix)
-
-
 def minhash_from_hashes(
     hashes: Column, num_hashes: int = 8, prefix: str = "mh"
 ) -> list[Column]:
@@ -148,34 +127,3 @@ def minhash_from_hashes(
         ).alias(f"{prefix}{i}")
 
     return [component(i) for i in range(num_hashes)]
-
-
-def simhash64(shingles: Column) -> Column:
-    """64-bit SimHash over a shingle array, as a bigint.
-
-    For each bit b, sum ±1 over shingle hashes (xxhash64) and take the sign.
-    Expressed with aggregate over the shingle array — per-row, no shuffle.
-
-    CONVENIENCE FORM: each of the 64 bit-aggregates re-hashes every
-    shingle (interpreted lambdas, no CSE) — fine for small arrays/tests;
-    the scale path is ``operators/fuzzy_dedup.simhash_groups`` (explode +
-    64 conditional sums in ONE codegen hash-agg, xxhash once per token,
-    measured ~25× faster).
-    """
-    def bit(b: int) -> Column:
-        # bit 63 is the sign bit of a signed long: use the negative literal
-        mask = (1 << b) if b < 63 else -(1 << 63)
-        votes = F.aggregate(
-            shingles,
-            F.lit(0),
-            # exactly two parameters: (acc, element) — extra params would be
-            # misinterpreted by Spark's lambda-arity dispatch
-            lambda acc, s: acc
-            + F.when(F.xxhash64(s).bitwiseAND(F.lit(mask)) != 0, 1).otherwise(-1),
-        )
-        return F.when(votes > 0, F.lit(mask)).otherwise(F.lit(0)).cast("long")
-
-    out = F.lit(0).cast("long")
-    for b in range(64):
-        out = out.bitwiseOR(bit(b))
-    return out

@@ -29,7 +29,6 @@ from nahuatl_data_pipeline_spark.operators.aggregates import (  # noqa: F401
     type_token_ratio,
 )
 from nahuatl_data_pipeline_spark.operators.fuzzy_dedup import (  # noqa: F401
-    banded_minhash_pairs,
     minhash_lsh_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,

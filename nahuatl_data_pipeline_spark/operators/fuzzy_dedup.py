@@ -1,31 +1,46 @@
 """Fuzzy (near-duplicate) deduplication (SURVEY.md §2.4 D5, §2.10 M1, §2.3
-J3/J4).
+J3/J4). Every strategy buckets, then verifies — shuffle-on-bucket, never
+O(n²):
 
-Three interchangeable strategies, all shuffle-on-bucket (never O(n²)):
+- ``minhash_lsh_pairs`` / ``minhash_lsh_dedup``: pyspark.ml MinHashLSH
+  similarity self-join — the direct re-expression of the reference's
+  Scala job (``src/scala_examples/SparkDedup.scala:108-151``): tokenize →
+  HashingTF → MinHashLSH → approxSimilarityJoin(threshold) → anti-join
+  the losers. The reference collected duplicate ids to the driver
+  (``:63-67``); here the removal is a distributed left_anti join (J4).
 
-- ``minhash_lsh_dedup``: pyspark.ml MinHashLSH similarity self-join —
-  the direct re-expression of the reference's Scala job
-  (``src/scala_examples/SparkDedup.scala:108-151``): tokenize → HashingTF →
-  MinHashLSH → approxSimilarityJoin(threshold) → anti-join the losers.
-  The reference collected duplicate ids to the driver (``:63-67``); here
-  the removal is a distributed left_anti join (J4).
+- ``ngram_jaccard_pairs``: deterministic banded MinHash + exact shingle
+  Jaccard verify, oracle-checkable end to end. The hash family is the
+  affine ``(A·h + B) mod P`` over ``hashing.hash64``; the signatures and
+  the band layout are built in ONE place, :func:`_signature_bands`,
+  which ``fuzzy_decontamination_pairs`` (bipartite) and
+  ``incremental_dedup`` (one-hash bands) share. Its DuckDB mirror is
+  ``registry.banded_candidates_ctes``.
 
-- ``banded_minhash_pairs``: engine-portable deterministic MinHash banding
-  (md5 permutations from functions/hashing.py) + exact Jaccard verify —
-  oracle-checkable end to end, used by the correctness gate.
+- ``simhash_groups`` / ``simhash_groups_portable``: one bit-vote SimHash
+  body over xxhash64 (64 bits) or the md5-derived ``hash60`` (60 bits),
+  banded into four keys for hamming-radius candidates.
 
-- ``simhash_dedup``: 64-bit SimHash bucketing by band equality — cheapest
-  at extreme scale, catches small edits.
+- ``prefix_containment_pairs``: containment ``|A∩B| / min(|A|,|B|)``
+  over a prefix-key bucket, the asymmetric signal Jaccard misses.
 """
 
 from __future__ import annotations
 
 import threading
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from nahuatl_data_pipeline_spark.functions.hashing import word_shingles
+from nahuatl_data_pipeline_spark.functions.hashing import (
+    MINHASH_P,
+    SIMHASH_PORTABLE_BITS,
+    hash60,
+    hash64,
+    minhash_constants,
+    word_shingles,
+)
 from nahuatl_data_pipeline_spark.functions.spread import spread_narrow
 from nahuatl_data_pipeline_spark.session import CachePool, pin, unpin
 
@@ -34,7 +49,7 @@ from nahuatl_data_pipeline_spark.session import CachePool, pin, unpin
 _LIVE_CACHES = CachePool()
 release_fuzzy_caches = _LIVE_CACHES.release
 
-# Observability: banded_minhash_pairs records its candidate-pair count
+# Observability: banded_candidate_pairs records its candidate-pair count
 # here (the count is computed anyway for the broadcast size gate). Scale
 # probes (SCALE.md's pair-family table) read it to report candidate
 # growth vs true output without re-running the banding.
@@ -103,7 +118,7 @@ def minhash_lsh_pairs(
     cache pruned to (id, features) a fresh 8 GiB heap completes both
     flavors (unique 211.7 s, clone 432.4 s ≈ the old 16 GiB walls), so
     the isolate schedule runs this job at the default heap again. The
-    capped deterministic path (``banded_minhash_pairs`` with
+    capped deterministic path (``ngram_jaccard_pairs`` with
     ``max_bucket_size``) is the production choice for dirty corpora;
     this path exists for SparkDedup.scala parity and clean corpora.
     """
@@ -174,58 +189,42 @@ def _signature_bands(
     persist_shd: bool = True,
     persist_sigs: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
-    """Shared shingle → minhash signature → exploded band-key legs of
-    the banded pipeline. Returns (shd, bands); ``shd`` (the shingle
-    frame) is pinned into the family's generation, which the caller has
-    released before calling. Both pins are lazy: the caller's first
-    action fills them (the candidate count, for
-    :func:`banded_candidate_pairs`), so no count job runs just to fill
-    a cache.
+    """The banded pipeline's shingle → MinHash signature → band legs:
+    the one place that fixes the hash family (``hashing.hash64`` under
+    the affine maps of ``minhash_constants``) and the band layout.
+    Returns ``(shd, bands)``: shingles (``__id``, ``__sh``) and one row
+    per doc and band (``__id``, ``band_id``, ``band_key``), the key being
+    the band's ``band_size`` minima joined with ``|``. With
+    ``band_size=1`` each band is one permutation's minimum.
 
-    ``persist_sigs=True`` additionally pins the SIGNATURE frame (one
-    row per doc, ``num_hashes`` longs — the pipeline's narrowest frame,
-    orders smaller than ``shd``'s shingle arrays). For consumers that
-    read ``bands`` from two places — the uncapped band self-join's
-    legs — this is the r13-verdict task #3
-    fix: AQE does NOT reuse the identical signature-aggregate exchange
-    across the legs (measured ReusedExchange=0 at sf0.1), so without
-    the cache each leg replays the plan's biggest shuffle (shingle
-    explode → hash → min-aggregate). With it, each leg is a narrow
-    band explode over cached rows; pinning the post-explode bands
-    instead would materialize n_bands× the rows.
+    Signatures come from EXPLODED shingles: the md5 hash runs once per
+    shingle in whole-stage codegen and the k components are k integer
+    mins in one hash aggregate whose map-side combine shrinks the
+    shuffle to one row per doc (min ignores duplicate shingles, so this
+    equals the per-row array_min form).
 
-    Shingling is the family's dominant per-row cost (a regex pass over
-    every doc's text) — computed ONCE and cached; every downstream leg
-    (signatures + both Jaccard sides) reuses it. Signatures come from
-    EXPLODED shingles: md5+hex-parse runs once per token inside
-    whole-stage codegen, and the k components are k cheap integer mins
-    in the same hash aggregate — partial (map-side) agg shrinks the
-    shuffle to one row per doc. min() is insensitive to duplicate
-    shingles, so this equals the per-row array_min formulation exactly.
-
-    ``persist_shd=False`` skips the persist: right for a side known to
-    be small (a broadcast eval suite), where re-running the shingling
-    per consuming leg costs less than holding a cache (r13 — the q157
-    eval side).
+    Pins are lazy and join the family's pool, which the caller has
+    released: the caller's first action fills them, so no job runs just
+    to fill a cache. ``shd`` is pinned by default, since shingling is
+    the family's dominant per-row cost and the signatures and both
+    verify sides read it. ``persist_shd=False`` skips that pin for a
+    small side (a broadcast eval suite, where re-shingling costs less
+    than a cache) or for a caller that owns the frames' lifetime
+    (``incremental_dedup.snapshot_index``). ``persist_sigs=True`` also
+    pins the signature frame (one row per doc, the narrowest frame) for
+    a consumer that reads ``bands`` twice, the uncapped self-join's
+    legs: AQE does not reuse the identical signature exchange across
+    them (ReusedExchange=0 at sf0.1), so each leg would replay the
+    plan's biggest shuffle; pinning the exploded bands instead would
+    hold n_bands× the rows.
     """
-    from nahuatl_data_pipeline_spark.functions.hashing import (
-        MINHASH_P,
-        hash64,
-        minhash_constants,
-    )
-
     n_bands = num_hashes // band_size
-    # Spread a narrow input before the shingling: a corpus that
-    # arrives as a handful of scan splits (small files, a filtered
-    # union) would run the shingling regex — the family's dominant
-    # per-row cost — on that handful of cores. One narrow (id, text)
-    # round-robin exchange buys full parallelism for the shingling, the
-    # signature aggregate and both verify legs reading the cache; a
-    # no-op whenever the input already has >= defaultParallelism
-    # partitions (the similarity.py cosine-pairs pattern). Everything downstream is
-    # content-keyed, so the result is partition-independent by design.
-    # (spread_narrow never probes a shuffle-bearing input — it passes
-    # through rather than silently materializing AQE stages.)
+    # Spread a narrow input (a handful of scan splits) before the
+    # shingling regex, so it and every leg downstream run on the whole
+    # cluster; a no-op at >= defaultParallelism partitions, and a
+    # shuffle-bearing input passes through unprobed. Everything
+    # downstream is content-keyed, so the result is
+    # partition-independent.
     df = spread_narrow(df)
     shd = df.select(
         F.col(id_col).alias("__id"),
@@ -317,7 +316,7 @@ def banded_candidate_pairs(
     n_bands) → self-join on (band_id, band_key) → distinct pairs. The
     join key is the band bucket, so cost is Σ bucket² not n².
     ``max_bucket_size`` is the hot-bucket guard (see
-    :func:`banded_minhash_pairs` for the recall contract).
+    :func:`ngram_jaccard_pairs` for the recall contract).
     """
     assert num_hashes % band_size == 0
     release_fuzzy_caches()
@@ -378,79 +377,12 @@ def banded_candidate_pairs(
     return shd, cands, n_cands
 
 
-def banded_minhash_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 3,
-    num_hashes: int = 8,
-    band_size: int = 2,
-    jaccard_threshold: float = 0.8,
-    broadcast_max_candidates: int = 2_000_000,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Candidate pairs via band-equality buckets, verified with exact
-    shingle Jaccard.
-
-    ``max_bucket_size`` is the hot-bucket guard for dirty corpora: a
-    band bucket of B docs emits B² candidate rows in ONE join task, so
-    a handful of mega-buckets (hash collisions on short docs, giant
-    families of unremoved identical docs) can stall the stage for hours
-    while every other task idles — observed on the 100× replica
-    (SCALE.md). With the cap set, buckets over the limit are dropped
-    before the self-join (one partial-count aggregate + a semi-join on
-    the band key). Recall contract: a pair is lost only if EVERY band
-    it shares is oversized; run ``exact_dedup`` first so byte-identical
-    families (true mega-buckets) never reach LSH, and the cap then
-    sheds only collision buckets, which are overwhelmingly false
-    candidates. Default None = no cap; since round 8 the q25/q108
-    registered queries pass 150 (the production posture probed at
-    100×), with the cap replicated in their oracles via the shared
-    CTE builder.
-
-    Plan shape: per-row signature (no shuffle) → explode bands (rows ×
-    n_bands) → self-join on (band_id, band_key) → distinct pairs →
-    exact Jaccard on the two shingle arrays → threshold filter. The join
-    key is the band bucket, so cost is Σ bucket² not n².
-
-    The candidate set is counted (it is persisted, so the count also
-    pre-materializes what the verify join reuses): at or under
-    ``broadcast_max_candidates`` it is broadcast, so the wide shingle
-    arrays never shuffle; above it — a dirty corpus where near-dup pairs
-    are NOT sparse (crawl dumps can exceed 30% duplicates) — the verify
-    falls back to an ordinary shuffle join instead of overflowing the
-    driver/executor broadcast limit.
-    """
-    shd, cands, n_cands = banded_candidate_pairs(
-        df,
-        id_col,
-        text_col,
-        shingle_n=shingle_n,
-        num_hashes=num_hashes,
-        band_size=band_size,
-        max_bucket_size=max_bucket_size,
-    )
-    # Size-gate the broadcast: sparse candidate sets (the normal case)
-    # broadcast so the wide shingle arrays never shuffle; dense ones
-    # (dirty corpus) take a shuffle join rather than blowing the limit.
-    cand_side = F.broadcast(cands) if n_cands <= broadcast_max_candidates else cands
-    # Jaccard verify only on the candidates: join the cached shingle
-    # arrays back by id.
-    sh_a = shd.select(F.col("__id").alias("id_a"), F.col("__sh").alias("sh_a"))
-    sh_b = shd.select(F.col("__id").alias("id_b"), F.col("__sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    out = (
-        cand_side.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(inter.cast("double") / union.cast("double"), 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
-    )
-    return out
+def _rounded_jaccard(a: str, b: str) -> Column:
+    """Exact Jaccard of two shingle-array columns, rounded to 6 places
+    as every pair oracle rounds it (``ROUND(…, 6)``)."""
+    inter = F.size(F.array_intersect(a, b))
+    union = F.size(F.array_union(a, b))
+    return F.round(inter.cast("double") / union.cast("double"), 6)
 
 
 def ngram_jaccard_pairs(
@@ -464,35 +396,56 @@ def ngram_jaccard_pairs(
     broadcast_max_candidates: int = 2_000_000,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs with banded-minhash candidate
-    generation (3 bands × 2 hashes by default) and an exact shingle
-    Jaccard verify.
+    """Near-dup pairs (``id_a`` < ``id_b``, ``jaccard``): banded-MinHash
+    candidates (3 bands × 2 hashes by default) verified with exact
+    shingle Jaccard ≥ ``jaccard_threshold``. Callers: q25 (8 hashes),
+    the shared pair table :func:`near_dup_pairs`, and the curation
+    pipeline's cluster-dedup stage.
 
-    History: this operator originally bucketed on the single minimum
-    *hashed* shingle (1-band MinHash) — a pair with Jaccard J collides
-    with probability J, so LOW-Jaccard pairs still collide proportionally
-    and common-shingle buckets are overwhelmingly false candidates. The
-    100× replica measured 131M raw candidates for 25.8M true pairs
-    (SCALE.md round 6, ~5× waste). Banding with ``band_size``-hash keys
-    drops a pair's per-band collision probability to J^band_size, which
-    crushes the low-J tail while ``num_hashes/band_size`` independent
-    bands keep high-J recall (J=0.9 → 96.4% with 3 bands vs 90% for the
-    single-band scheme). Candidate generation, caching, the broadcast
-    size gate, and the ``max_bucket_size`` hot-bucket guard are all the
-    shared :func:`banded_minhash_pairs` machinery — this wrapper exists
-    for its distinct parameter profile and call sites (q38/q58, the
-    curation pipeline's cluster-dedup stage).
+    Why bands: one min-hashed-shingle bucket (this operator's first
+    form) collides a pair with Jaccard J with probability J, so common
+    shingles flood it with false candidates — 131M raw candidates for
+    25.8M true pairs on the 100× replica (SCALE.md round 6).
+    ``band_size``-hash keys collide with probability J^band_size, which
+    crushes the low-J tail, while ``num_hashes/band_size`` independent
+    bands keep high-J recall (J=0.9 → 96.4% with 3 bands vs 90%).
+
+    ``max_bucket_size`` is the hot-bucket guard for dirty corpora: a
+    band bucket of B docs emits B² candidate rows in ONE join task, so
+    a few mega-buckets (hash collisions on short docs, giant families
+    of identical docs) stalled whole stages on the 100× replica
+    (SCALE.md). Buckets over the cap are dropped before pairs are
+    formed, so a pair is lost only if EVERY band it shares is
+    oversized; run ``exact_dedup`` first so byte-identical families
+    never reach LSH and the cap sheds only collision buckets. Default
+    None = no cap; q25/q108 pass 150, replicated in their oracles via
+    the shared CTE builder.
+
+    The candidate set is counted (the count also fills the pins the
+    verify reads): at or under ``broadcast_max_candidates`` it is
+    broadcast, so the wide shingle arrays never shuffle; above it — a
+    dirty corpus where near-dup pairs are NOT sparse — the verify falls
+    back to a shuffle join instead of overflowing the broadcast limit.
     """
-    return banded_minhash_pairs(
+    shd, cands, n_cands = banded_candidate_pairs(
         df,
         id_col,
         text_col,
         shingle_n=shingle_n,
         num_hashes=num_hashes,
         band_size=band_size,
-        jaccard_threshold=jaccard_threshold,
-        broadcast_max_candidates=broadcast_max_candidates,
         max_bucket_size=max_bucket_size,
+    )
+    cand_side = F.broadcast(cands) if n_cands <= broadcast_max_candidates else cands
+    # Jaccard verify only on the candidates: join the cached shingle
+    # arrays back by id.
+    sh_a = shd.select(F.col("__id").alias("id_a"), F.col("__sh").alias("sh_a"))
+    sh_b = shd.select(F.col("__id").alias("id_b"), F.col("__sh").alias("sh_b"))
+    return (
+        cand_side.join(sh_a, "id_a")
+        .join(sh_b, "id_b")
+        .select("id_a", "id_b", _rounded_jaccard("sh_a", "sh_b").alias("jaccard"))
+        .filter(F.col("jaccard") >= jaccard_threshold)
     )
 
 
@@ -679,17 +632,11 @@ def fuzzy_decontamination_pairs(
     sh_e = ev_shd.select(
         F.col("__id").alias("eval_id"), F.col("__sh").alias("sh_e")
     )
-    inter = F.size(F.array_intersect("sh_t", "sh_e"))
-    union = F.size(F.array_union("sh_t", "sh_e"))
     return (
         cands.join(sh_t, "train_id")
         .join(_maybe_broadcast(sh_e, broadcast_eval), "eval_id")
         .select(
-            "train_id",
-            "eval_id",
-            F.round(
-                inter.cast("double") / union.cast("double"), 6
-            ).alias("jaccard"),
+            "train_id", "eval_id", _rounded_jaccard("sh_t", "sh_e").alias("jaccard")
         )
         .filter(F.col("jaccard") >= jaccard_threshold)
     )
@@ -722,98 +669,34 @@ def fuzzy_contamination_flags(
 # --------------------------------------------------------------------------
 
 
-def simhash_groups(
-    df: DataFrame, id_col: str, text_col: str, shingle_n: int = 1
+def _bit_vote_simhash(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_n: int,
+    h: Callable[[str], Column],
+    bits: int,
 ) -> DataFrame:
-    """64-bit SimHash per document; identical hashes ⇒ near-identical docs.
-    Band the hash into 4×16-bit keys for hamming-distance-≤3 candidate
-    search at scale.
+    """``bits``-bit SimHash per document over the shingle hash ``h``,
+    banded into four ``bits // 4``-bit keys ``band0..band3``.
 
-    Computed via explode + 64 conditional sums in ONE hash aggregate —
-    xxhash64 and the bit votes all run in whole-stage codegen with partial
-    (map-side) aggregation, vs the per-row array-aggregate formulation
-    (functions/hashing.simhash64) which evaluates 64 interpreted lambda
-    folds per document (~25× slower measured).
-
-    The 64 vote aggregates and the 64-way OR fold are built as parsed
-    SQL strings (one ``F.expr`` per aggregate, ONE for the whole fold)
-    rather than Column-method chains: the chain form issued ~900 py4j
-    round-trips per call (~0.7 s of driver time per bench repeat,
-    measured r13 — the fastlit.py lesson applied to expression trees).
-    ``shiftleft(1L, b)`` reproduces the old mask exactly, including
-    b=63 → min-long.
+    Explode + ``bits`` conditional sums in ONE codegen hash aggregate
+    with map-side combine, one hash per shingle (a per-row array fold
+    re-hashes every shingle once per bit, ~25× slower measured). Bit b
+    is ``shiftright(__h, b) & 1``, the sign bit too for a signed 64-bit
+    hash; ``shiftleft(1L, b)`` is its mask, b=63 → min-long. The votes
+    and the OR fold are parsed SQL (one ``F.expr`` each): Column-method
+    chains cost ~900 py4j round-trips per call (r13). Token-less docs
+    get simhash 0, the empty-fold value; bands are unsigned shifts, so
+    a negative fingerprint still bands into [0, 2^(bits//4)).
     """
-    sh = word_shingles(text_col, n=shingle_n)
-    tok = df.select(F.col(id_col), F.explode(sh).alias("__s")).withColumn(
-        "__h", F.xxhash64("__s")
-    )
+    tok = df.select(
+        F.col(id_col), F.explode(word_shingles(text_col, n=shingle_n)).alias("__s")
+    ).withColumn("__h", h("__s"))
 
     def mask_sql(b: int) -> str:
         return f"shiftleft(CAST(1 AS BIGINT), {b})"
 
-    votes = tok.groupBy(id_col).agg(
-        *[
-            F.expr(
-                f"sum(CASE WHEN (__h & {mask_sql(b)}) != 0"
-                f" THEN 1 ELSE -1 END) AS v{b}"
-            )
-            for b in range(64)
-        ]
-    )
-    sim = F.expr(
-        " | ".join(
-            f"(CASE WHEN v{b} > 0 THEN {mask_sql(b)}"
-            f" ELSE CAST(0 AS BIGINT) END)"
-            for b in range(64)
-        )
-    )
-    out = votes.select(F.col(id_col), sim.alias("simhash"))
-    # docs with no tokens fall out of the groupBy: rejoin with simhash 0
-    # (the empty-fold value of the per-row formulation)
-    out = (
-        df.select(id_col)
-        .join(out, id_col, "left")
-        .withColumn("simhash", F.coalesce("simhash", F.lit(0).cast("long")))
-    )
-    return out.select(
-        F.col(id_col),
-        "simhash",
-        *[
-            F.shiftrightunsigned("simhash", 16 * i)
-            .bitwiseAND(F.lit(0xFFFF))
-            .alias(f"band{i}")
-            for i in range(4)
-        ],
-    )
-
-
-def simhash_groups_portable(
-    df: DataFrame, id_col: str, text_col: str, shingle_n: int = 1
-) -> DataFrame:
-    """Engine-portable SimHash: the q32 plan (explode → bit votes in ONE
-    codegen'd hash aggregate → band keys) with the Spark-specific
-    xxhash64 swapped for the md5-derived 60-bit hash
-    (functions/hashing.hash60) — exact integer arithmetic any engine
-    reproduces, so the hamming-bucket path gets a DuckDB hash oracle
-    (the q22/q25 portability move). 60 bits band into 4×15-bit keys;
-    identical band ⇒ hamming candidates, same recall geometry as the
-    64-bit/4×16 variant. Token-less docs keep simhash 0 (the empty-fold
-    value), like ``simhash_groups``.
-    """
-    from nahuatl_data_pipeline_spark.functions.hashing import (
-        SIMHASH_PORTABLE_BITS,
-        hash60,
-        word_shingles,
-    )
-
-    bits = SIMHASH_PORTABLE_BITS
-    sh = word_shingles(text_col, n=shingle_n)
-    tok = df.select(F.col(id_col), F.explode(sh).alias("__s")).withColumn(
-        "__h", hash60("__s")
-    )
-    # Parsed-SQL vote/fold construction, same py4j-round-trip rationale
-    # as simhash_groups above (values bit-identical: shiftright + &1 on
-    # a 60-bit non-negative hash, masks ≤ 1<<59 all fit BIGINT).
     votes = tok.groupBy(id_col).agg(
         *[
             F.expr(
@@ -825,15 +708,14 @@ def simhash_groups_portable(
     )
     sim = F.expr(
         " | ".join(
-            f"(CASE WHEN v{b} > 0 THEN CAST({1 << b} AS BIGINT)"
+            f"(CASE WHEN v{b} > 0 THEN {mask_sql(b)}"
             f" ELSE CAST(0 AS BIGINT) END)"
             for b in range(bits)
         )
     )
-    out = votes.select(F.col(id_col), sim.alias("simhash"))
     out = (
         df.select(id_col)
-        .join(out, id_col, "left")
+        .join(votes.select(F.col(id_col), sim.alias("simhash")), id_col, "left")
         .withColumn("simhash", F.coalesce("simhash", F.lit(0).cast("long")))
     )
     band_bits = bits // 4
@@ -841,11 +723,34 @@ def simhash_groups_portable(
         F.col(id_col),
         "simhash",
         *[
-            F.shiftright("simhash", band_bits * i)
+            F.shiftrightunsigned("simhash", band_bits * i)
             .bitwiseAND(F.lit((1 << band_bits) - 1))
             .alias(f"band{i}")
             for i in range(4)
         ],
+    )
+
+
+def simhash_groups(
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int = 1
+) -> DataFrame:
+    """64-bit SimHash per document over xxhash64 (q32); identical hashes
+    ⇒ near-identical docs. Four 16-bit band keys give hamming-distance-≤3
+    candidate search at scale (see :func:`_bit_vote_simhash`)."""
+    return _bit_vote_simhash(df, id_col, text_col, shingle_n, F.xxhash64, 64)
+
+
+def simhash_groups_portable(
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int = 1
+) -> DataFrame:
+    """Engine-portable SimHash (q163): :func:`simhash_groups` with the
+    Spark-specific xxhash64 swapped for the md5-derived 60-bit
+    ``hashing.hash60`` — exact integer arithmetic any engine reproduces,
+    so the hamming-bucket path gets a DuckDB hash oracle. 60 bits band
+    into 4×15-bit keys; identical band ⇒ hamming candidates, same recall
+    geometry as the 64-bit/4×16 variant."""
+    return _bit_vote_simhash(
+        df, id_col, text_col, shingle_n, hash60, SIMHASH_PORTABLE_BITS
     )
 
 
@@ -878,7 +783,6 @@ def prefix_containment_pairs(
     bucket self-join on the prefix key, exact verify — work is
     Σ bucket² over hash-spread buckets, never n².
     """
-    from nahuatl_data_pipeline_spark.functions.hashing import hash64
     from nahuatl_data_pipeline_spark.functions.text_analysis import tokens
 
     release_fuzzy_caches()

@@ -19,10 +19,12 @@ candidate-surfaced pairs are verified.
 
 Plan shape: exact pass = one left_anti hash join on the dedup key
 (snapshot side reduced to distinct keys first — at 100 TB the key set
-is the thing you keep hot, not the text). Fuzzy pass = shingle hashes
-exploded once (codegen md5), per-perm min via ONE map-side-combined
-hash aggregation, bucket join on (perm, key), candidate pairs
-de-duplicated before the exact-Jaccard verify, so cost is
+is the thing you keep hot, not the text). Fuzzy pass = the banded
+pipeline's own signature and band legs
+(``fuzzy_dedup._signature_bands`` with ``band_size=1``: shingles once,
+every permutation's min in ONE map-side-combined hash aggregate, one
+band per permutation), a band join on (band_id, band_key), candidate
+pairs de-duplicated before the exact-Jaccard verify, so cost is
 Σ bucket_new × bucket_seen, never |new| × |seen|. The snapshot's
 keys/shingles/buckets are a :class:`SnapshotIndex` that callers can
 build once with :func:`snapshot_index`, persist or write out, and
@@ -36,27 +38,22 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nahuatl_data_pipeline_spark.functions.hashing import (
-    MINHASH_P,
-    hash64,
-    minhash_constants,
-    word_shingles,
-)
 from nahuatl_data_pipeline_spark.functions.normalize import dedup_key
 from nahuatl_data_pipeline_spark.functions.spread import spread_narrow
 from nahuatl_data_pipeline_spark.operators.fuzzy_dedup import (
-    _LIVE_CACHES,
+    _signature_bands,
     release_fuzzy_caches,
 )
-from nahuatl_data_pipeline_spark.session import pin
 
 
 class SnapshotIndex(NamedTuple):
     """Reusable dedup index of an existing corpus snapshot.
 
     ``keys``: distinct normalized dedup keys, column ``__k``.
-    ``shingles``: (``__sid``, ``__ssh`` shingle array) per doc.
-    ``buckets``: (``__sid``, ``__p`` perm index, ``__b`` bucket key).
+    ``shingles``: (``__id``, ``__sh`` shingle array) per doc.
+    ``buckets``: (``__id``, ``band_id``, ``band_key``), one one-hash band
+    per permutation.
+    These are :func:`fuzzy_dedup._signature_bands`' own columns.
     Build once per snapshot with :func:`snapshot_index`; callers own its
     lifetime (persist it, or write the three frames out and read them
     back for the next batch).
@@ -65,40 +62,6 @@ class SnapshotIndex(NamedTuple):
     keys: DataFrame
     shingles: DataFrame
     buckets: DataFrame
-
-
-def _shingles(
-    df: DataFrame, id_col: str, text_col: str, n: int, id_out: str, sh_out: str
-) -> DataFrame:
-    return df.select(
-        F.col(id_col).alias(id_out),
-        word_shingles(text_col, n=n).alias(sh_out),
-    ).filter(F.size(sh_out) > 0)
-
-
-def _bucket_keys(
-    sh: DataFrame, id_in: str, sh_in: str, num_perms: int
-) -> DataFrame:
-    """(id, perm index ``__p``, bucket key ``__b``) via explode → ONE
-    map-side-combined agg (each perm's min is a codegen conditional
-    aggregate over the same exploded hashes) → posexplode back out."""
-    hashed = sh.select(F.col(id_in), F.explode(sh_in).alias("__s")).select(
-        F.col(id_in), hash64(F.col("__s")).alias("__h")
-    )
-    mins = hashed.groupBy(id_in).agg(
-        *[
-            F.min((F.lit(a) * F.col("__h") + F.lit(b)) % MINHASH_P).alias(
-                f"__m{i}"
-            )
-            for i, (a, b) in enumerate(minhash_constants(num_perms))
-        ]
-    )
-    return mins.select(
-        F.col(id_in),
-        F.posexplode(F.array(*[f"__m{i}" for i in range(num_perms)])).alias(
-            "__p", "__b"
-        ),
-    )
 
 
 def snapshot_index(
@@ -113,11 +76,17 @@ def snapshot_index(
     The expensive legs — the per-row shingling and the bucket
     aggregation — run once per snapshot here instead of once per batch
     inside :func:`dedup_against_snapshot`. Persist the three frames (or
-    write them to parquet) before looping over batches.
+    write them to parquet) before looping over batches; nothing here is
+    pinned, since the caller owns the index's lifetime.
     """
     keys = seen.select(dedup_key(text_col).alias("__k")).distinct()
-    sh = _shingles(seen, id_col, text_col, shingle_n, "__sid", "__ssh")
-    return SnapshotIndex(keys, sh, _bucket_keys(sh, "__sid", "__ssh", num_perms))
+    return SnapshotIndex(
+        keys,
+        *_signature_bands(
+            seen, id_col, text_col, shingle_n, num_hashes=num_perms,
+            band_size=1, persist_shd=False,
+        ),
+    )
 
 
 def dedup_against_snapshot(
@@ -158,36 +127,48 @@ def dedup_against_snapshot(
     # stages.
     new = spread_narrow(new)
     release_fuzzy_caches()
-    own_index = index is None
-    if own_index:
-        idx = snapshot_index(seen, id_col, text_col, shingle_n, num_perms)
+    if index is not None:
+        keys, ssh, sbk = index
     else:
-        idx = index
-
+        keys = seen.select(dedup_key(text_col).alias("__k")).distinct()
     survivors = new.join(
-        idx.keys, on=[dedup_key(text_col) == F.col("__k")], how="left_anti"
+        keys, on=[dedup_key(text_col) == F.col("__k")], how="left_anti"
     )
     if jaccard_threshold is None:
         return survivors
 
-    # shingles feed both the bucket agg and the verify join — pin so
-    # the per-row shingling runs once per side, not twice
-    nsh = pin(
-        _shingles(survivors, id_col, text_col, shingle_n, "__nid", "__nsh"),
-        eager=True, pool=_LIVE_CACHES,
+    # Each side's shingles are pinned into the family's pool (the band
+    # aggregate and the verify both read them) unless the caller owns
+    # them in an index. A one-hash band is keyed by that permutation's
+    # minimum alone, so the (band_id, band_key) join pairs exactly the
+    # docs that share a per-permutation minimum.
+    if index is None:
+        ssh, sbk = _signature_bands(
+            seen, id_col, text_col, shingle_n, num_hashes=num_perms,
+            band_size=1,
+        )
+    nsh, nbk = _signature_bands(
+        survivors, id_col, text_col, shingle_n, num_hashes=num_perms,
+        band_size=1,
     )
-    nbk = _bucket_keys(nsh, "__nid", "__nsh", num_perms)
-    if own_index:
-        ssh = pin(idx.shingles, eager=True, pool=_LIVE_CACHES)
-        sbk = _bucket_keys(ssh, "__sid", "__ssh", num_perms)
-    else:
-        ssh = idx.shingles
-        sbk = idx.buckets
-
     cand = (
-        nbk.join(sbk, ["__p", "__b"]).select("__nid", "__sid").distinct()
+        nbk.select(F.col("__id").alias("__nid"), "band_id", "band_key")
+        .join(
+            sbk.select(F.col("__id").alias("__sid"), "band_id", "band_key"),
+            ["band_id", "band_key"],
+        )
+        .select("__nid", "__sid")
+        .distinct()
     )
-    pairs = cand.join(nsh, "__nid").join(ssh, "__sid")
+    pairs = cand.join(
+        nsh.select(F.col("__id").alias("__nid"), F.col("__sh").alias("__nsh")),
+        "__nid",
+    ).join(
+        ssh.select(F.col("__id").alias("__sid"), F.col("__sh").alias("__ssh")),
+        "__sid",
+    )
+    # unrounded on purpose: rounding to 6 places would move pairs that
+    # sit exactly at the threshold
     inter = F.size(F.array_intersect("__nsh", "__ssh"))
     union = F.size(F.array_union("__nsh", "__ssh"))
     near_ids = (

@@ -11,7 +11,7 @@ Plan shape: block key projection (narrow) → self-join on the block key
 evaluated JVM-side (``F.levenshtein`` with the threshold pushed into
 the expression — Spark short-circuits the DP once the bound is
 exceeded). The hot-block caveat and its cap mitigation are the same as
-banded LSH (fuzzy_dedup.py:banded_minhash_pairs ``max_bucket_size``).
+banded LSH (fuzzy_dedup.py:ngram_jaccard_pairs ``max_bucket_size``).
 """
 
 from __future__ import annotations

@@ -995,7 +995,7 @@ def banded_pairs_oracle_sql(
     band_size: int = 2,
     max_bucket_size: int | None = None,
 ) -> str:
-    """DuckDB mirror of ``operators/fuzzy_dedup.banded_minhash_pairs`` at
+    """DuckDB mirror of ``operators/fuzzy_dedup.ngram_jaccard_pairs`` at
     shingle_n=3 over an arbitrary ``base`` relation (doc_id, text):
     3-gram shingles → md5-affine minhash signature → band-equality
     candidates → exact shingle Jaccard ≥ threshold. ONE definition of the
@@ -1125,10 +1125,10 @@ def q25_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-gram shingles → 8 md5 minhashes → 4 bands → bucket join → exact
     Jaccard ≥ 0.5. Planted near-dups (docs 0-99 + a suffix) guarantee the
     candidate path is actually exercised."""
-    from nahuatl_data_pipeline_spark.operators.fuzzy_dedup import banded_minhash_pairs
+    from nahuatl_data_pipeline_spark.operators.fuzzy_dedup import ngram_jaccard_pairs
 
     base = q25_input(spark, sf_dir)
-    return banded_minhash_pairs(
+    return ngram_jaccard_pairs(
         base, "doc_id", "text", shingle_n=3, num_hashes=8, band_size=2,
         jaccard_threshold=0.5, max_bucket_size=_Q25_BUCKET_CAP,
     )

@@ -464,7 +464,10 @@ def q66_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-perm MinHash-bucket candidates verified at Jaccard >= 0.5 — and
     only genuinely novel docs survive. The snapshot is never rewritten;
     its keys/shingles/buckets are the reusable SnapshotIndex
-    (`operators/incremental_dedup.py`)."""
+    (`operators/incremental_dedup.py`). Its buckets are the banded
+    pipeline's one-hash bands, and a one-hash band is keyed by that
+    permutation's minimum alone, so the (band_id, band_key) join pairs
+    exactly the docs the oracle's (p, bk) join pairs."""
     from nahuatl_data_pipeline_spark.operators.incremental_dedup import (
         dedup_against_snapshot,
     )

@@ -88,7 +88,11 @@ def q163_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Portable SimHash fingerprints + 15-bit hamming bands
     (operators/fuzzy_dedup.py:simhash_groups_portable): q32's bit-vote
     aggregate over the engine-portable 60-bit md5 hash, so the whole
-    hamming-bucket near-dup scheme is hash-certified against DuckDB."""
+    hamming-bucket near-dup scheme is hash-certified against DuckDB.
+    The bit-vote body it shares with q32 bands with ``shiftrightunsigned``
+    where this query used ``shiftright``; the two shifts agree on every
+    non-negative value and a 60-bit fingerprint is non-negative, so the
+    output is unchanged."""
     from nahuatl_data_pipeline_spark.operators.fuzzy_dedup import (
         simhash_groups_portable,
     )

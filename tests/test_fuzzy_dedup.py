@@ -11,7 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from nahuatl_data_pipeline_spark.operators.fuzzy_dedup import (
-    banded_minhash_pairs,
     minhash_lsh_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
@@ -59,7 +58,7 @@ def test_minhash_lsh_dedup_removes_higher_id(docs):
 def test_banded_minhash_exact_dup_certain(docs):
     pairs = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in banded_minhash_pairs(
+        for r in ngram_jaccard_pairs(
             docs, "doc_id", "text", shingle_n=2, num_hashes=8, band_size=2,
             jaccard_threshold=0.5,
         ).collect()
@@ -122,13 +121,83 @@ def test_simhash_portable_parity_with_xxhash64_variant(docs):
         assert all(rows[2][f"band{i}"] == rows[5][f"band{i}"] for i in range(4))
 
 
+def _per_row_simhash(shingles, h, bits):
+    """Per-row SimHash reference, independent of the operator's plan:
+    for each bit, a fold sums ±1 over the shingle hashes ``h`` and the
+    bit is set where the sum is positive (bit 63 is the sign bit of a
+    signed long, hence the negative literal mask)."""
+
+    def bit(b):
+        mask = (1 << b) if b < 63 else -(1 << 63)
+        votes = F.aggregate(
+            shingles,
+            F.lit(0),
+            # exactly two parameters: (acc, element)
+            lambda acc, s: acc
+            + F.when(h(s).bitwiseAND(F.lit(mask)) != 0, 1).otherwise(-1),
+        )
+        return F.when(votes > 0, F.lit(mask)).otherwise(F.lit(0)).cast("long")
+
+    out = F.lit(0).cast("long")
+    for b in range(bits):
+        out = out.bitwiseOR(bit(b))
+    return out
+
+
+def test_simhash_values_match_per_row_reference(spark, docs):
+    """Both SimHash operators equal the per-row fold bit for bit, and
+    their bands are the fingerprint's unsigned ``bits // 4``-bit slices.
+    Doc 6 is one token whose xxhash64 is negative, so its 64-bit
+    fingerprint has bit 63 set; doc 7 has no tokens."""
+    from nahuatl_data_pipeline_spark.functions.hashing import (
+        hash60,
+        word_shingles,
+    )
+    from nahuatl_data_pipeline_spark.operators.fuzzy_dedup import (
+        simhash_groups_portable,
+    )
+
+    df = docs.unionByName(
+        spark.createDataFrame([(6, "xochitl"), (7, "   ")], docs.schema)
+    )
+    for fn, h, bits in (
+        (simhash_groups, F.xxhash64, 64),
+        (simhash_groups_portable, hash60, 60),
+    ):
+        want = {
+            r["doc_id"]: r["simhash"]
+            for r in df.select(
+                "doc_id",
+                _per_row_simhash(word_shingles("text", n=1), h, bits).alias(
+                    "simhash"
+                ),
+            ).collect()
+        }
+        got = {r["doc_id"]: r for r in fn(df, "doc_id", "text").collect()}
+        assert {k: r["simhash"] for k, r in got.items()} == want
+        band_bits = bits // 4
+        for r in got.values():
+            unsigned = r["simhash"] & ((1 << 64) - 1)
+            assert [r[f"band{i}"] for i in range(4)] == [
+                (unsigned >> (band_bits * i)) & ((1 << band_bits) - 1)
+                for i in range(4)
+            ]
+        assert got[7]["simhash"] == 0
+        assert all(got[7][f"band{i}"] == 0 for i in range(4))
+    # the sign-bit case is really exercised
+    neg = simhash_groups(df, "doc_id", "text").filter("doc_id = 6").first()
+    assert neg["simhash"] < 0 and 0 <= neg["band3"] <= 0xFFFF
+
+
 def test_fuzzy_results_stable_across_partitioning(docs):
-    a = sorted(map(tuple, banded_minhash_pairs(docs, "doc_id", "text", shingle_n=2).collect()))
+    a = sorted(map(tuple, ngram_jaccard_pairs(
+        docs, "doc_id", "text", shingle_n=2, num_hashes=8).collect()))
     b = sorted(
         map(
             tuple,
-            banded_minhash_pairs(
-                docs.repartition(7), "doc_id", "text", shingle_n=2
+            ngram_jaccard_pairs(
+                docs.repartition(7), "doc_id", "text", shingle_n=2,
+                num_hashes=8,
             ).collect(),
         )
     )
@@ -156,13 +225,13 @@ def test_dense_candidate_set_falls_back_to_shuffle_join(spark):
 
     kw = dict(shingle_n=2, num_hashes=8, band_size=2, jaccard_threshold=0.5)
     broad = sorted(
-        map(tuple, banded_minhash_pairs(df, "doc_id", "text", **kw).collect())
+        map(tuple, ngram_jaccard_pairs(df, "doc_id", "text", **kw).collect())
     )
     # gate of 1 forces every candidate set over the limit → shuffle join
     shuf = sorted(
         map(
             tuple,
-            banded_minhash_pairs(
+            ngram_jaccard_pairs(
                 df, "doc_id", "text", broadcast_max_candidates=1, **kw
             ).collect(),
         )
@@ -217,7 +286,9 @@ def test_repeated_calls_bound_persisted_storage(spark, docs):
     # internal persisted RDDs behind, which this module doesn't manage
     base = jsc.getPersistentRDDs().size()
     for _ in range(3):
-        banded_minhash_pairs(docs, "doc_id", "text", shingle_n=2).count()
+        ngram_jaccard_pairs(
+            docs, "doc_id", "text", shingle_n=2, num_hashes=8
+        ).count()
     # at most ONE call's caches remain registered (shd + sigs + cands —
     # the uncapped path persists the signature frame since r14 so the
     # self-join legs stop re-deriving the minhash aggregate)
@@ -227,7 +298,7 @@ def test_repeated_calls_bound_persisted_storage(spark, docs):
 
 
 def test_cache_rotation_keeps_current_call_cached(spark):
-    """Ordering contract (fuzzy_dedup._register_caches): repeated calls
+    """Ordering contract (session.CachePool): repeated calls
     with IDENTICAL plans must not evict their own cache — Spark's
     CacheManager matches plans canonically, so releasing the previous
     call's handles AFTER re-persisting the same plan would kill the
@@ -284,12 +355,12 @@ def test_banded_bucket_cap_sheds_mega_buckets_keeps_small_ones(spark):
     df = spark.createDataFrame(family + other, "doc_id long, text string")
     kw = dict(shingle_n=2, num_hashes=8, band_size=2, jaccard_threshold=0.5)
 
-    uncapped = banded_minhash_pairs(df, "doc_id", "text", **kw)
+    uncapped = ngram_jaccard_pairs(df, "doc_id", "text", **kw)
     got_unc = {(r["id_a"], r["id_b"]) for r in uncapped.collect()}
     assert (100, 101) in got_unc
     assert len(got_unc) == 190 + 1  # C(20,2) family pairs + the small pair
 
-    capped = banded_minhash_pairs(
+    capped = ngram_jaccard_pairs(
         df, "doc_id", "text", max_bucket_size=10, **kw
     )
     got_cap = {(r["id_a"], r["id_b"]) for r in capped.collect()}

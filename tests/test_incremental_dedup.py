@@ -164,3 +164,38 @@ def test_streaming_foreachbatch_against_static_index(spark, tmp_path):
         assert got == batch_run == [12]
     finally:
         idx.keys.unpersist(); idx.shingles.unpersist(); idx.buckets.unpersist()
+
+
+def test_snapshot_index_parquet_round_trip(spark, tmp_path):
+    """The documented reuse path: write the three index frames out, read
+    them back, and screen a batch with them — survivors must equal the
+    inline ``seen=`` run."""
+    from nahuatl_data_pipeline_spark.operators.incremental_dedup import (
+        SnapshotIndex,
+        snapshot_index,
+    )
+
+    seen = _df(spark, [(1, _A), (2, _B)])
+    new = _df(
+        spark,
+        [(10, _A), (11, _B.upper()), (12, _A + " extra tail"), (13, _C)],
+    )
+    idx = snapshot_index(seen, shingle_n=3, num_perms=4)
+    for name, frame in idx._asdict().items():
+        frame.write.parquet(str(tmp_path / name))
+    loaded = SnapshotIndex(
+        *(spark.read.parquet(str(tmp_path / name)) for name in idx._fields)
+    )
+    via_files = sorted(
+        r["doc_id"]
+        for r in dedup_against_snapshot(
+            new, index=loaded, jaccard_threshold=0.5
+        ).collect()
+    )
+    inline = sorted(
+        r["doc_id"]
+        for r in dedup_against_snapshot(
+            new, seen, jaccard_threshold=0.5
+        ).collect()
+    )
+    assert via_files == inline == [13]

@@ -111,7 +111,7 @@ def main() -> None:
     if wanted and "q25capped" in wanted:
         fuzzy_dedup.LAST_STATS.clear()
         t0 = time.perf_counter()
-        n = fuzzy_dedup.banded_minhash_pairs(
+        n = fuzzy_dedup.ngram_jaccard_pairs(
             registry.q25_input(spark, sf_dir), "doc_id", "text", shingle_n=3,
             num_hashes=8, band_size=2, jaccard_threshold=0.5,
             max_bucket_size=150,
