@@ -11,6 +11,15 @@ defaultParallelism partitions. Downstream consumers are content-keyed
 or commutative, so results are partition-independent by design (the
 suite asserts this per operator).
 
+Callers: the head of ``plans.curation_pipeline.run_curation_pipeline``
+spreads the docs once, before PII redaction, so the op's row-local
+stages and its gold write all run spread. The per-row operators that
+registry queries call directly (``fuzzy_dedup._signature_bands``,
+``curation.contamination_flags`` and others) keep their own call; over
+the pipeline's pinned rows it is a no-op that runs no job, because the
+pinned plan holds the head's exchange (or the input already had
+defaultParallelism splits, and the probe is metadata).
+
 Hardened probe (r13 verdict "what's wrong" #3): the split-count probe
 ``df.rdd.getNumPartitions()`` is only cheap on an exchange-free plan —
 behind a plain scan/projection/filter it is pure metadata.  On a frame

@@ -25,20 +25,29 @@ no per-stage count() re-scans, the same discipline as
 columns of the redacted rows; only the duplicate and contamination
 flags are joined back on the doc id. The internal actions are the
 candidate count of banded candidate generation
-(``fuzzy_dedup.banded_candidate_pairs``, which also fills its lazy
-shingle and signature pins) and, inside cluster dedup, one bounded
-probe of the pair graph; only a graph above
+(``fuzzy_dedup.banded_candidate_pairs``, which also fills the redacted
+pin below and its own lazy shingle and signature pins) and, inside
+cluster dedup, one bounded probe of the pair graph; only a graph above
 ``components.DRIVER_MAX_EDGES`` edges adds its checkpoint and the
 propagation rounds (documented there). The run executes in a
 ``session.run_scope``, which releases every pin when it returns or
 raises.
 
-Scale shape: PII, C4 and repetition are row-local projections over the
-same rows (no shuffle; each gate tokenizes once); dedup is the banded
-bucket join + component labeling (a driver-side union-find for a small
-pair graph, min-label propagation above the bound); decontamination
-broadcasts the (tiny) eval shingle set. Nothing collects to the driver
-except the final stats row and a small pair graph's edges.
+Scale shape: the docs are spread once, before the first per-row stage
+(``functions.spread.spread_narrow``: a one-file corpus is one scan
+split, and would otherwise run every row-local stage on one core). PII
+redaction runs once per run: the redacted rows are pinned
+(``session.pin``, a lazy persist released by the run scope), and the
+C4 and repetition gates, the shingle leg, the 13-gram probe and the
+gold write all read that pin, each on defaultParallelism tasks. The
+pin holds the corpus text for one run, less than the ``shd`` shingle
+pin already holds, and spills to disk under the default level. PII, C4
+and repetition are row-local projections over the same rows (no
+shuffle; each gate tokenizes once); dedup is the banded bucket join +
+component labeling (a driver-side union-find for a small pair graph,
+min-label propagation above the bound); decontamination broadcasts the
+(tiny) eval shingle set. Nothing collects to the driver except the
+final stats row and a small pair graph's edges.
 """
 
 from __future__ import annotations
@@ -49,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nahuatl_data_pipeline_spark.functions.pii import redact_pii
+from nahuatl_data_pipeline_spark.functions.spread import spread_narrow
 from nahuatl_data_pipeline_spark.operators.components import duplicate_clusters
 from nahuatl_data_pipeline_spark.operators.curation import (
     c4_rule_flags,
@@ -56,7 +66,7 @@ from nahuatl_data_pipeline_spark.operators.curation import (
     repetition_signals,
 )
 from nahuatl_data_pipeline_spark.operators.fuzzy_dedup import ngram_jaccard_pairs
-from nahuatl_data_pipeline_spark.session import run_scope
+from nahuatl_data_pipeline_spark.session import pin, run_scope
 
 
 def url_head_stages(
@@ -231,6 +241,11 @@ def run_curation_pipeline(
     if cfg.max_docs_per_domain is not None and not cfg.url_col:
         raise ValueError("max_docs_per_domain requires url_col")
 
+    # One narrow round-robin exchange before the first per-row stage: a
+    # one-file corpus is one scan split, and every stage below would run
+    # on that one core (module docstring, scale shape).
+    docs = spread_narrow(docs)
+
     # --- crawl-level head stages (module docstring) --------------------
     # Encoding repair: fix_mojibake → clean_invisible (order contract,
     # functions/normalize.py:257-330). Pure codegen; the __repaired flag
@@ -307,6 +322,9 @@ def run_curation_pipeline(
         )
     else:
         redacted = redacted.withColumn("__sub_removed", F.lit(0))
+    # the gates, the shingle leg, the 13-gram probe and the gold write all
+    # read these rows: PII runs once, in the first job that reads the pin
+    redacted = pin(redacted)
 
     # The two per-document gates attach their keep flag as a column of
     # the redacted rows (row-local projections, no shuffle); called

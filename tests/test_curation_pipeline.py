@@ -3,6 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from nahuatl_data_pipeline_spark.functions import pii
 from nahuatl_data_pipeline_spark.plans.curation_pipeline import (
     CurationConfig,
     run_curation_pipeline,
@@ -283,9 +284,87 @@ def test_substring_stage_keeps_untouched_docs_byte_identical(spark, tmp_path):
     assert "\n" in kept[3] and "  " in kept[3]
 
 
+def _has_pii(text: str) -> bool:
+    return any(t in text for t in (pii.EMAIL_TOKEN, pii.PHONE_TOKEN, pii.IP_TOKEN))
+
+
+def _plan_nodes(plan):
+    """Every node of an unexecuted physical plan, through its AQE
+    wrappers, but not into a pin's cached plan."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        yield from _plan_nodes(plan.executedPlan())
+        return
+    yield plan
+    children = plan.children().iterator()
+    while children.hasNext():
+        yield from _plan_nodes(children.next())
+
+
+def test_curation_op_redacts_pii_once_on_every_core(spark, tmp_path, monkeypatch):
+    """A one-file corpus is one scan split. The op spreads it once and
+    pins the redacted rows, so PII runs in one stage of
+    defaultParallelism tasks, and the pin is released when the op
+    returns. A pass-through Python UDF on the redacted text records the
+    (stage, partition) of every task that computes it."""
+    from pyspark import TaskContext
+    from pyspark.accumulators import AccumulatorParam
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from nahuatl_data_pipeline_spark.plans import curation_pipeline as cp
+    from perfbench import inputs
+
+    class _Union(AccumulatorParam):
+        def zero(self, value):
+            return set()
+
+        def addInPlace(self, a, b):
+            a |= b
+            return a
+
+    sc = spark.sparkContext
+    par = sc.defaultParallelism
+    assert par > 1
+    truth = inputs.make_curation(3, 400, str(tmp_path / "in"))
+    docs = spark.read.parquet(truth["docs_path"])
+    evalset = spark.read.parquet(truth["eval_path"])
+    assert docs.rdd.getNumPartitions() == 1
+
+    tasks = sc.accumulator(set(), _Union())
+
+    @F.udf("string")
+    def mark(text):
+        ctx = TaskContext.get()
+        tasks.add({(ctx.stageId(), ctx.partitionId())})
+        return text
+
+    redact = cp.redact_pii
+    monkeypatch.setattr(cp, "redact_pii", lambda c: mark(redact(c)))
+    persisted = sc._jsc.getPersistentRDDs
+    held_at_write = []
+    parquet = DataFrameWriter.parquet
+
+    def capture(self, path, *args, **kwargs):
+        held_at_write.append(set(persisted().keys()) - before)
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    before = set(persisted().keys())
+    stats = run_curation_pipeline(
+        spark, docs, str(tmp_path / "gold"), evalset=evalset
+    )
+    assert stats["input"] == 400
+    stages = {stage for stage, _ in tasks.value}
+    assert len(stages) == 1, f"PII ran in stages {sorted(stages)}"
+    assert {part for _, part in tasks.value} == set(range(par))
+    assert held_at_write and held_at_write[0], "the op pinned nothing"
+    assert set(persisted().keys()) <= before
+
+
 # Measured on a 4-vCPU host for the op below: 22 jobs at local[2],
-# local[4] and local[8]; 31, 47 and 79 tasks (15 + 8 per core: the
-# narrow-input spread fans out to defaultParallelism). The margins stay
+# local[4] and local[8]; 33, 53 and 93 tasks (13 + 10 per core: the
+# docs are spread once at the head, so the gold write and every other
+# stage that reads the redacted pin run one task per core, not one task
+# for the docs' single scan split). The margins stay
 # under one propagation round of the components stage (~6 jobs) and
 # one re-introduced 256-partition cache (~261 tasks per eager count).
 _OP_MAX_JOBS = 25
@@ -307,7 +386,10 @@ def test_curation_op_job_and_task_budget(spark, tmp_path, monkeypatch):
     parquet = DataFrameWriter.parquet
 
     def capture(self, path, *args, **kwargs):
-        written.append(self._df)
+        # planned while the run's pins are live, as the write plans it
+        qe = self._df._jdf.queryExecution()
+        qe.executedPlan()
+        written.append(qe)
         return parquet(self, path, *args, **kwargs)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", capture)
@@ -324,13 +406,25 @@ def test_curation_op_job_and_task_budget(spark, tmp_path, monkeypatch):
     finally:
         sc.setJobGroup(None, None)
     assert checks.check_curation(truth, stats, None) == []
-    qe = written[-1]._jdf.queryExecution()
+    qe = written[-1]
     plan = qe.optimizedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     # one whitespace tokenizer per gate: a tokenizer inlined at each use
     # sits under AND/coalesce branches that subexpression elimination
     # skips, and runs once per use
     assert qe.executedPlan().toString().count("split(trim(lower(") <= 2
+    # the write reads the redacted rows from the run's pin and runs no
+    # PII regex of its own
+    pii_pins = [
+        node for node in _plan_nodes(qe.executedPlan())
+        if node.nodeName() == "InMemoryTableScan"
+        and _has_pii(node.relation().cachedPlan().toString())
+    ]
+    assert pii_pins, "the write does not read the redacted pin"
+    assert not [
+        node.nodeName() for node in _plan_nodes(qe.executedPlan())
+        if _has_pii(node.expressions().toString())
+    ]
 
     tracker = sc.statusTracker()
     jobs = tracker.getJobIdsForGroup(group)

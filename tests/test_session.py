@@ -4,6 +4,7 @@ pins between runs."""
 
 from __future__ import annotations
 
+import os
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
@@ -11,6 +12,33 @@ from pyspark.sql.readwriter import DataFrameWriter
 from pyspark.storagelevel import StorageLevel
 
 from nahuatl_data_pipeline_spark.session import CachePool, pin, run_scope, unpin
+
+
+def test_call_site_capture_is_off_and_errors_keep_class_and_message(
+    spark, monkeypatch
+):
+    """``get_spark`` turns PySpark's per-call call-site capture off. What
+    that gives up: a missing column still raises ``AnalysisException``
+    with its error class and the column's name, but its query context no
+    longer carries the Python ``file:line`` of the call."""
+    from pyspark.errors import AnalysisException
+    from pyspark.errors import utils as error_utils
+    from pyspark.sql import functions as F
+
+    conf = "spark.python.sql.dataFrameDebugging.enabled"
+    assert spark.conf.get(conf) == "false"
+    # PySpark caches the setting on first use; read it from this session
+    monkeypatch.setattr(error_utils, "_enable_debugging_cache", None)
+    assert not error_utils.is_debugging_enabled()
+    with pytest.raises(AnalysisException) as err:
+        spark.range(3).select(F.col("no_such_column") + 1)
+    assert err.value.getCondition().startswith("UNRESOLVED_COLUMN")
+    assert "no_such_column" in str(err.value)
+    here = os.path.basename(__file__)
+    assert not [
+        ctx.callSite() for ctx in err.value.getQueryContext()
+        if here in ctx.callSite()
+    ]
 
 
 def _persistent_ids(spark) -> set[int]:

@@ -32,45 +32,6 @@ PAIR_QUERIES = [
 ]
 
 
-def ngram_bucket_candidates(spark, sf_dir: str) -> int:
-    """Candidate-pair count of q38's min-hashed-shingle bucketing over
-    q38's ACTUAL input (raw docs + its planted near-dups — the planted
-    rows share buckets with their originals by construction, so leaving
-    them out would understate the measured query's candidate volume):
-    sum over buckets of c*(c-1)/2 — one aggregate, no pair explosion."""
-    from pyspark.sql import functions as F
-
-    from nahuatl_data_pipeline_spark.functions.hashing import (
-        hash64,
-        word_shingles,
-    )
-    from nahuatl_data_pipeline_spark.registry_ext import _TAIL
-    from nahuatl_data_pipeline_spark.schemas import load_table
-
-    raw = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    planted = raw.filter(F.col("doc_id") < 100).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(_TAIL)).alias("text"),
-    )
-    docs = (
-        raw.unionByName(planted)
-        .select("doc_id", word_shingles("text", n=3).alias("__sh"))
-        .filter(F.size("__sh") > 0)
-    )
-    keys = (
-        docs.select("doc_id", F.explode("__sh").alias("__s"))
-        .groupBy("doc_id")
-        .agg(F.min(hash64(F.col("__s"))).alias("__key"))
-    )
-    row = (
-        keys.groupBy("__key")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .agg(F.sum(F.col("c") * (F.col("c") - 1) / 2).alias("pairs"))
-        .collect()[0]
-    )
-    return int(row["pairs"] or 0)
-
-
 def banded_bucket_histogram(spark, sf_dir: str) -> dict:
     """Band-bucket size distribution for q25's parameters — the skew
     diagnosis without running the join: sum of c*(c-1)/2 over buckets is
@@ -130,8 +91,6 @@ def main() -> None:
         wall = round(time.perf_counter() - t0, 1)
         rec = {"q": name, "wall_sec": wall, "out_rows": n, "sf_dir": sf_dir}
         rec.update(fuzzy_dedup.LAST_STATS)
-        if name.startswith("q38"):
-            rec["bucket_candidates"] = ngram_bucket_candidates(spark, sf_dir)
         print(json.dumps(rec), flush=True)
 
 
